@@ -70,12 +70,6 @@ object Bench {
       catch { case _: Throwable => }
     }
 
-    def clearCaches(): Unit = {
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.valuesIterator
-        .foreach(_.unpersist(blocking = false))
-    }
-
     // codegen warmup: run every query once, untimed, at the smallest SF
     // (same plan shapes → same generated classes → warm Janino cache)
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARMUP_DIR",
@@ -84,7 +78,7 @@ object Bench {
       SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (_, fn) =>
         try fn(spark, warmDir).write.format("noop").mode("overwrite").save()
         catch { case _: Throwable => }
-        clearCaches()
+        Sessions.clearCaches(spark)
       }
     }
 
@@ -94,7 +88,7 @@ object Bench {
     catch { case e: Throwable =>
       System.err.println(s"[bench] prestage failed: ${e.getMessage}")
     }
-    clearCaches()
+    Sessions.clearCaches(spark)
 
     // optional comma-separated query filter (dev iteration on hot queries)
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
@@ -114,7 +108,7 @@ object Bench {
         // release caches a query persisted internally (train/score frames,
         // multi-branch shingle relations) so no query pays GC pressure for
         // a predecessor's working set
-        clearCaches()
+        Sessions.clearCaches(spark)
         name -> elapsed
       }
     }

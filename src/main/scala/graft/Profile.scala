@@ -31,14 +31,9 @@ object Profile {
       System.err.println(s"[profile] prestage failed: ${e.getMessage}")
     }
     val fn = SparkEntry.queries(qname)
-    def clearCaches(): Unit = {
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.valuesIterator
-        .foreach(_.unpersist(blocking = false))
-    }
     // warm pass (codegen + footers), untimed
     fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-    clearCaches()
+    Sessions.clearCaches(spark)
 
     case class Job(id: Int, desc: String, start: Long, var end: Long)
     val jobs = mutable.ArrayBuffer[Job]()
@@ -123,7 +118,7 @@ object Profile {
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       val wall = (System.nanoTime() - t0) / 1e9
       sampling = false
-      clearCaches()
+      Sessions.clearCaches(spark)
       Thread.sleep(200) // let late listener events drain
       val snap = jobs.synchronized { jobs.toVector.sortBy(_.start) }
       println(f"[profile] === $qname run $i: wall $wall%.3f s, ${snap.size} jobs ===")

@@ -26,15 +26,17 @@ import org.apache.spark.sql.SparkSession
   *     read their file-open latency sequentially (TxTable-family subset
   *     20.2 s vs 11.8 s at the default). Net loss; the default floor
   *     (= default parallelism) stays.
-  *
-  * Env overrides (measurement experiments, not a tuning surface):
-  * `SPARK_GRAFT_MIN_PARTITION_NUM`, `SPARK_GRAFT_BYPASS_THRESHOLD`.
   */
 object Sessions {
-  def tuned(b: SparkSession.Builder): SparkSession.Builder = {
-    val b1 = b.config("spark.shuffle.sort.bypassMergeThreshold",
-      sys.env.getOrElse("SPARK_GRAFT_BYPASS_THRESHOLD", "1"))
-    sys.env.get("SPARK_GRAFT_MIN_PARTITION_NUM")
-      .fold(b1)(v => b1.config("spark.sql.files.minPartitionNum", v))
+  def tuned(b: SparkSession.Builder): SparkSession.Builder =
+    b.config("spark.shuffle.sort.bypassMergeThreshold", "1")
+
+  /** Drop every cached Dataset and persisted RDD — the between-queries
+    * reset of the driver mains, so no query is timed against another's
+    * cache. */
+  def clearCaches(spark: SparkSession): Unit = {
+    spark.sharedState.cacheManager.clearCache()
+    spark.sparkContext.getPersistentRDDs.valuesIterator
+      .foreach(_.unpersist(blocking = false))
   }
 }

@@ -272,10 +272,6 @@ object DeletionVectors {
       probe))
   }
 
-  /** Read `entries` of `table` applying deletion vectors: clean files go
-    * through the ordinary (vectorized, codegen) parquet read; DV'd files
-    * add the physical row index + rel, filter live rows, and union back.
-    * Schema/columns identical to a plain read on both legs. */
   /** Build the parquet frame for an explicit entry list. With a recorded
     * schema the scan is constructed straight from manifest statistics
     * (paths + `b:` lengths; legacy entries fall back to one cached stat
@@ -299,34 +295,83 @@ object DeletionVectors {
         spark.read.parquet(es.map(e => s"$table/${e.rel}"): _*)
     }
 
+  /** Read `entries` of `table` applying deletion vectors: clean files go
+    * through the ordinary (vectorized, codegen) parquet read; DV'd files
+    * add the physical row index + rel, filter live rows, and union back.
+    * Schema/columns identical to a plain read on both legs.
+    *
+    * `lineage` MATERIALIZES row tracking on both legs: the data columns
+    * plus non-null [[TxTable.RidCol]]/[[TxTable.RcvCol]] for every live
+    * row (see [[withLineage]]). A rewrite that stages this frame writes
+    * every surviving row's identity into the new files, which is what
+    * keeps `_row_id` durable across compact/Z-order/purge. */
   private[graft] def readEntries(spark: SparkSession, table: String,
                                  entries: Seq[TxTable.FileEntry],
-                                 schema: Option[StructType]): DataFrame = {
-    val (dvd, clean) = entries.partition(_.dv.isDefined)
+                                 schema: Option[StructType],
+                                 lineage: Boolean = false): DataFrame = {
     require(entries.nonEmpty, "readEntries needs at least one file")
-    val cleanDf =
-      if (clean.isEmpty) None
-      else Some(entriesFrame(spark, table, clean, schema))
-    val dvdDf =
-      if (dvd.isEmpty) None
-      else {
-        val bitmaps = loadBitmaps(spark, table, dvd)
-        val raw = entriesFrame(spark, table, dvd, schema)
-        val cols = raw.columns.toSeq
-        // the probe is relKey-keyed and extracts the suffix itself once
-        // per file — the raw path feeds it directly: no per-row regexp,
-        // no manifest-rel remap even over a clone's shared files, and
-        // the whole leg stays codegen'd
-        Some(raw
-          .withColumn("__dv_rel", input_file_name())
-          .withColumn("__dv_pos", col("_metadata.row_index"))
-          .filter(liveFilter(spark, bitmaps))
-          .select(cols.map(col): _*))
-      }
-    (cleanDf, dvdDf) match {
-      case (Some(c), Some(d)) => c.unionByName(d)
-      case (c, d) => c.orElse(d).get
+    require(!lineage || schema.isDefined,
+      "lineage-carrying reads need an explicit schema")
+    val readSchema = if (lineage) schema.map(lineageSchema) else schema
+    def leg(es: Seq[TxTable.FileEntry], dvLeg: Boolean): DataFrame = {
+      var df = entriesFrame(spark, table, es, readSchema)
+      val cols = df.columns.toSeq
+      if (lineage) df = withPositions(df)
+      // the probe is relKey-keyed and extracts the suffix itself once
+      // per file — the raw path feeds it directly: no per-row regexp,
+      // no manifest-rel remap even over a clone's shared files, and
+      // the whole leg stays codegen'd
+      if (dvLeg) df = df
+        .withColumn("__dv_rel", input_file_name())
+        .withColumn("__dv_pos", col("_metadata.row_index"))
+        .filter(liveFilter(spark, loadBitmaps(spark, table, es)))
+      if (lineage) withLineage(spark, table, df, es, schema.get.fieldNames)
+      else if (dvLeg) df.select(cols.map(col): _*)
+      else df
     }
+    val (dvd, clean) = entries.partition(_.dv.isDefined)
+    Seq(clean -> false, dvd -> true).collect {
+      case (es, dvLeg) if es.nonEmpty => leg(es, dvLeg)
+    }.reduce(_.unionByName(_))
+  }
+
+  /** `schema` plus the hidden materialized lineage columns. */
+  private def lineageSchema(schema: StructType): StructType =
+    StructType(schema.fields
+      :+ StructField(TxTable.RidCol, LongType)
+      :+ StructField(TxTable.RcvCol, LongType))
+
+  /** Attach each row's file key and physical position — the inputs of
+    * [[withLineage]] — while the scan's metadata columns are in reach. */
+  private def withPositions(df: DataFrame): DataFrame =
+    df.withColumn("__rk", regexp_extract(input_file_name(), RelPattern, 0))
+      .withColumn("__pos", col("_metadata.row_index"))
+
+  /** Resolve row tracking over a [[withPositions]] frame of `entries`:
+    * `dataCols` plus [[TxTable.RidCol]]/[[TxTable.RcvCol]], where the
+    * hidden materialized columns win over the file's manifest anchor
+    * (base + physical position) by coalesce. */
+  private def withLineage(spark: SparkSession, table: String,
+                          df: DataFrame, entries: Seq[TxTable.FileEntry],
+                          dataCols: Seq[String]): DataFrame = {
+    val lookup = entries.map { e =>
+      val (b, v0) = e.base.getOrElse(throw new IllegalStateException(
+        s"$table: ${e.rel} carries no base row id under row tracking. " +
+          "Rows staged on an UNPUBLISHED branch or WAP id receive " +
+          "durable ids at publish (lineage is undefined until then — " +
+          "publish first); on a published head this means the enable " +
+          "invariant is broken (run enable_row_tracking / compact " +
+          "once)"))
+      (relKey(e.rel), b, v0)
+    }
+    val lookupDf = spark.createDataFrame(lookup)
+      .toDF("__rk2", "__base", "__frcv")
+    df.join(broadcast(lookupDf), col("__rk") === col("__rk2"), "left")
+      .select((dataCols.map(c => col(s"`$c`"))
+        :+ coalesce(col(s"`${TxTable.RidCol}`"),
+          col("__base") + col("__pos")).as(TxTable.RidCol)
+        :+ coalesce(col(s"`${TxTable.RcvCol}`"),
+          col("__frcv")).as(TxTable.RcvCol)): _*)
   }
 
   /** The inverse read: rows of `entries` whose physical position IS set
@@ -345,23 +390,15 @@ object DeletionVectors {
       relKey(e.rel) ->
         ((s"diff#${java.util.UUID.nameUUIDFromBytes(bytes)}", bytes))
     }.toMap
-    // row tracking: the marked rows carry their identity — materialized
-    // hidden columns win over the file's manifest anchor (base + physical
-    // position), exactly the [[TxTable.readLineage]] coalesce
-    val readSchema = schema.map { s =>
-      if (!lineage) s
-      else StructType(s.fields
-        :+ org.apache.spark.sql.types.StructField(TxTable.RidCol,
-          org.apache.spark.sql.types.LongType)
-        :+ org.apache.spark.sql.types.StructField(TxTable.RcvCol,
-          org.apache.spark.sql.types.LongType))
-    }
-    val raw = entriesFrame(spark, table, marked.map(_._1), readSchema)
+    // row tracking: the marked rows carry their identity, resolved
+    // exactly like a lineage read (see withLineage)
+    val raw = entriesFrame(spark, table, marked.map(_._1),
+      if (lineage) schema.map(lineageSchema) else schema)
     val cols = schema.fold(raw.columns.toSeq)(_.fieldNames.toSeq)
     // the same native DvMarked predicate as the live filter, un-negated
     // (one broadcast, relKey-keyed, codegen'd — see DvMarked)
     val probe = new DvProbe(spark.sparkContext.broadcast(keyed))
-    val filtered = raw
+    val filtered = (if (lineage) withPositions(raw) else raw)
       .withColumn("__dv_rel", input_file_name())
       .withColumn("__dv_pos", col("_metadata.row_index"))
       .filter(org.apache.spark.sql.GraftColumnBridge.column(DvMarked(
@@ -369,32 +406,9 @@ object DeletionVectors {
         org.apache.spark.sql.GraftColumnBridge.expression(col("__dv_pos")),
         probe)))
     if (!lineage) filtered.select(cols.map(col): _*)
-    else {
-      val lookup = marked.map { case (e, _) =>
-        val (b, v0) = e.base.getOrElse(throw new IllegalStateException(
-          s"$table: ${e.rel} carries no base row id under row tracking. " +
-            "Rows staged on an UNPUBLISHED branch or WAP id receive " +
-            "durable ids at publish (lineage is undefined until then — " +
-            "publish first); on a published head this means the enable " +
-            "invariant is broken (run enable_row_tracking / compact " +
-            "once)"))
-        (relKey(e.rel), b, v0)
-      }
-      val lookupDf = spark.createDataFrame(lookup)
-        .toDF("__rk2", "__base", "__frcv")
-      filtered
-        .withColumn("__rk",
-          regexp_extract(input_file_name(), RelPattern, 0))
-        .withColumn("__pos", col("_metadata.row_index"))
-        .join(broadcast(lookupDf), col("__rk") === col("__rk2"), "left")
-        .withColumn(TxTable.RowIdCol,
-          coalesce(col(s"`${TxTable.RidCol}`"),
-            col("__base") + col("__pos")))
-        .withColumn(TxTable.RowCommitCol,
-          coalesce(col(s"`${TxTable.RcvCol}`"), col("__frcv")))
-        .select((cols.map(col) :+ col(TxTable.RowIdCol)
-          :+ col(TxTable.RowCommitCol)): _*)
-    }
+    else withLineage(spark, table, filtered, marked.map(_._1), cols)
+      .withColumnRenamed(TxTable.RidCol, TxTable.RowIdCol)
+      .withColumnRenamed(TxTable.RcvCol, TxTable.RowCommitCol)
   }
 
   /** Stage the per-commit UPDATE-CLASSIFICATION sidecar (row-level CDF):

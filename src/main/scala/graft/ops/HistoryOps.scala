@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 /** Slowly-changing-dimension history building — the batch-side complement
-  * of the CDC upsert (LayoutOps.upsertBucketed keeps ONLY the latest row
+  * of the CDC upsert (TxTable.upsert keeps ONLY the latest row
   * per key; SCD-2 keeps every version with its validity interval, which is
   * what a training pipeline needs to join features AS OF a label's
   * timestamp without leakage — see AsOfOps for the consuming join).

@@ -13,104 +13,19 @@ import org.apache.spark.sql.functions._
   * two shuffles into zero; and compaction keeps file counts (and thus task
   * counts and parquet footer overhead) bounded as micro-batches accumulate.
   *
-  * STATUS of the swap-based MUTATORS ([[upsert]], [[upsertBucketed]],
-  * [[compact]]): LEGACY/audit siblings. They mutate a plain parquet
-  * directory via rename-aside swaps guarded by an advisory lock — honest
-  * about their weaknesses (heal-on-next-call after a crashed swap, no
-  * snapshot isolation, single writer) and occasionally right for scratch
-  * or audit tables precisely BECAUSE the layout is a bare directory any
-  * tool can read. Data that matters lands through [[TxTable]] (atomic
-  * manifest commits, optimistic concurrency, time travel); the streaming
-  * ingest path (`stream.Pipelines.cdcApply` / `appendTx` / `prepIngest`)
-  * rides TxTable. The pure LAYOUT helpers here (date partitioning,
-  * key-bucketed writes, Z-order, bucket ids) are first-class and shared —
-  * TxTable itself builds on [[bucketId]]/[[BucketCol]].
+  * Compaction and keyed MERGE live in [[TxTable]] (atomic manifest
+  * commits); TxTable builds its key-bucketed layout on
+  * [[bucketId]]/[[BucketCol]].
   */
 object LayoutOps {
 
-  /** Partition column name for key-bucketed layouts (see
-    * [[writeKeyBucketed]] / [[upsertBucketed]]). */
+  /** Column holding a row's key bucket in [[TxTable]]'s layout. */
   val BucketCol = "p_bucket"
 
   /** Deterministic bucket id for a key: `pmod(xxhash64(key), n)`. Cast to
     * int so it round-trips through partition-directory names unchanged. */
   def bucketId(key: org.apache.spark.sql.Column, nBuckets: Int): org.apache.spark.sql.Column =
     pmod(xxhash64(key), lit(nBuckets.toLong)).cast("int")
-
-  /** Resolve the filesystem that OWNS `path` — not the default FS. A table
-    * at s3a:// or hdfs:// must swap on its own filesystem, or the rename
-    * targets the wrong store entirely. */
-  private def fsFor(spark: SparkSession, path: String) =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** Advisory single-writer lock for the swap-based mutators ([[upsert]],
-    * [[upsertBucketed]], [[compact]]): two concurrent writers interleaving
-    * rename-aside swaps on the same table can each restore the other's
-    * aside copy and lose a committed merge, so contended callers must fail
-    * fast instead.
-    *
-    * The lock is a `path__lock` file created with overwrite=false —
-    * atomic create-fails-if-exists on HDFS; best-effort (existence-check +
-    * create) on raw local and object stores without conditional writes. A
-    * held lock raises `ConcurrentModificationException` — deterministic
-    * busy signal, never a silent interleave. A writer that died holding
-    * the lock must not brick the table: a lock older than `staleMs` (by
-    * its own filesystem modification time) is broken and re-acquired.
-    * True multi-writer isolation needs a table format's commit protocol
-    * (optimistic retry on a log); this is the strongest contract a plain
-    * filesystem offers, and the contract is: ONE writer per table. */
-  private def withTableLock[A](fs: org.apache.hadoop.fs.FileSystem,
-                               path: String,
-                               staleMs: Long = 60 * 60 * 1000L)(body: => A): A = {
-    val lock = new org.apache.hadoop.fs.Path(path + "__lock")
-    def tryAcquire(): Boolean =
-      try {
-        val payload = java.lang.Long.toString(System.currentTimeMillis)
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8)
-        if (fs.getUri.getScheme == "file") {
-          // O_CREAT|O_EXCL — genuinely atomic on a local filesystem, where
-          // Hadoop's create(overwrite=false) is an exists-then-create race
-          java.nio.file.Files.write(
-            java.nio.file.Paths.get(org.apache.hadoop.fs.Path
-              .getPathWithoutSchemeAndAuthority(lock).toString),
-            payload,
-            java.nio.file.StandardOpenOption.CREATE_NEW,
-            java.nio.file.StandardOpenOption.WRITE)
-        } else {
-          val out = fs.create(lock, false)
-          out.write(payload)
-          out.close()
-        }
-        true
-      } catch { case _: java.io.IOException => false }
-    var acquired = tryAcquire()
-    if (!acquired) {
-      val age =
-        try System.currentTimeMillis - fs.getFileStatus(lock).getModificationTime
-        catch { case _: java.io.IOException => 0L } // vanished → retry below
-      if (age > staleMs || !fs.exists(lock)) {
-        fs.delete(lock, false)
-        acquired = tryAcquire()
-      }
-    }
-    if (!acquired)
-      throw new java.util.ConcurrentModificationException(
-        s"another writer holds $lock; tables mutated by LayoutOps are " +
-          "single-writer (delete the lock only if its owner is dead)")
-    try body finally fs.delete(lock, false)
-  }
-
-  /** Crash recovery for the whole-table rename-aside swap: if a previous
-    * job died between `rename(table, aside)` and `rename(tmp, table)`, the
-    * table dir is missing but the aside copy is intact — restore it before
-    * doing anything else. (If the table IS present, any aside leftover is
-    * a fully superseded copy and is deleted by the caller before its own
-    * swap.) */
-  private def recoverWholeTable(fs: org.apache.hadoop.fs.FileSystem,
-                                table: org.apache.hadoop.fs.Path,
-                                aside: org.apache.hadoop.fs.Path): Unit =
-    if (!fs.exists(table) && fs.exists(aside)) { fs.rename(aside, table); () }
 
   /** 2-D Morton (Z-order) interleave of two 16-bit values: bit i of `a`
     * lands at position 2i, bit i of `b` at 2i+1, so rows close in BOTH
@@ -191,166 +106,4 @@ object LayoutOps {
   def writeBucketed(df: DataFrame, table: String, key: String, buckets: Int): Unit =
     df.write.bucketBy(buckets, key).sortBy(key)
       .mode(SaveMode.Overwrite).format("parquet").saveAsTable(table)
-
-  /** MERGE-analog upsert: apply a batch of keyed changes (e.g. a CDC
-    * micro-batch — the Debezium topic shape bronze already parses) onto a
-    * parquet table, keeping the latest row per key by `orderCol`.
-    *
-    * Plan shape: current ∪ updates → one shuffle on the key → per-key
-    * `row_number = 1` (bounded window state, no full sort), rewritten via
-    * the same rename-aside swap as `compact`. A table format (Delta/
-    * Iceberg) would do this as a transactional MERGE with file-level
-    * pruning; the semantics — last-writer-wins per key — are identical,
-    * so the format string can swap in without touching callers.
-    *
-    * Updates with a key absent from the table insert; ties on
-    * (key, orderCol) prefer the update (updates win over current state).
-    * Returns the post-upsert row count. */
-  def upsert(spark: SparkSession, path: String, updates: DataFrame,
-             key: String, orderCol: String): Long = {
-    val fs0 = fsFor(spark, path)
-    withTableLock(fs0, path) {
-    recoverWholeTable(fs0, new org.apache.hadoop.fs.Path(path),
-      new org.apache.hadoop.fs.Path(path + "__old"))
-    val current = spark.read.parquet(path)
-    require(current.columns.sorted.sameElements(updates.columns.sorted),
-      s"schema mismatch: table ${current.columns.toSeq} vs updates ${updates.columns.toSeq}")
-    val cols = current.columns.toSeq
-    val tagged = current.select(cols.map(col): _*).withColumn("__src", lit(0))
-      .unionByName(updates.select(cols.map(col): _*).withColumn("__src", lit(1)))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(key))
-      .orderBy(col(orderCol).desc, col("__src").desc)
-    val merged = tagged
-      .withColumn("__rn", org.apache.spark.sql.functions.row_number().over(w))
-      .filter(col("__rn") === 1)
-      .select(cols.map(col): _*)
-    val tmp = path + "__upserting"
-    merged.write.mode(SaveMode.Overwrite).parquet(tmp)
-    val rows = spark.read.parquet(tmp).count()
-    val fs = fs0
-    val p = new org.apache.hadoop.fs.Path(path)
-    val t = new org.apache.hadoop.fs.Path(tmp)
-    val aside = new org.apache.hadoop.fs.Path(path + "__old")
-    fs.delete(aside, true)
-    fs.rename(p, aside)
-    fs.rename(t, p)
-    fs.delete(aside, true)
-    rows
-    }
-  }
-
-  /** Seed/refresh a key-bucketed table layout: rows land in
-    * `p_bucket=pmod(xxhash64(key), nBuckets)` directories. This is the
-    * layout [[upsertBucketed]] prunes on — the CDC target format. */
-  def writeKeyBucketed(df: DataFrame, path: String, key: String, nBuckets: Int,
-                       mode: SaveMode = SaveMode.Overwrite): Unit =
-    df.withColumn(BucketCol, bucketId(col(key), nBuckets))
-      .write.partitionBy(BucketCol).mode(mode).parquet(path)
-
-  /** Bucket-pruned MERGE-analog upsert over a [[writeKeyBucketed]] layout.
-    *
-    * The whole-table [[upsert]] reads and rewrites O(|table|) per call —
-    * fatal for a 60 s CDC cadence at 100 TB (the table would be rewritten
-    * 1,440×/day). Here the update batch determines the set of TOUCHED
-    * buckets (≤ nBuckets values, derived row-locally from the same
-    * `xxhash64` the layout used); only those partition directories are
-    * read (partition-pruned scan), merged, and swapped. I/O is proportional
-    * to the update's key spread, not the table size. A table format's MERGE
-    * does the same with file-level pruning instead of directory-level; the
-    * last-writer-wins semantics are identical to [[upsert]].
-    *
-    * Each touched bucket swaps via rename-aside (aside root =
-    * `path__old/`); a crash mid-swap is healed on the next call — any
-    * bucket present in the aside root but missing from the table is
-    * restored before the new merge starts.
-    *
-    * Returns the post-merge row count of the touched buckets (counting the
-    * whole table would be the O(|table|) scan this function exists to
-    * avoid). */
-  def upsertBucketed(spark: SparkSession, path: String, updates: DataFrame,
-                     key: String, orderCol: String, nBuckets: Int): Long = {
-    val fs = fsFor(spark, path)
-    val table = new org.apache.hadoop.fs.Path(path)
-    val asideRoot = new org.apache.hadoop.fs.Path(path + "__old")
-    val tmpRoot = new org.apache.hadoop.fs.Path(path + "__upserting")
-    // derive the touched-bucket set BEFORE taking the lock — it reads only
-    // the update batch, and an empty batch never needs the table at all
-    val tagged0 = updates.withColumn(BucketCol, bucketId(col(key), nBuckets))
-    val touched: Seq[Int] = tagged0.select(col(BucketCol)).distinct()
-      .collect().map(_.getInt(0)).toSeq.sorted // bounded by nBuckets
-    if (touched.isEmpty) return 0L
-    withTableLock(fs, path) {
-    // crash recovery: restore any aside bucket the died job never swapped
-    // back in; everything else under the aside root is superseded.
-    if (fs.exists(asideRoot)) {
-      fs.listStatus(asideRoot).foreach { st =>
-        val dst = new org.apache.hadoop.fs.Path(table, st.getPath.getName)
-        if (!fs.exists(dst)) fs.rename(st.getPath, dst)
-      }
-      fs.delete(asideRoot, true)
-    }
-    fs.delete(tmpRoot, true) // stale tmp from a died job
-
-    val current = spark.read.parquet(path)
-      .filter(col(BucketCol).isin(touched: _*)) // partition-pruned
-    require(current.columns.sorted.sameElements(tagged0.columns.sorted),
-      s"schema mismatch: table ${current.columns.toSeq} vs updates+$BucketCol ${tagged0.columns.toSeq}")
-    val cols = current.columns.toSeq
-    val tagged = current.select(cols.map(col): _*).withColumn("__src", lit(0))
-      .unionByName(tagged0.select(cols.map(col): _*).withColumn("__src", lit(1)))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(key))
-      .orderBy(col(orderCol).desc, col("__src").desc)
-    val merged = tagged
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .select(cols.map(col): _*)
-    merged.write.partitionBy(BucketCol)
-      .mode(SaveMode.Overwrite).parquet(tmpRoot.toString)
-    val rows = spark.read.parquet(tmpRoot.toString).count()
-    // swap only the touched bucket directories; untouched buckets are
-    // never read, rewritten, or even listed.
-    fs.mkdirs(asideRoot)
-    touched.foreach { b =>
-      val name = s"$BucketCol=$b"
-      val dst = new org.apache.hadoop.fs.Path(table, name)
-      val src = new org.apache.hadoop.fs.Path(tmpRoot, name)
-      val aside = new org.apache.hadoop.fs.Path(asideRoot, name)
-      if (fs.exists(dst)) fs.rename(dst, aside)
-      if (fs.exists(src)) { fs.rename(src, dst); () }
-    }
-    fs.delete(asideRoot, true)
-    fs.delete(tmpRoot, true)
-    rows
-    }
-  }
-
-  /** Rewrite a parquet directory into `target` files — run periodically
-    * behind streaming sinks whose micro-batches leave file confetti. */
-  def compact(spark: SparkSession, path: String, target: Int): Long = {
-    val fs0 = fsFor(spark, path)
-    withTableLock(fs0, path) {
-    recoverWholeTable(fs0, new org.apache.hadoop.fs.Path(path),
-      new org.apache.hadoop.fs.Path(path + "__old"))
-    val df = spark.read.parquet(path)
-    val tmp = path + "__compacting"
-    df.repartition(target).write.mode(SaveMode.Overwrite).parquet(tmp)
-    val rows = spark.read.parquet(tmp).count()
-    // swap via rename-aside ordering: old aside → new in → delete aside.
-    // A crash between any two steps leaves BOTH copies on disk (recoverable
-    // by hand) — unlike delete-then-rename, which has a window where the
-    // table is gone. True atomicity needs a table format's commit protocol;
-    // this is the strongest ordering a plain filesystem offers.
-    val fs = fs0
-    val p = new org.apache.hadoop.fs.Path(path)
-    val t = new org.apache.hadoop.fs.Path(tmp)
-    val aside = new org.apache.hadoop.fs.Path(path + "__old")
-    fs.delete(aside, true) // stale leftover from a previous crash
-    fs.rename(p, aside)
-    fs.rename(t, p)
-    fs.delete(aside, true)
-    rows
-    }
-  }
 }

@@ -505,10 +505,6 @@ object PartitionTransforms {
     }
   }
 
-  /** Epoch offset used by specs/demos to render a partition value back
-    * into a human date (days transform only). */
-  def dayToDate(p: Long): LocalDate = LocalDate.ofEpochDay(p)
-
   /** Human rendering of one field's raw segment text for the
     * `#partitions` surface: temporal values render their range start
     * (instant or date), identity values decode to the source value. */

@@ -10,11 +10,11 @@ import org.apache.spark.sql.types.{DataType, StructField, StructType}
 /** Transactional parquet table via a manifest commit log — the commit
   * protocol the reference delegates to Delta (`Bronze1.py:148-173` writes
   * Delta tables; SURVEY §1.5 maps them to parquet because the env ships no
-  * format jars). [[LayoutOps.upsertBucketed]]'s rename-aside swap is
-  * honest about its weakness: a crash mid-swap needs heal-on-next-call,
-  * readers can observe a half-swapped table, and concurrency is a lock
-  * file. This module closes that gap with the (public, Delta-paper) log
-  * design re-expressed over any Hadoop filesystem:
+  * format jars). A rename-aside directory swap cannot do this job: a
+  * crash mid-swap needs heal-on-next-call, readers can observe a
+  * half-swapped table, and concurrency is a lock file. This module uses
+  * the (public, Delta-paper) log design re-expressed over any Hadoop
+  * filesystem instead:
   *
   *   - **Data files are immutable and write-once**, landed under
   *     `files/<uuid>/p_bucket=N/`. They are INVISIBLE until a manifest
@@ -38,16 +38,16 @@ import org.apache.spark.sql.types.{DataType, StructField, StructType}
   *   - **Writers race on the version file**: a lost CAS means another
   *     commit landed first; the writer re-reads the new snapshot, redoes
   *     its merge against it, and retries — optimistic concurrency instead
-  *     of [[LayoutOps]]'s single-writer lock, so two concurrent upserts
-  *     BOTH land (serialized by version number).
+  *     of a single-writer lock, so two concurrent upserts BOTH land
+  *     (serialized by version number).
   *
-  * Scale shape: like [[LayoutOps.upsertBucketed]], rows are bucketed by
-  * `pmod(xxhash64(key), n)` and an upsert rewrites only the files of
+  * Scale shape: rows are bucketed by [[LayoutOps.bucketId]]
+  * (`pmod(xxhash64(key), n)`) and an upsert rewrites only the files of
   * touched buckets (file-level pruning via the manifest's bucket column —
   * I/O ∝ update key spread, not table size). The manifest is O(files) text
   * read once per query — at 100 TB that is the same driver-side cost as
-  * any file listing, and one manifest per commit replaces the per-call
-  * directory walks of the swap design.
+  * any file listing, and one manifest per commit replaces per-call
+  * directory walks.
   */
 object TxTable {
 
@@ -1464,11 +1464,8 @@ object TxTable {
       primeEntries(spark, snap)
       // files store PHYSICAL names; the column-mapping boundary renames
       // to the version's logical names (identity when never renamed)
-      fromPhysical(
-        applyEqDeletes(spark, table, snap,
-          DeletionVectors.readEntries(spark, table, snap.entries,
-            snap.schema)),
-        snap)
+      fromPhysical(liveRows(spark, table, snap, snap.entries,
+        snap.schema), snap)
     }
   }
 
@@ -1537,69 +1534,11 @@ object TxTable {
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sc)
     }
     primeEntries(spark, snap)
-    val df = applyEqDeletes(spark, table, snap,
-      readEntriesTracked(spark, table, snap.entries, physSchema))
-    fromPhysical(df
-      .withColumnRenamed(RidCol, RowIdCol)
-      .withColumnRenamed(RcvCol, RowCommitCol), snap)
-  }
-
-  /** Physical-space read of `entries` with lineage MATERIALIZED: data
-    * columns plus non-null [[RidCol]]/[[RcvCol]] for every live row
-    * (materialized columns win over the file's manifest anchor by
-    * coalesce). This is BOTH the [[readLineage]] kernel and the rewrite
-    * staging frame — a rewrite that stages through it writes every
-    * surviving row's identity into the new files, which is exactly what
-    * keeps `_row_id` durable across compact/Z-order/purge. */
-  private[graft] def readEntriesTracked(spark: SparkSession, table: String,
-                                        entries: Seq[FileEntry],
-                                        physSchema: StructType)
-      : DataFrame = {
-    val lineageSchema = StructType(physSchema.fields
-      :+ StructField(RidCol, org.apache.spark.sql.types.LongType)
-      :+ StructField(RcvCol, org.apache.spark.sql.types.LongType))
-    def leg(es: Seq[FileEntry], dvLeg: Boolean): Option[DataFrame] =
-      if (es.isEmpty) None
-      else {
-        val raw = DeletionVectors.entriesFrame(spark, table, es,
-          Some(lineageSchema))
-        val lookup = es.map { e =>
-          val (b, v0) = e.base.getOrElse(throw new IllegalStateException(
-            s"$table: ${e.rel} carries no base row id under row " +
-              "tracking. Rows staged on an UNPUBLISHED branch or WAP " +
-              "id receive durable ids at publish (lineage is undefined " +
-              "until then — publish first); on a published head this " +
-              "means the enable invariant is broken (run " +
-              "enable_row_tracking / compact once)"))
-          (DeletionVectors.relKey(e.rel), b, v0)
-        }
-        val lookupDf = spark.createDataFrame(lookup)
-          .toDF("__rk2", "__base", "__frcv")
-        var df = raw
-          .withColumn("__rk",
-            regexp_extract(input_file_name(),
-              DeletionVectors.RelPattern, 0))
-          .withColumn("__pos", col("_metadata.row_index"))
-        if (dvLeg)
-          df = df.withColumn("__dv_rel", input_file_name())
-            .withColumn("__dv_pos", col("_metadata.row_index"))
-            .filter(DeletionVectors.liveFilter(spark,
-              DeletionVectors.loadBitmaps(spark, table, es)))
-        Some(df
-          .join(broadcast(lookupDf), col("__rk") === col("__rk2"), "left")
-          .withColumn("__rid2",
-            coalesce(col(s"`$RidCol`"), col("__base") + col("__pos")))
-          .withColumn("__rcv2",
-            coalesce(col(s"`$RcvCol`"), col("__frcv")))
-          .select((physSchema.fields.toSeq.map(f => col(s"`${f.name}`"))
-            :+ col("__rid2").as(RidCol)
-            :+ col("__rcv2").as(RcvCol)): _*))
-      }
-    val (dvd, clean) = entries.partition(_.dv.isDefined)
-    (leg(clean, dvLeg = false), leg(dvd, dvLeg = true)) match {
-      case (Some(c), Some(d)) => c.unionByName(d)
-      case (c, d) => c.orElse(d).get
-    }
+    fromPhysical(
+      liveRows(spark, table, snap, snap.entries, Some(physSchema),
+          lineage = true)
+        .withColumnRenamed(RidCol, RowIdCol)
+        .withColumnRenamed(RcvCol, RowCommitCol), snap)
   }
 
   /** Change feed between two committed versions — the Delta CDF read shape
@@ -1643,29 +1582,30 @@ object TxTable {
     // _row_id joins a delete to the insert that replaced it across
     // commits, the link file-granular CDF alone cannot give a consumer
     val tracked = fromSnap.props.get(RowTrackingProp).contains("true")
-    def readE(es: Seq[FileEntry]): DataFrame =
-      if (tracked) readEntriesTracked(spark, table, es, schema)
+    // the live rows of `es` at the version `snap` resolves (its DVs and
+    // its unfolded equality deletes) — the read kernel, like every read
+    def readE(snap: Snapshot, es: Seq[FileEntry]): DataFrame =
+      liveRows(spark, table, snap, es, Some(schema), tracked)
         .withColumnRenamed(RidCol, RowIdCol)
         .withColumnRenamed(RcvCol, RowCommitCol)
-      else DeletionVectors.readEntries(spark, table, es, Some(schema))
     def readM(marked: Seq[(FileEntry, Array[Byte])]): DataFrame =
       DeletionVectors.readMarked(spark, table, marked, Some(schema),
         lineage = tracked)
     var prev: Map[String, FileEntry] =
       fromSnap.entries.map(e => e.rel -> e).toMap
-    var prevDels: Seq[EqDelete] = parseEqDeletes(fromSnap.props)
     val frames = Seq.newBuilder[DataFrame]
-    // untracked plain inserts accumulate ACROSS versions and read as
+    // untracked FRESH inserts accumulate ACROSS versions and read as
     // ONE batched frame after the walk (per-file commit stamp joined
     // from the manifest) — a 600-append replay builds a handful of
-    // Spark plans instead of 600 (round-15 ask #5). Tracked replays
-    // keep per-version frames: their lineage join already dominates.
+    // Spark plans instead of 600. Tracked replays keep per-version
+    // frames: their lineage join already dominates.
     val pendingInserts = Seq.newBuilder[(FileEntry, Long)]
     // versions resolve FORWARD by folding each commit's own manifest
     // onto the previous snapshot — one manifest read per version,
     // never a per-version O(interval) walk back to the anchor
     var curSnap = fromSnap
     (fromVersion + 1 to toVersion).foreach { v =>
+      val prevSnap = curSnap
       val vPath = versionPath(table, v)
       require(fs.exists(vPath),
         s"version $v does not exist under $table — it predates the " +
@@ -1677,25 +1617,17 @@ object TxTable {
       val cur = curSnap.entries.map(e => e.rel -> e).toMap
       // EQUALITY DELETES registered at v: the dead rows are exactly the
       // live rows of files with addV < v whose keys match the sidecar —
-      // a read of the AFFECTED files scoped by (a) their DVs, (b) every
-      // EARLIER eq-delete (a row that died before v must not re-die),
-      // (c) one semi-join per new sidecar. Write path paid nothing;
+      // the AFFECTED files read live at v-1 (their DVs plus every
+      // EARLIER eq-delete: a row that died before v must not re-die),
+      // then one semi-join per new sidecar. Write path paid nothing;
       // the feed pays the read, which is the MOR contract.
-      val curDels = parseEqDeletes(curSnap.props)
-      val newDels = curDels.filter(_.version == v)
+      val newDels = parseEqDeletes(curSnap.props).filter(_.version == v)
       if (newDels.nonEmpty) {
         val affected = curSnap.entries.filter(e =>
           e.addV.forall(_ < v))
         if (affected.nonEmpty) {
-          val earlier = prevDels
           newDels.foreach { d =>
-            val base0 = applyEqDeletes(spark, table, curSnap,
-              if (tracked)
-                readEntriesTracked(spark, table, affected, schema)
-                  .withColumnRenamed(RidCol, RowIdCol)
-                  .withColumnRenamed(RcvCol, RowCommitCol)
-              else DeletionVectors.readEntries(spark, table, affected,
-                Some(schema)), Some(earlier))
+            val base0 = readE(prevSnap, affected)
             val keysDf = spark.read.parquet(s"$table/${d.rel}")
             val cond = d.cols.map(c => base0(c) === keysDf(c))
               .reduce(_ && _)
@@ -1705,7 +1637,6 @@ object TxTable {
           }
         }
       }
-      prevDels = curDels
       // a dataChange=false commit (compaction/Z-order/purge/rebucket)
       // reorganized files without changing live rows — EXACTLY nothing
       // to emit; advance the baseline so the next commit diffs against
@@ -1739,10 +1670,14 @@ object TxTable {
         .toSeq.sorted
       val (updAdded, plainAdded) = added.partition(e =>
         ui.contains(e.rel) && e.dv.isEmpty && e.rows.isDefined)
-      if (plainAdded.nonEmpty) {
-        if (tracked) frames += stamp(readE(plainAdded), "insert", v)
-        else pendingInserts ++= plainAdded.map(e => (e, v))
-      }
+      // a file FRESHLY added at v (addV = v) is addressable by no
+      // delete registered at or before v, so only its DVs apply — the
+      // batch below reads those; re-adds (restore) and tracked inserts
+      // read live at v
+      val (fresh, atV) = plainAdded.partition(e =>
+        !tracked && e.addV.contains(v))
+      pendingInserts ++= fresh.map(e => (e, v))
+      if (atV.nonEmpty) frames += stamp(readE(curSnap, atV), "insert", v)
       // BATCHED classification reads: one frame per change type per
       // version, never per file — a MERGE touching every bucket stays
       // O(change types) Spark plans, not O(files)
@@ -1760,7 +1695,7 @@ object TxTable {
       val (updRemoved, plainRemoved) = removed.partition(e =>
         ud.contains(e.rel) && e.rows.isDefined)
       if (plainRemoved.nonEmpty)
-        frames += stamp(readE(plainRemoved), "delete", v)
+        frames += stamp(readE(prevSnap, plainRemoved), "delete", v)
       if (updRemoved.nonEmpty) {
         // fully-dropped files (all live rows died): updated positions
         // are pre-images, the remaining then-live rows plain deletes
@@ -1830,31 +1765,25 @@ object TxTable {
       prev = cur
       }
     }
-    // flush the cross-version insert batch: ONE read of every plainly-
-    // added file, each row stamped with ITS file's commit version via a
-    // broadcast (relKey -> version) join. A rel that was re-added
-    // inside the window (restore after an in-window remove) would make
-    // the stamp ambiguous — those few fall back to per-version frames.
+    // flush the cross-version insert batch: ONE read of every freshly
+    // added file (a rel is freshly added once, so the stamp is never
+    // ambiguous), each row stamped with ITS file's commit version via a
+    // broadcast (relKey -> version) join. The read carries an EMPTY
+    // registry: no delete registered at or before a fresh add's version
+    // addresses it, and later ones surface as their own delete rows.
     val pend = pendingInserts.result()
     if (pend.nonEmpty) {
-      val multi = pend.groupBy(_._1.rel).filter(_._2.size > 1).keySet
-      val (dup, uniq) = pend.partition(p => multi(p._1.rel))
-      dup.groupBy(_._2).toSeq.sortBy(_._1).foreach { case (v, es) =>
-        frames += stamp(readE(es.map(_._1)), "insert", v)
-      }
-      if (uniq.nonEmpty) {
-        val vDf = spark.createDataFrame(uniq.map { case (e, v) =>
-          (DeletionVectors.relKey(e.rel), v)
-        }).toDF("__cv_rk", "__cv_v")
-        frames += DeletionVectors
-          .readEntries(spark, table, uniq.map(_._1), Some(schema))
-          .withColumn("__cv_rk0", regexp_extract(input_file_name(),
-            DeletionVectors.RelPattern, 0))
-          .join(broadcast(vDf), col("__cv_rk0") === col("__cv_rk"), "left")
-          .withColumn("_change_type", lit("insert"))
-          .withColumn("_commit_version", col("__cv_v"))
-          .drop("__cv_rk0", "__cv_rk", "__cv_v")
-      }
+      val vDf = spark.createDataFrame(pend.map { case (e, v) =>
+        (DeletionVectors.relKey(e.rel), v)
+      }).toDF("__cv_rk", "__cv_v")
+      frames += readE(latest.copy(props = latest.props - EqDeletesProp),
+          pend.map(_._1))
+        .withColumn("__cv_rk0", regexp_extract(input_file_name(),
+          DeletionVectors.RelPattern, 0))
+        .join(broadcast(vDf), col("__cv_rk0") === col("__cv_rk"), "left")
+        .withColumn("_change_type", lit("insert"))
+        .withColumn("_commit_version", col("__cv_v"))
+        .drop("__cv_rk0", "__cv_rk", "__cv_v")
     }
     // change frames surface under toVersion's LOGICAL names (the CDF
     // consumer's view; `_change_type`/`_commit_version` are never mapped)
@@ -2000,15 +1929,8 @@ object TxTable {
     val hit = snap.entries.filter(e => wanted(e.bucket))
     if (hit.isEmpty)
       read(spark, table, version).filter(lit(false))
-    else
-      // equality-delete-aware like every read verb: a point read under
-      // an unfolded registry must not resurrect the deleted keys (the
-      // anti-join is a no-op the moment the registry folds)
-      fromPhysical(
-        applyEqDeletes(spark, table, snap,
-          DeletionVectors.readEntries(spark, table, hit, snap.schema))
-          .filter(col(s"`$physKey`").isin(keys: _*)),
-        snap)
+    else fromPhysical(liveRows(spark, table, snap, hit, snap.schema)
+      .filter(col(s"`$physKey`").isin(keys: _*)), snap)
   }
 
   // --- zone-map data skipping (sidecar per-file column stats) -----------
@@ -2886,28 +2808,18 @@ object TxTable {
     val physBounds = bounds.map { case (c, lo, hi) =>
       (snap.physicalName(c), lo, hi) }
     val perCol = physBounds.map { case (c, lo, hi) =>
-      (fileStats(spark, table, c), lo, hi)
-    }
-    def mayMatch(e: FileEntry): Boolean = perCol.forall {
-      case (statsMap, lo, hi) => statsMap.get(e.rel) match {
-        case Some((l, h)) if l != null && h != null =>
-          cmpAny(h, lo) >= 0 && cmpAny(l, hi) <= 0
-        case Some((l, h)) if l == null && h == null =>
-          false // all-null file: a range predicate can never select from it
-        case _ => true
-      }
+      (fileStats(spark, table, c),
+        Seq[graft.sources.TxPruneVerdicts.Bound](
+          (Some((lo, false)), Some((hi, false)))))
     }
     primeEntries(spark, snap)
-    val kept = snap.entries.filter(mayMatch)
+    val kept = snap.entries.filter(e => perCol.forall { case (stats, b) =>
+      graft.sources.TxPruneVerdicts.zoneKeep(stats.get(e.rel), b) })
     val pred = physBounds.map { case (c, lo, hi) =>
       col(s"`$c`") >= lit(lo) && col(s"`$c`") <= lit(hi) }.reduce(_ && _)
     if (kept.isEmpty) read(spark, table, version).filter(lit(false))
     else fromPhysical(
-      // equality-delete-aware like every read verb: zone-map pruning
-      // must not resurrect keys a live registry already deleted
-      applyEqDeletes(spark, table, snap,
-        DeletionVectors.readEntries(spark, table, kept, snap.schema))
-        .filter(pred), snap)
+      liveRows(spark, table, snap, kept, snap.schema).filter(pred), snap)
   }
 
   /** Widen `base` with fields `incoming` adds; a field present in both
@@ -3425,9 +3337,9 @@ object TxTable {
 
   /** MERGE-analog upsert with file-level pruning and optimistic
     * concurrency: last-writer-wins per `key` by `orderCol` (ties prefer
-    * the update), same semantics as [[LayoutOps.upsert]]. Only files of
-    * buckets the update batch touches are read and rewritten; untouched
-    * entries carry into the new manifest verbatim. A lost commit race
+    * the update). Only files of buckets the update batch touches are
+    * read and rewritten; untouched entries carry into the new manifest
+    * verbatim. A lost commit race
     * re-merges against the winner's snapshot and retries (the merge must
     * re-run: its inputs changed), up to `maxRetries`. Returns the
     * post-merge row count of the touched buckets. */
@@ -3474,14 +3386,10 @@ object TxTable {
               .withColumn(RcvCol, lit(null).cast("long"))
           else e
         }
-        // DV-aware (and equality-delete-aware): a merge window over a
-        // file with marked-dead rows must not resurrect them into the
-        // rewrite
-        else applyEqDeletes(spark, table, snap,
-          if (tracked)
-            readEntriesTracked(spark, table, touchedEntries, evolved)
-          else DeletionVectors.readEntries(spark, table, touchedEntries,
-            Some(evolved)))
+        // live rows only: a merge window over dead rows would resurrect
+        // them into the rewrite
+        else liveRows(spark, table, snap, touchedEntries, Some(evolved),
+          tracked)
       val cols = evolved.fieldNames.toSeq
       val lineageCols =
         if (tracked) Seq(col(s"`$RidCol`"), col(s"`$RcvCol`"))
@@ -3884,6 +3792,24 @@ object TxTable {
         "retry")
   }
 
+  /** THE live-row read kernel: the live rows of `entries` as of `snap`,
+    * in PHYSICAL name space — deletion vectors first (clean files keep
+    * the plain scan, DV'd files a position filter), then the snapshot's
+    * unfolded equality deletes (identity when the registry is empty).
+    * `lineage` materializes [[RidCol]]/[[RcvCol]] for every live row.
+    * Every read verb (`read`, `readLineage`, `readKeys`, `readWhereAll`,
+    * `readStaged`, `changesSince`, the change feed's file legs) wraps it
+    * in [[fromPhysical]]; every rewrite that restages live rows (upsert's
+    * merge window, rebucket, compaction/purge/fold, REPLACE WHERE
+    * remainders) stages it as is — so no surface can disagree on which
+    * rows are dead. */
+  private[graft] def liveRows(spark: SparkSession, table: String,
+                              snap: Snapshot, entries: Seq[FileEntry],
+                              physSchema: Option[StructType],
+                              lineage: Boolean = false): DataFrame =
+    applyEqDeletes(spark, table, snap, DeletionVectors.readEntries(spark,
+      table, entries, physSchema, lineage))
+
   /** Apply the snapshot's UNFOLDED equality deletes to a frame read from
     * its files (PHYSICAL name space): attach each row's file sequence
     * (one tiny broadcast keyed by the rel suffix), then one broadcast
@@ -3891,8 +3817,9 @@ object TxTable {
     * sidecars — a row dies iff its keys match a delete registered AFTER
     * its file was added. Identity (same plan) when the registry is
     * empty, which is the steady state commitNext's fold-GC drives
-    * toward. `delsOverride` lets the change feed apply "every delete
-    * registered BEFORE version v" when replaying history. */
+    * toward. Reads call it through [[liveRows]]; `delsOverride` lets
+    * [[eqDeletePositions]] apply "every delete registered BEFORE version
+    * v" when replaying history. */
   private[graft] def applyEqDeletes(spark: SparkSession, table: String,
                                     snap: Snapshot, df: DataFrame,
                                     delsOverride: Option[Seq[EqDelete]] =
@@ -4031,8 +3958,7 @@ object TxTable {
         // empty frame with the table schema (from the current snapshot)
         read(spark, table, Some(upTo)).filter(lit(false))
       } else fromPhysical(
-        DeletionVectors.readEntries(spark, table, added, snapUpTo.schema),
-        snapUpTo)
+        liveRows(spark, table, snapUpTo, added, snapUpTo.schema), snapUpTo)
     (df, upTo)
   }
 
@@ -4444,11 +4370,8 @@ object TxTable {
       // eq-deletes fold through (restaged files postdate the registry,
       // so a plain read would resurrect); tracked identities materialize
       val tracked = snap.props.get(RowTrackingProp).contains("true")
-      val re = applyEqDeletes(spark, table, snap,
-          if (tracked)
-            readEntriesTracked(spark, table, snap.entries, snap.schema.get)
-          else DeletionVectors.readEntries(spark, table, snap.entries,
-            snap.schema))
+      val re = liveRows(spark, table, snap, snap.entries, snap.schema,
+          tracked)
         .withColumn(LayoutOps.BucketCol,
           LayoutOps.bucketId(col(s"`$physKey`"), newBuckets))
         .repartition(col(LayoutOps.BucketCol))
@@ -4524,11 +4447,8 @@ object TxTable {
       // rows, the restaged files carry the rewrite's sequence (so the
       // registry entry stops addressing them), and commitNext GCs
       // fully-covered entries in the same commit
-      val merged = layout(applyEqDeletes(spark, table, snap,
-        if (tracked)
-          readEntriesTracked(spark, table, toRewrite, snap.schema.get)
-        else DeletionVectors.readEntries(spark, table,
-          toRewrite, snap.schema)))
+      val merged = layout(liveRows(spark, table, snap, toRewrite,
+        snap.schema, tracked))
       val newEntries = stageFiles(spark, table, merged, maxRecordsPerFile)
       val removes = toRewrite.map(_.rel).toSet
       // live rows are identical before and after: a rewrite commit is
@@ -4549,7 +4469,7 @@ object TxTable {
           // an equality-delete REGISTRATION interleaving is a props-only
           // commit that leaves every target file untouched — but it
           // still invalidates the staged bytes: the rewrite baked the
-          // OLD registry into its rows (applyEqDeletes at staging), and
+          // OLD registry into its rows (liveRows at staging), and
           // re-committing them would stamp addV PAST the new entry's
           // version, so the new delete would retire via the GC without
           // ever applying — silently resurrecting its keys (caught by
@@ -4834,9 +4754,8 @@ object TxTable {
     // true for them — exactly right, since a publish lands at a version
     // AFTER every registered delete.
     fromPhysical(
-      applyEqDeletes(spark, table, snap,
-        DeletionVectors.readEntries(spark, table, snap.entries ++ adds,
-          Some(merged))), snap)
+      liveRows(spark, table, snap, snap.entries ++ adds, Some(merged)),
+      snap)
   }
 
   /** PUBLISH a WAP id: every staging under the id lands as ONE atomic
@@ -4888,15 +4807,6 @@ object TxTable {
     val files = stagedFiles(fs, table, Some(wapId))
     files.foreach(p => fs.delete(p, false))
     files.size
-  }
-
-  /** [[restore]] addressed by tag name. */
-  def restoreTag(spark: SparkSession, table: String, name: String): Long = {
-    val pinned = tags(spark, table).getOrElse(name,
-      throw new IllegalArgumentException(
-        s"$table: no tag named '$name' (have: " +
-          s"${tags(spark, table).keys.toSeq.sorted.mkString(", ")})"))
-    restore(spark, table, pinned)
   }
 
   // --- column mapping (ALTER TABLE RENAME COLUMN) ----------------------

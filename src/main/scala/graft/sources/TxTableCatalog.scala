@@ -4612,22 +4612,16 @@ final class TxBatchWrite(path: String, querySchema: StructType,
                   if (ofs.isEmpty) lit(true)
                   else ofs.map(TxMetadataDelete.filterColumn)
                     .reduce(_ && _)
-                // DV-aware (and equality-delete-aware) read: a
-                // partially-covered file with marked-dead rows must not
-                // resurrect them into the remainder rewrite — the
-                // restaged file postdates the registry entries, so a
-                // plain read's dead rows would come back for good. Row
-                // tracking: remainder rows are UNCHANGED rows, so their
-                // (_row_id, _row_commit_version) materialize through.
+                // live rows only: a partially-covered file's dead rows
+                // must not resurrect into the remainder rewrite — the
+                // restaged file postdates the registry entries, so they
+                // would come back for good. Row tracking: remainder rows
+                // are UNCHANGED rows, so their (_row_id,
+                // _row_commit_version) materialize through.
                 val tracked = snap.props
                   .get(TxTable.RowTrackingProp).contains("true")
-                val readSchema = snap.schema.getOrElse(merged)
-                val keep = TxTable.applyEqDeletes(spark, path, snap,
-                    if (tracked)
-                      TxTable.readEntriesTracked(spark, path, partial,
-                        readSchema)
-                    else graft.ops.DeletionVectors.readEntries(spark,
-                      path, partial, Some(readSchema)))
+                val keep = TxTable.liveRows(spark, path, snap, partial,
+                    Some(snap.schema.getOrElse(merged)), tracked)
                   .filter(not(coalesce(cond, lit(false))))
                 TxTable.stageRewrite(spark, path, keep)
               }

@@ -2,7 +2,7 @@ package graft.stream
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.types.StructType
 
 import graft.ops.{BronzeOps, GoldOps, TxTable}
@@ -132,15 +132,6 @@ object Pipelines {
       .option("numRows", numRows.toString)
       .option("truncate", truncate.toString)
       .outputMode("append")
-
-  /** Run a streaming DataFrame to completion over currently-available input
-    * (test/batch-backfill mode — `Trigger.AvailableNow` processes everything
-    * then stops, the streaming analog of the reference's batch loop). */
-  def runAvailableNow(writer: DataStreamWriter[org.apache.spark.sql.Row]): StreamingQuery = {
-    val q = writer.trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    q
-  }
 
   // --- Kafka wire (production path; the test env has no broker) ---------
 
@@ -295,25 +286,6 @@ object Pipelines {
         }
         graft.ops.TxTable.appendWithEqDelete(batch.sparkSession,
           tablePath, rows, keys, key, nBuckets, appId, batchId)
-        ()
-      }
-
-  /** LEGACY/audit sibling of [[cdcApply]] on the rename-aside swap design
-    * ([[graft.ops.LayoutOps.upsertBucketed]]): same per-batch MERGE
-    * semantics over a plain key-bucketed directory — no commit log at all,
-    * which is occasionally what an audit or scratch pipeline wants — but
-    * strictly weaker guarantees (advisory writer lock, heal-on-next-call
-    * after a crashed swap, no snapshot isolation or time travel). New
-    * ingest pipelines should land on [[cdcApply]]. Seed the target with
-    * `LayoutOps.writeKeyBucketed(snapshot, tablePath, key, nBuckets)`. */
-  def cdcApplySwap(changes: DataFrame, tablePath: String, key: String,
-                   orderCol: String, checkpoint: String,
-                   nBuckets: Int = 64): DataStreamWriter[org.apache.spark.sql.Row] =
-    changes.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.ops.LayoutOps.upsertBucketed(batch.sparkSession, tablePath,
-          batch, key, orderCol, nBuckets)
         ()
       }
 

@@ -436,4 +436,67 @@ class EqDeleteSpec extends AnyFunSuite {
         e4.getMessage)
     }
   }
+
+  test("changesSince hides eq-deleted rows exactly like DV-deleted rows") {
+    val t = fresh(40)
+    TxTable.appendOnce(spark, t,
+      Seq((100L, 1000L), (101L, 1010L), (102L, 1020L)).toDF("k", "v"),
+      "k", 4, appId = "eq-since", batchId = 1L)
+    TxTable.deleteWhereEq(spark, t, Seq(101L).toDF("k"))
+    TxTable.deleteWhereMor(spark, t, col("k") === 102L)
+    val (df, _) = TxTable.changesSince(spark, t, 0L)
+    assert(df.select($"k").as[Long].collect().toSeq == Seq(100L))
+  }
+
+  test("CDF: an upsert that rewrites an eq-deleted row's file does not emit its delete a second time") {
+    val t = fresh(20)
+    val v0 = TxTable.snapshot(spark, t).version
+    TxTable.deleteWhereEq(spark, t, Seq(4L).toDF("k"))
+    // re-insert k=4: its bucket's file is removed and restaged
+    TxTable.upsert(spark, t, Seq((4L, 4000L)).toDF("k", "v"), "k", "v", 4)
+    val vEnd = TxTable.snapshot(spark, t).version
+    val deletes = TxTable.changesBetween(spark, t, v0, vEnd)
+      .filter($"_change_type" === "delete" && $"k" === 4L)
+      .select($"_commit_version").as[Long].collect().toSeq
+    assert(deletes == Seq(v0 + 1), s"k=4 must die once, at the eq-delete")
+    assert(TxTable.read(spark, t).filter($"k" === 4L).select($"v")
+      .as[Long].collect().toSeq == Seq(4000L))
+  }
+
+  test("every read verb serves the live rows read() serves, under unfolded eq-deletes plus DVs on a row-tracked table") {
+    val t = fresh(40)
+    TxTable.enableRowTracking(spark, t)
+    val v0 = TxTable.snapshot(spark, t).version
+    TxTable.appendOnce(spark, t,
+      spark.range(100, 110).select(col("id").as("k"),
+        (col("id") * 10).as("v")), "k", 4, appId = "eq-parity", batchId = 1L)
+    TxTable.deleteWhereEq(spark, t, Seq(3L, 7L, 101L).toDF("k"))
+    TxTable.deleteWhereMor(spark, t, col("k").isin(5L, 104L))
+    val snap = TxTable.snapshot(spark, t)
+    assert(TxTable.parseEqDeletes(snap.props).nonEmpty &&
+      snap.entries.exists(_.dv.isDefined),
+      "the table must carry both unfolded eq-deletes and DVs")
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] =
+      df.select($"k", $"v").as[(Long, Long)].collect().toSeq.sorted
+    def expect(p: org.apache.spark.sql.Column) =
+      rows(TxTable.read(spark, t).filter(p))
+    val probe = Seq(2L, 3L, 4L, 5L, 7L, 100L, 101L, 104L, 105L)
+    assert(rows(TxTable.readKeys(spark, t, "k", probe, 4)) ==
+      expect($"k".isin(probe: _*)))
+    TxTable.computeStats(spark, t, "k")
+    TxTable.computeStats(spark, t, "v")
+    assert(rows(TxTable.readWhere(spark, t, "v", 20L, 1050L)) ==
+      expect($"v".between(20L, 1050L)))
+    assert(rows(TxTable.readWhereAll(spark, t,
+        Seq(("k", 2L, 104L), ("v", 30L, 1070L)))) ==
+      expect($"k".between(2L, 104L) && $"v".between(30L, 1070L)))
+    TxTable.stageAppend(spark, t, Seq((200L, 2000L)).toDF("k", "v"),
+      "k", 4, wapId = "eq.parity")
+    assert(rows(TxTable.readStaged(spark, t, "eq.parity")
+      .filter($"k" =!= 200L)) == expect(lit(true)))
+    TxTable.dropStaged(spark, t, "eq.parity")
+    assert(rows(TxTable.readLineage(spark, t)) == expect(lit(true)))
+    assert(rows(TxTable.changesSince(spark, t, v0)._1) ==
+      expect($"k" >= 100L))
+  }
 }

@@ -9,7 +9,7 @@ import graft.ops.LayoutOps
 
 /** Layout techniques must show up in the physical plan, not just run:
   * partition pruning in PartitionFilters, bucketing as a shuffle-free
-  * join, compaction as a file-count drop with identical rows. */
+  * join, Z-order as per-file clustering. */
 class LayoutOpsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -56,218 +56,6 @@ class LayoutOpsSpec extends AnyFunSuite {
       spark.sql(s"DROP TABLE IF EXISTS $n1")
       spark.sql(s"DROP TABLE IF EXISTS $n2")
     }
-  }
-
-  test("upsert applies CDC-style changes: update, insert, last-writer-wins") {
-    import java.sql.Timestamp
-    def ts(s: String) = Timestamp.valueOf(s)
-    val tmp = Files.createTempDirectory("graft_upsert_").toString + "/t"
-    Seq(
-      ("C1", "alice@v1", ts("2024-01-01 00:00:00")),
-      ("C2", "bob@v1", ts("2024-01-01 00:00:00")))
-      .toDF("customer_id", "email", "updated_at").write.parquet(tmp)
-    val updates = Seq(
-      ("C1", "alice@v2", ts("2024-01-02 00:00:00")), // update (newer)
-      ("C2", "bob@stale", ts("2023-12-01 00:00:00")), // stale → ignored
-      ("C3", "carol@v1", ts("2024-01-01 00:00:00"))) // insert
-      .toDF("customer_id", "email", "updated_at")
-    val rows = LayoutOps.upsert(spark, tmp, updates, "customer_id", "updated_at")
-    assert(rows == 3)
-    val out = spark.read.parquet(tmp)
-      .select("customer_id", "email").as[(String, String)].collect().toMap
-    assert(out == Map("C1" -> "alice@v2", "C2" -> "bob@v1", "C3" -> "carol@v1"))
-    // tie on (key, orderCol): the update wins over current state
-    val tie = Seq(("C2", "bob@tied", ts("2024-01-01 00:00:00")))
-      .toDF("customer_id", "email", "updated_at")
-    LayoutOps.upsert(spark, tmp, tie, "customer_id", "updated_at")
-    val after = spark.read.parquet(tmp)
-      .filter($"customer_id" === "C2").select("email").as[String].head()
-    assert(after == "bob@tied")
-  }
-
-  test("bucketed upsert: same last-writer-wins results, untouched buckets not rewritten") {
-    import java.sql.Timestamp
-    def ts(s: String) = Timestamp.valueOf(s)
-    val base = Files.createTempDirectory("graft_bupsert_").toString
-    val bucketed = base + "/bucketed"
-    val whole = base + "/whole"
-    val nBuckets = 8
-    // 64 keys spread across all 8 buckets
-    val snapshot = (1 to 64)
-      .map(i => (s"C$i", s"u$i@v1", ts("2024-01-01 00:00:00")))
-      .toDF("customer_id", "email", "updated_at")
-    LayoutOps.writeKeyBucketed(snapshot, bucketed, "customer_id", nBuckets)
-    snapshot.write.parquet(whole)
-    // updates touch 3 keys → a strict subset of buckets
-    val updates = Seq(
-      ("C1", "u1@v2", ts("2024-01-02 00:00:00")), // newer → wins
-      ("C2", "u2@stale", ts("2023-12-01 00:00:00")), // stale → loses
-      ("C999", "new@v1", ts("2024-01-01 00:00:00"))) // insert
-      .toDF("customer_id", "email", "updated_at")
-    val touchedBuckets = updates
-      .select(LayoutOps.bucketId($"customer_id", nBuckets)).distinct()
-      .collect().map(_.getInt(0)).toSet
-    assert(touchedBuckets.size < nBuckets, "fixture must leave buckets untouched")
-    // snapshot the physical state of every untouched bucket directory
-    def bucketFiles(b: Int): Map[String, Long] = {
-      val d = new java.io.File(bucketed, s"${LayoutOps.BucketCol}=$b")
-      if (!d.exists()) Map.empty
-      else d.listFiles().filter(_.getName.endsWith(".parquet"))
-        .map(f => f.getName -> f.lastModified()).toMap
-    }
-    val untouched = (0 until nBuckets).filterNot(touchedBuckets)
-    val before = untouched.map(b => b -> bucketFiles(b)).toMap
-    assert(before.values.forall(_.nonEmpty), "every bucket should have data")
-
-    LayoutOps.upsertBucketed(spark, bucketed, updates, "customer_id", "updated_at", nBuckets)
-    LayoutOps.upsert(spark, whole, updates, "customer_id", "updated_at")
-
-    // (a) identical last-writer-wins results vs the whole-table upsert
-    val gotB = spark.read.parquet(bucketed)
-      .select("customer_id", "email", "updated_at")
-      .as[(String, String, Timestamp)].collect()
-      .map(r => r._1 -> ((r._2, r._3))).toMap
-    val gotW = spark.read.parquet(whole)
-      .select("customer_id", "email", "updated_at")
-      .as[(String, String, Timestamp)].collect()
-      .map(r => r._1 -> ((r._2, r._3))).toMap
-    assert(gotB == gotW)
-    assert(gotB("C1") == (("u1@v2", ts("2024-01-02 00:00:00"))))
-    assert(gotB.size == 65)
-    // (b) files in untouched buckets are bit-for-bit the ones written before
-    untouched.foreach { b =>
-      assert(bucketFiles(b) == before(b), s"bucket $b was rewritten")
-    }
-    // no swap debris
-    assert(!new java.io.File(bucketed + "__old").exists())
-    assert(!new java.io.File(bucketed + "__upserting").exists())
-  }
-
-  test("crash recovery: upsert and compact heal a died mid-swap (table gone, __old intact)") {
-    import java.sql.Timestamp
-    def ts(s: String) = Timestamp.valueOf(s)
-    def seed(): String = {
-      val tmp = Files.createTempDirectory("graft_crash_").toString + "/t"
-      Seq(("C1", "a@v1", ts("2024-01-01 00:00:00")))
-        .toDF("customer_id", "email", "updated_at").write.parquet(tmp)
-      tmp
-    }
-    // simulate death between rename(table, aside) and rename(tmp, table):
-    // the table dir is missing, __old holds the only good copy, and a
-    // half-written __upserting/__compacting may linger.
-    def crash(path: String, tmpSuffix: String): Unit = {
-      val f = new java.io.File(path)
-      assert(f.renameTo(new java.io.File(path + "__old")))
-      val junk = new java.io.File(path + tmpSuffix)
-      junk.mkdirs()
-      Files.write(java.nio.file.Paths.get(junk.getPath, "part-junk.parquet"),
-        Array[Byte](1, 2, 3))
-    }
-    // upsert path
-    val t1 = seed(); crash(t1, "__upserting")
-    val updates = Seq(("C2", "b@v1", ts("2024-01-01 00:00:00")))
-      .toDF("customer_id", "email", "updated_at")
-    val rows = LayoutOps.upsert(spark, t1, updates, "customer_id", "updated_at")
-    assert(rows == 2)
-    assert(spark.read.parquet(t1).count() == 2)
-    assert(!new java.io.File(t1 + "__old").exists())
-    // compact path
-    val t2 = seed(); crash(t2, "__compacting")
-    val rows2 = LayoutOps.compact(spark, t2, target = 1)
-    assert(rows2 == 1 && spark.read.parquet(t2).count() == 1)
-    assert(!new java.io.File(t2 + "__old").exists())
-  }
-
-  test("crash recovery: bucketed upsert restores aside buckets and clears stale tmp") {
-    import java.sql.Timestamp
-    def ts(s: String) = Timestamp.valueOf(s)
-    val path = Files.createTempDirectory("graft_bcrash_").toString + "/t"
-    val nBuckets = 4
-    val snapshot = (1 to 16)
-      .map(i => (s"C$i", s"u$i@v1", ts("2024-01-01 00:00:00")))
-      .toDF("customer_id", "email", "updated_at")
-    LayoutOps.writeKeyBucketed(snapshot, path, "customer_id", nBuckets)
-    val expected = spark.read.parquet(path)
-      .select("customer_id", "email").as[(String, String)].collect().toSet
-    // simulate death mid-swap: one bucket moved aside but never swapped
-    // back (its slot in the table is empty), stale tmp root left behind
-    val victims = new java.io.File(path).listFiles()
-      .filter(_.getName.startsWith(LayoutOps.BucketCol + "="))
-    val victim = victims.head
-    val asideRoot = new java.io.File(path + "__old")
-    asideRoot.mkdirs()
-    assert(victim.renameTo(new java.io.File(asideRoot, victim.getName)))
-    new java.io.File(path + "__upserting/junk").mkdirs()
-    // next upsert must first heal, then merge on the healed table
-    val updates = Seq(("C1", "u1@v2", ts("2024-01-02 00:00:00")))
-      .toDF("customer_id", "email", "updated_at")
-    LayoutOps.upsertBucketed(spark, path, updates, "customer_id", "updated_at", nBuckets)
-    val got = spark.read.parquet(path)
-      .select("customer_id", "email").as[(String, String)].collect().toSet
-    assert(got == expected - (("C1", "u1@v1")) + (("C1", "u1@v2")))
-    assert(!asideRoot.exists() && !new java.io.File(path + "__upserting").exists())
-  }
-
-  test("single-writer lock: contended upserts fail fast; stale locks break") {
-    import java.sql.Timestamp
-    def ts(s: String) = Timestamp.valueOf(s)
-    val path = Files.createTempDirectory("graft_lock_").toString + "/t"
-    val nBuckets = 4
-    val snapshot = (1 to 8)
-      .map(i => (s"C$i", s"u$i@v1", ts("2024-01-01 00:00:00")))
-      .toDF("customer_id", "email", "updated_at")
-    LayoutOps.writeKeyBucketed(snapshot, path, "customer_id", nBuckets)
-    def state(): Map[String, String] = spark.read.parquet(path)
-      .select("customer_id", "email").as[(String, String)].collect().toMap
-    val updates = Seq(("C1", "u1@v2", ts("2024-01-02 00:00:00")))
-      .toDF("customer_id", "email", "updated_at")
-    // (a) a live writer's lock → deterministic busy failure, table untouched
-    val lock = new java.io.File(path + "__lock")
-    Files.write(lock.toPath, "held".getBytes("UTF-8"))
-    val before = state()
-    intercept[java.util.ConcurrentModificationException] {
-      LayoutOps.upsertBucketed(spark, path, updates, "customer_id",
-        "updated_at", nBuckets)
-    }
-    assert(state() == before, "a busy-rejected upsert must not touch the table")
-    // (b) a crashed writer's lock (older than staleness) is broken, not fatal
-    assert(lock.setLastModified(System.currentTimeMillis() - 2 * 60 * 60 * 1000L))
-    LayoutOps.upsertBucketed(spark, path, updates, "customer_id",
-      "updated_at", nBuckets)
-    assert(state()("C1") == "u1@v2")
-    assert(!lock.exists(), "lock must be released after a successful upsert")
-    // (c) two genuinely concurrent upserts: each either merges or raises the
-    // busy signal — never any other failure, never an interleaved swap; the
-    // final table reflects exactly the successful merges
-    val u2 = Seq(("C2", "u2@v2", ts("2024-01-02 00:00:00")))
-      .toDF("customer_id", "email", "updated_at")
-    val u3 = Seq(("C3", "u3@v2", ts("2024-01-02 00:00:00")))
-      .toDF("customer_id", "email", "updated_at")
-    val start = new java.util.concurrent.CountDownLatch(1)
-    val results = new java.util.concurrent.ConcurrentHashMap[String, Either[Throwable, Long]]()
-    val threads = Seq("C2" -> u2, "C3" -> u3).map { case (k, u) =>
-      new Thread(() => {
-        start.await()
-        val r = try Right(LayoutOps.upsertBucketed(spark, path, u,
-          "customer_id", "updated_at", nBuckets))
-        catch { case t: Throwable => Left(t) }
-        results.put(k, r)
-      })
-    }
-    threads.foreach(_.start()); start.countDown(); threads.foreach(_.join())
-    val after = state()
-    Seq("C2", "C3").foreach { k =>
-      results.get(k) match {
-        case Right(_) => assert(after(k) == "u" + k.drop(1) + "@v2")
-        case Left(_: java.util.ConcurrentModificationException) =>
-          assert(after(k) == "u" + k.drop(1) + "@v1")
-        case Left(t) => fail(s"unexpected failure for $k: $t")
-      }
-    }
-    assert(results.values.stream.anyMatch(_.isRight),
-      "at least one concurrent writer must win")
-    assert(!lock.exists() && !new java.io.File(path + "__old").exists()
-      && !new java.io.File(path + "__upserting").exists(), "no debris")
   }
 
   test("morton2 interleaves bits: a at even positions, b at odd") {
@@ -343,18 +131,5 @@ class LayoutOpsSpec extends AnyFunSuite {
     val (_, xy) = avgSpread(xdir)
     assert(xy > 0.9 * dom, s"x-sorted layout unexpectedly clustered y: $xy")
     assert(zy < 0.6 * xy, s"z-order ($zy) should beat x-sort ($xy) on y")
-  }
-
-  test("compact shrinks file confetti without losing rows") {
-    val tmp = Files.createTempDirectory("graft_compact_").toString + "/t"
-    events.repartition(24).write.parquet(tmp) // 24 small files
-    def files() = new java.io.File(tmp).listFiles()
-      .count(_.getName.endsWith(".parquet"))
-    val before = files()
-    val rowsBefore = spark.read.parquet(tmp).count()
-    val rows = LayoutOps.compact(spark, tmp, target = 2)
-    assert(rows == rowsBefore)
-    assert(files() == 2, s"expected 2 files, found ${files()} (was $before)")
-    assert(spark.read.parquet(tmp).count() == rowsBefore)
   }
 }

@@ -160,25 +160,6 @@ class StreamingSpec extends AnyFunSuite {
       .select("name").as[String].collect().toSeq == Seq("Alice"))
   }
 
-  test("cdcApplySwap (legacy audit sibling) upserts micro-batches into a bucketed dir") {
-    implicit val ctx = spark.sqlContext
-    val tmp = Files.createTempDirectory("graft_cdc_").toString
-    val table = s"$tmp/customer_profile"
-    graft.ops.LayoutOps.writeKeyBucketed(
-      Seq(CustomerProfile("C1", "Alice", "a@x.com", "Female", 30, "2020-01-01", ts("2024-01-01 00:00:00")))
-        .toDF(), table, "customer_id", nBuckets = 8)
-    val in = MemoryStream[CustomerProfile]
-    in.addData(
-      CustomerProfile("C1", "Alice2", "a2@x.com", "Female", 31, "2020-01-01", ts("2024-01-02 00:00:00")),
-      CustomerProfile("C2", "Bob", "b@x.com", "Male", 40, "2020-01-02", ts("2024-01-01 00:00:00")))
-    val q = Pipelines.cdcApplySwap(in.toDF(), table, "customer_id", "event_time",
-        s"$tmp/ckpt", nBuckets = 8).trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val out = spark.read.parquet(table)
-      .select("customer_id", "name").as[(String, String)].collect().toMap
-    assert(out == Map("C1" -> "Alice2", "C2" -> "Bob"))
-  }
-
   test("K5 console sink starts, drains the stream, and terminates") {
     implicit val ctx = spark.sqlContext
     val in = MemoryStream[CustomerProfile]
