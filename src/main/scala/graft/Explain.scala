@@ -46,9 +46,7 @@ object Explain {
         } catch { case e: Throwable =>
           System.err.println(s"[explain] $name failed: ${e.getMessage}")
         }
-        spark.sharedState.cacheManager.clearCache()
-        spark.sparkContext.getPersistentRDDs.valuesIterator
-          .foreach(_.unpersist(blocking = false))
+        Sessions.clearCaches(spark)
       }
     spark.stop()
   }

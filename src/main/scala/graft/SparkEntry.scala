@@ -379,22 +379,18 @@ object SparkEntry {
     RetrievalQueries.toDF("query_id", "query_text")
   }
 
-  /** Staging dir for the date-partitioned silver activity, inside the build
+  /** Staging dir `target/graft-<kind>/<sf dir name>`, inside the build
     * output tree; keyed by sf dir name so scale factors don't collide. */
-  private def incrSilverPath(dir: String): String =
-    s"target/graft-incr-silver/${new java.io.File(dir).getName}"
-
-  /** Staging dir for the corpus gram-hash index (ext_dedup_excise_incr). */
-  private def spanIndexPath(dir: String): String =
-    s"target/graft-span-index/${new java.io.File(dir).getName}"
+  private def stagePath(kind: String, dir: String): String =
+    s"target/graft-$kind/${new java.io.File(dir).getName}"
 
   /** Persistent BM25 inverted index (TxTable postings bucketed by term),
     * staged once per (sf, session) — index builds are landing-job work;
-    * the queries time the key-pruned READ path. Each sub-step is
-    * idempotent (txlog existence / sidecar existence), so a crash
-    * mid-build resumes cleanly in the next JVM. */
+    * the queries time the key-pruned READ path. Resumable, not wiped: each
+    * sub-step is idempotent (txlog existence / sidecar existence), so a
+    * crash mid-build resumes cleanly in the next JVM. */
   private def stagedBm25Index(s: SparkSession, dir: String): String = {
-    val idxPath = s"target/graft-bm25-index/${new java.io.File(dir).getName}"
+    val idxPath = stagePath("bm25-index", dir)
     ensureStaged(idxPath) {
       // staged-cache schema versioning: the staging is a cache of
       // landing-job output, so an index persisted by an older session
@@ -414,21 +410,29 @@ object SparkEntry {
     idxPath
   }
 
-  /** Paths staged by [[ensureStaged]] in this JVM. */
-  private val stagedPaths =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  /** Staged directories, keyed by absolute path (contract on [[Staged]]). */
+  private val stagedDirs = new Staged[Unit]
 
-  /** Run `write` once per (path, JVM): the write is index/staging state a
-    * production pipeline maintains out-of-band (the upstream landing job),
-    * not part of the query being measured — so queries that read a staged
-    * table pay the write on first invocation per session only, and a Bench
-    * median over repeat passes times the read path the query's name claims.
-    * Always (re)writes on the first touch of a session, so stale disk state
-    * from an earlier run can never leak into results. */
-  private def ensureStaged(path: String)(write: => Unit): Unit = {
-    val abs = new java.io.File(path).getAbsolutePath
-    if (stagedPaths.add(abs)) write
+  /** Run `write` once per (path, JVM) — see [[Staged]]. */
+  private[graft] def ensureStaged(path: String)(write: => Unit): Unit =
+    stagedDirs(new java.io.File(path).getAbsolutePath)(write)
+
+  /** The fixture dir [[stagePath]]`(kind, dir)`, wiped and rebuilt by
+    * `build` on its first touch per JVM in `memo`; returns the dir and
+    * what `build` returned. */
+  private def stagedFixture[V](memo: Staged[V], kind: String, dir: String)(
+      build: String => V): (String, V) = {
+    val path = stagePath(kind, dir)
+    (path, memo(new java.io.File(path).getAbsolutePath) {
+      rmTree(new java.io.File(path))
+      build(path)
+    })
   }
+
+  /** [[stagedFixture]] for the fixtures whose only product is the dir. */
+  private def stagedDir(kind: String, dir: String)(
+      build: String => Unit): String =
+    stagedFixture(stagedDirs, kind, dir)(build)._1
 
   /** Recursive delete for staged fixture directories (null-safe against a
     * concurrent delete racing the listing). */
@@ -437,178 +441,135 @@ object SparkEntry {
     f.delete(); ()
   }
 
-  /** Corpus row counts, staged once per (table path, JVM) — the same
-    * convention as [[ensureStaged]]: |corpus| is landing-job metadata a
-    * production catalog keeps (file statistics / manifest row counts), so
-    * queries needing it (TF-IDF's IDF denominator) read the staged value
-    * instead of paying a driver-blocking count job per invocation. */
-  private val stagedCounts =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+  /** Absolute path of one sf table — the key of the per-table memos. */
+  private def tableKey(dir: String, table: String): String =
+    new java.io.File(dir, table).getAbsolutePath
 
-  /** Row-id watermark of the lineage fixture as of its original load
-    * commits — read from the staged table's manifest PROPERTY during
-    * staging (a metadata lookup, not a count job); see
-    * [[stagedLineageOrders]]. */
-  private val stagedLineageWatermarks =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+  // Per-(table path, JVM) metadata and model state, one memo per kind so
+  // values computed from the same table never alias. Each is landing-job
+  // output a production pipeline keeps in its catalog or index manifest.
+
+  /** Corpus row counts (file statistics / manifest row counts): queries
+    * needing |corpus| (TF-IDF's IDF denominator) read the staged value
+    * instead of paying a driver-blocking count job per invocation. */
+  private val stagedCounts = new Staged[Long]
 
   private[graft] def stagedCount(s: SparkSession, dir: String,
                                  table: String): Long =
-    stagedCounts.computeIfAbsent(
-      new java.io.File(new java.io.File(dir), table).getAbsolutePath,
-      _ => tbl(s, dir, table).count())
+    stagedCounts(tableKey(dir, table))(tbl(s, dir, table).count())
 
-  /** Mean whitespace-token document length — BM25 index metadata, staged
-    * once per (table path, JVM) like [[stagedCount]]: a search index build
-    * records avgdl in its manifest; queries read it instead of re-scanning. */
-  private val stagedAvgdls =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Double]()
+  /** Mean whitespace-token document length — BM25 index metadata: a search
+    * index build records avgdl in its manifest; queries read it instead of
+    * re-scanning. */
+  private val stagedAvgdls = new Staged[Double]
 
   private[graft] def stagedAvgdl(s: SparkSession, dir: String,
                                  table: String): Double =
-    stagedAvgdls.computeIfAbsent(
-      new java.io.File(new java.io.File(dir), table).getAbsolutePath,
-      { _ =>
-        val sumLen = tbl(s, dir, table)
-          .agg(sum(size(split(lower(col("text")), "\\s+"))))
-          .head().getLong(0)
-        sumLen.toDouble / stagedCount(s, dir, table)
-      })
+    stagedAvgdls(tableKey(dir, table)) {
+      val sumLen = tbl(s, dir, table)
+        .agg(sum(size(split(lower(col("text")), "\\s+"))))
+        .head().getLong(0)
+      sumLen.toDouble / stagedCount(s, dir, table)
+    }
 
   /** Per-dimension quantizer calibration (min, max) — vector-index build
-    * metadata, staged once per (table path, JVM) like [[stagedCount]]: a
-    * production index keeps its calibration in the index manifest. */
-  private val stagedQuantStatsMap =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[(Double, Double)]]()
+    * metadata a production index keeps in its manifest. */
+  private val stagedQuantStatsMap = new Staged[Array[(Double, Double)]]
 
   private def stagedQuantStats(s: SparkSession,
                                dir: String): Array[(Double, Double)] =
-    stagedQuantStatsMap.computeIfAbsent(
-      new java.io.File(new java.io.File(dir), "embeddings").getAbsolutePath,
-      _ => ops.SimilarityOps.quantizationStats(tbl(s, dir, "embeddings")))
+    stagedQuantStatsMap(tableKey(dir, "embeddings"))(
+      ops.SimilarityOps.quantizationStats(tbl(s, dir, "embeddings")))
 
   /** Char-bigram LM trained on the English reference slice — quality-model
-    * state staged once per (sf dir, JVM), same convention as [[stagedCount]]:
-    * a production pipeline trains its filter LM offline and broadcasts it. */
-  private val stagedCharLMs =
-    new java.util.concurrent.ConcurrentHashMap[String, ops.TextOps.CharBigramLM]()
+    * state: a production pipeline trains its filter LM offline and
+    * broadcasts it. */
+  private val stagedCharLMs = new Staged[ops.TextOps.CharBigramLM]
 
   private def stagedCharLM(s: SparkSession, dir: String): ops.TextOps.CharBigramLM =
-    stagedCharLMs.computeIfAbsent(
-      new java.io.File(new java.io.File(dir), "documents").getAbsolutePath,
-      _ => ops.TextOps.trainCharBigramLM(
-        tbl(s, dir, "documents").filter(col("lang") === "en")))
+    stagedCharLMs(tableKey(dir, "documents"))(ops.TextOps.trainCharBigramLM(
+      tbl(s, dir, "documents").filter(col("lang") === "en")))
 
   /** Frozen NLL drift reference (ext_ingest_drift) — equal-width 6 dp
-    * bucket edges + per-bucket probabilities over the full corpus, staged
-    * once per (sf dir, JVM) like the LM itself. */
-  private val stagedDriftRefs = new java.util.concurrent.ConcurrentHashMap[
-    String, graft.stream.Pipelines.NllDriftRef]()
+    * bucket edges + per-bucket probabilities over the full corpus. */
+  private val stagedDriftRefs = new Staged[graft.stream.Pipelines.NllDriftRef]
 
   private def stagedDriftRef(s: SparkSession,
                              dir: String): graft.stream.Pipelines.NllDriftRef =
-    stagedDriftRefs.computeIfAbsent(
-      new java.io.File(new java.io.File(dir), "documents").getAbsolutePath,
-      _ => graft.stream.Pipelines.nllDriftRef(
-        tbl(s, dir, "documents"), stagedCharLM(s, dir)))
+    stagedDriftRefs(tableKey(dir, "documents"))(graft.stream.Pipelines
+      .nllDriftRef(tbl(s, dir, "documents"), stagedCharLM(s, dir)))
 
   /** PQ codebooks (m=8 subspaces, 16 codewords) — vector-index build
-    * metadata, staged once per (sf dir, JVM) like [[stagedQuantStats]]. */
-  private val stagedPqCbs =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Array[Array[Double]]]]()
+    * metadata. */
+  private val stagedPqCbs = new Staged[Array[Array[Array[Double]]]]
 
   private def stagedPqCodebooks(s: SparkSession,
                                 dir: String): Array[Array[Array[Double]]] =
-    stagedPqCbs.computeIfAbsent(
-      new java.io.File(new java.io.File(dir), "embeddings").getAbsolutePath,
-      _ => ops.SimilarityOps.pqCodebooks(tbl(s, dir, "embeddings"),
-        m = 8, k = 16))
+    stagedPqCbs(tableKey(dir, "embeddings"))(ops.SimilarityOps.pqCodebooks(
+      tbl(s, dir, "embeddings"), m = 8, k = 16))
 
   /** Learned (per-subspace seeded k-means) PQ codebooks — index-build
-    * model state, staged once per (sf dir, JVM) like [[stagedPqCodebooks]]. */
-  private val stagedPqKmCbs =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Array[Array[Double]]]]()
+    * model state. */
+  private val stagedPqKmCbs = new Staged[Array[Array[Array[Double]]]]
 
   private def stagedPqKmeansCodebooks(s: SparkSession,
                                       dir: String): Array[Array[Array[Double]]] =
-    stagedPqKmCbs.computeIfAbsent(
-      new java.io.File(new java.io.File(dir), "embeddings").getAbsolutePath,
-      _ => ops.SimilarityOps.pqCodebooksKmeans(tbl(s, dir, "embeddings"),
-        m = 8, k = 16))
+    stagedPqKmCbs(tableKey(dir, "embeddings"))(ops.SimilarityOps
+      .pqCodebooksKmeans(tbl(s, dir, "embeddings"), m = 8, k = 16))
 
-  /** Seeded IVF k-means model — index-build state, staged once per
-    * (sf dir, JVM) like the PQ codebooks. */
-  private val stagedIvfModels = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.ml.clustering.KMeansModel]()
+  /** Seeded IVF k-means model — index-build state. */
+  private val stagedIvfModels =
+    new Staged[org.apache.spark.ml.clustering.KMeansModel]
 
   private def stagedIvfModel(s: SparkSession,
                              dir: String): org.apache.spark.ml.clustering.KMeansModel =
-    stagedIvfModels.computeIfAbsent(
-      new java.io.File(new java.io.File(dir), "embeddings").getAbsolutePath,
-      _ => ops.SimilarityOps.fitIvfKmeans(tbl(s, dir, "embeddings"),
-        nCells = 16))
+    stagedIvfModels(tableKey(dir, "embeddings"))(ops.SimilarityOps
+      .fitIvfKmeans(tbl(s, dir, "embeddings"), nCells = 16))
 
   /** Deterministic IVF centroids (first 16 by vec_id) — shared by the
     * IVF-PQ index pieces; tiny driver metadata, staged for reuse. */
-  private val stagedIvfpqCentsMap = new java.util.concurrent.ConcurrentHashMap[
-    String, Array[(Long, Array[Float])]]()
+  private val stagedIvfpqCentsMap = new Staged[Array[(Long, Array[Float])]]
 
   private def stagedIvfpqCents(s: SparkSession,
                                dir: String): Array[(Long, Array[Float])] =
-    stagedIvfpqCentsMap.computeIfAbsent(
-      new java.io.File(new java.io.File(dir), "embeddings").getAbsolutePath,
-      _ => tbl(s, dir, "embeddings").orderBy(col("vec_id")).limit(16)
+    stagedIvfpqCentsMap(tableKey(dir, "embeddings"))(
+      tbl(s, dir, "embeddings").orderBy(col("vec_id")).limit(16)
         .select(col("vec_id"), col("embedding")).collect()
         .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)))
 
   /** Deterministic IVF-PQ residual codebooks — index metadata for the
     * oracle-replayable IVFADC query. */
-  private val stagedIvfpqCbsMap =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Array[Array[Double]]]]()
+  private val stagedIvfpqCbsMap = new Staged[Array[Array[Array[Double]]]]
 
   private def stagedIvfpqCodebooks(s: SparkSession,
                                    dir: String): Array[Array[Array[Double]]] =
-    stagedIvfpqCbsMap.computeIfAbsent(
-      new java.io.File(new java.io.File(dir), "embeddings").getAbsolutePath,
-      _ => ops.SimilarityOps.ivfpqCodebooks(tbl(s, dir, "embeddings"),
-        stagedIvfpqCents(s, dir), m = 8, kCodes = 16))
+    stagedIvfpqCbsMap(tableKey(dir, "embeddings"))(ops.SimilarityOps
+      .ivfpqCodebooks(tbl(s, dir, "embeddings"), stagedIvfpqCents(s, dir),
+        m = 8, kCodes = 16))
 
   /** Learned IVF-PQ state: k-means cells + k-means RESIDUAL codebooks —
-    * the production IVFADC build; model state by the usual contract. */
-  private val stagedIvfpqKmMap = new java.util.concurrent.ConcurrentHashMap[
-    String, (Array[(Long, Array[Float])], Array[Array[Array[Double]]])]()
+    * the production IVFADC build. */
+  private val stagedIvfpqKmMap =
+    new Staged[(Array[(Long, Array[Float])], Array[Array[Array[Double]]])]
 
   private def stagedIvfpqKmeans(s: SparkSession, dir: String):
       (Array[(Long, Array[Float])], Array[Array[Array[Double]]]) =
-    stagedIvfpqKmMap.computeIfAbsent(
-      new java.io.File(new java.io.File(dir), "embeddings").getAbsolutePath,
-      _ => {
-        val cents = stagedIvfModel(s, dir).clusterCenters.zipWithIndex
-          .map { case (c, i) => (i.toLong, c.toArray.map(_.toFloat)) }
-        (cents, ops.SimilarityOps.ivfpqCodebooksKmeans(
-          tbl(s, dir, "embeddings"), cents, m = 8, kCodes = 16))
-      })
+    stagedIvfpqKmMap(tableKey(dir, "embeddings")) {
+      val cents = stagedIvfModel(s, dir).clusterCenters.zipWithIndex
+        .map { case (c, i) => (i.toLong, c.toArray.map(_.toFloat)) }
+      (cents, ops.SimilarityOps.ivfpqCodebooksKmeans(
+        tbl(s, dir, "embeddings"), cents, m = 8, kCodes = 16))
+    }
 
   /** BPE merge table (30 merges learned from the word-frequency table) —
-    * tokenizer model state, staged once per (sf dir, JVM) like the LM and
-    * quantizer calibration. */
-  private val stagedBpeMergesMap =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(String, String)]]()
+    * tokenizer model state. */
+  private val stagedBpeMergesMap = new Staged[Seq[(String, String)]]
 
   private def stagedBpeMerges(s: SparkSession,
                               dir: String): Seq[(String, String)] =
-    stagedBpeMergesMap.computeIfAbsent(
-      new java.io.File(new java.io.File(dir), "documents").getAbsolutePath,
-      _ => ops.BpeOps.bpeTrain(tbl(s, dir, "documents"), numMerges = 30))
+    stagedBpeMergesMap(tableKey(dir, "documents"))(
+      ops.BpeOps.bpeTrain(tbl(s, dir, "documents"), numMerges = 30))
 
-  /** Warm every per-(sf dir, JVM) piece of staged model/index state —
-    * corpus counts, avgdl, the char-bigram LM, quantizer calibration,
-    * both PQ codebook sets, BPE merges — OUTSIDE any timed measurement.
-    * The staging convention (Bench's `staged_inputs`) is that index-build
-    * work runs once per session like a production landing job; without
-    * this hook the heaviest build (the m seeded k-means fits behind
-    * ext_ann_pq_kmeans, ~30 s) lands inside timed pass 1 and reads as a
-    * 30× spread on an otherwise 1 s query. */
   /** One-time session setup for the SQL catalog surface, applied ONCE per
     * session (the spark-defaults these would be on a real cluster):
     * registers the TxTable catalog under `txspj` and enables DSv2 storage-
@@ -625,6 +586,14 @@ object SparkEntry {
     s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
   }
 
+  /** Warm every per-(sf dir, JVM) piece of staged model/index state —
+    * corpus counts, avgdl, the char-bigram LM, quantizer calibration,
+    * both PQ codebook sets, BPE merges — and the staged fixtures OUTSIDE
+    * any timed measurement. The staging convention (Bench's
+    * `staged_inputs`) is that index-build work runs once per session like
+    * a production landing job; without this hook the heaviest build (the
+    * m seeded k-means fits behind ext_ann_pq_kmeans, ~30 s) lands inside
+    * timed pass 1 and reads as a 30× spread on an otherwise 1 s query. */
   def prestage(s: SparkSession, dir: String): Unit = {
     ensureTxCatalog(s)
     stagedCount(s, dir, "documents")
@@ -747,10 +716,8 @@ object SparkEntry {
     * is physical), then one append under the NEW logical names (the
     * staged file stores physical names, which is what lets one rename map
     * serve files written on both sides of the DDL). */
-  private def stagedRenamedOrders(s: SparkSession, dir: String): String = {
-    val path = s"target/graft-renamed-orders/${new java.io.File(dir).getName}"
-    ensureStaged(path) {
-      rmTree(new java.io.File(path))
+  private def stagedRenamedOrders(s: SparkSession, dir: String): String =
+    stagedDir("renamed-orders", dir) { path =>
       ensureTxCatalog(s)
       val orders = tbl(s, dir, "orders")
       ops.TxTable.init(s, path, orders, key = "o_orderkey", nBuckets = 8)
@@ -762,19 +729,14 @@ object SparkEntry {
         .withColumnRenamed("o_orderkey", "order_id")
       ops.TxTable.appendOnce(s, path, slice, "order_id", 8,
         appId = "rn-stage", batchId = 1L)
-      ()
     }
-    path
-  }
 
   /** Write-audit-publish fixture (ext_wap_audit): even orders committed
     * at v0; odd orders STAGED under a WAP id through the SQL INSERT path
     * (`spark.graft.wap.id`) but never published — the audit view must
     * see both, the table head only the even half. */
-  private def stagedWapOrders(s: SparkSession, dir: String): String = {
-    val path = s"target/graft-wap-orders/${new java.io.File(dir).getName}"
-    ensureStaged(path) {
-      rmTree(new java.io.File(path))
+  private def stagedWapOrders(s: SparkSession, dir: String): String =
+    stagedDir("wap-orders", dir) { path =>
       ensureTxCatalog(s)
       val orders = tbl(s, dir, "orders")
       ops.TxTable.init(s, path,
@@ -791,19 +753,14 @@ object SparkEntry {
         case Some(v) => s.conf.set(k, v)
         case None => s.conf.unset(k)
       }
-      ()
     }
-    path
-  }
 
   /** Versioned-orders TxTable fixture for the time-travel / change-feed
     * queries: three deterministic commits (o_orderkey % 3 == 0 at v0,
     * == 1 appended at v1, == 2 at v2). Deleted and rebuilt on first touch
     * per session so stale disk state can never leak into results. */
-  private def stagedVersionedOrders(s: SparkSession, dir: String): String = {
-    val path = s"target/graft-versioned-orders/${new java.io.File(dir).getName}"
-    ensureStaged(path) {
-      rmTree(new java.io.File(path))
+  private def stagedVersionedOrders(s: SparkSession, dir: String): String =
+    stagedDir("versioned-orders", dir) { path =>
       val orders = tbl(s, dir, "orders")
       def slice(r: Int) =
         orders.filter(pmod(col("o_orderkey"), lit(3)) === r)
@@ -827,20 +784,15 @@ object SparkEntry {
         fs.setTimes(new org.apache.hadoop.fs.Path(path,
           f"_txlog/$v%020d.manifest"), base + v * 2000L, -1L)
       }
-      ()
     }
-    path
-  }
 
   /** Restored-orders TxTable fixture for the RESTORE query: the three
     * deterministic %3 commits (v0..v2), a merge-on-read DELETE of the
     * urgent orders (v3), then a RESTORE to v1 (v4) — a metadata-only
     * rollback commit that resets the deletion vectors and re-references
     * the v1 file set. The query reads both heads via time travel. */
-  private def stagedRestoredOrders(s: SparkSession, dir: String): String = {
-    val path = s"target/graft-restored-orders/${new java.io.File(dir).getName}"
-    ensureStaged(path) {
-      rmTree(new java.io.File(path))
+  private def stagedRestoredOrders(s: SparkSession, dir: String): String =
+    stagedDir("restored-orders", dir) { path =>
       val orders = tbl(s, dir, "orders")
       def slice(r: Int) =
         orders.filter(pmod(col("o_orderkey"), lit(3)) === r)
@@ -852,20 +804,15 @@ object SparkEntry {
       ops.TxTable.deleteWhereMor(s, path,
         col("o_orderpriority") === "1-URGENT")
       ops.TxTable.restore(s, path, 1L)
-      ()
     }
-    path
-  }
 
   /** Orders as a key-range-clustered TxTable (commit i = the i-th third
     * of the o_orderkey range) with an o_orderkey zone-map sidecar — the
     * layout that makes TopN file pruning bite: `ORDER BY o_orderkey DESC
     * LIMIT n` opens only the files whose recorded (lo, hi) can hold a
     * top-n key (scanned-file counts spec-pinned in TxCatalogSpec). */
-  private def stagedClusteredOrders(s: SparkSession, dir: String): String = {
-    val path = s"target/graft-clustered-orders/${new java.io.File(dir).getName}"
-    ensureStaged(path) {
-      rmTree(new java.io.File(path))
+  private def stagedClusteredOrders(s: SparkSession, dir: String): String =
+    stagedDir("clustered-orders", dir) { path =>
       val orders = tbl(s, dir, "orders")
       val maxKey = orders.agg(max(col("o_orderkey"))).head().getLong(0)
       val (cut1, cut2) = (maxKey / 3, 2 * maxKey / 3)
@@ -882,10 +829,7 @@ object SparkEntry {
       // bloom opt-in on the non-key, unclustered customer column — the
       // membership sidecar ext_bloom_pointread probes
       ops.TxTable.computeBloom(s, path, "o_custkey")
-      ()
     }
-    path
-  }
 
   /** Orders staged as a key-range-clustered TxTable, then retention-swept
     * through pure SQL: `DELETE ... WHERE o_orderkey <= maxKey/3` exactly
@@ -895,11 +839,8 @@ object SparkEntry {
     * zero data files read or rewritten (the 100 TB retention-delete shape;
     * file-identity and null-count guards spec-pinned in TxCatalogSpec).
     * The query reads the surviving table. */
-  private def stagedRetentionOrders(s: SparkSession, dir: String): String = {
-    val path =
-      s"target/graft-retention-orders/${new java.io.File(dir).getName}"
-    ensureStaged(path) {
-      rmTree(new java.io.File(path))
+  private def stagedRetentionOrders(s: SparkSession, dir: String): String =
+    stagedDir("retention-orders", dir) { path =>
       val orders = tbl(s, dir, "orders")
       val maxKey = orders.agg(max(col("o_orderkey"))).head().getLong(0)
       val (cut1, cut2) = (maxKey / 3, 2 * maxKey / 3)
@@ -915,10 +856,7 @@ object SparkEntry {
       ops.TxTable.computeStats(s, path, "o_orderkey")
       ensureTxCatalog(s)
       s.sql(s"DELETE FROM txspj.`$path` WHERE o_orderkey <= $cut1")
-      ()
     }
-    path
-  }
 
   /** Hidden-partitioned events TxTable (the Iceberg partition-transform
     * shape): CREATE declares `PARTITIONED BY (days(ts), bucket(8,
@@ -929,11 +867,8 @@ object SparkEntry {
     * runs on this table): one metadata commit, zero files read or
     * rewritten. The queries time the partition-pruned and post-retention
     * read paths; landing + retention are maintenance work staged here. */
-  private def stagedPartitionedEvents(s: SparkSession, dir: String): String = {
-    val path =
-      s"target/graft-part-events/${new java.io.File(dir).getName}"
-    ensureStaged(path) {
-      rmTree(new java.io.File(path))
+  private def stagedPartitionedEvents(s: SparkSession, dir: String): String =
+    stagedDir("part-events", dir) { path =>
       ensureTxCatalog(s)
       s.sql(s"""CREATE TABLE txspj.`$path` (
         event_id BIGINT, ts TIMESTAMP, user_id BIGINT,
@@ -945,10 +880,7 @@ object SparkEntry {
         .writeTo(s"txspj.`$path`").append()
       s.sql(s"DELETE FROM txspj.`$path` " +
         "WHERE ts < TIMESTAMP '2024-01-10 00:00:00'")
-      ()
     }
-    path
-  }
 
   /** Partition-spec EVOLUTION fixture (the Iceberg v2 shape): the events
     * table is born `PARTITIONED BY (days(ts), bucket(8, user_id))` and
@@ -960,11 +892,8 @@ object SparkEntry {
     * even though the head spec is now months. The query reads across both
     * generations; each file prunes under the spec that placed it
     * (spec-pinned in PartitionEvolutionSpec). */
-  private def stagedEvolvedEvents(s: SparkSession, dir: String): String = {
-    val path =
-      s"target/graft-evolved-events/${new java.io.File(dir).getName}"
-    ensureStaged(path) {
-      rmTree(new java.io.File(path))
+  private def stagedEvolvedEvents(s: SparkSession, dir: String): String =
+    stagedDir("evolved-events", dir) { path =>
       ensureTxCatalog(s)
       s.sql(s"""CREATE TABLE txspj.`$path` (
         event_id BIGINT, ts TIMESTAMP, user_id BIGINT,
@@ -981,10 +910,7 @@ object SparkEntry {
         .writeTo(s"txspj.`$path`").append()
       s.sql(s"DELETE FROM txspj.`$path` " +
         "WHERE ts < TIMESTAMP '2024-01-05 00:00:00'")
-      ()
     }
-    path
-  }
 
   /** Multi-field hidden-partitioning fixture: `PARTITIONED BY (days(ts),
     * identity(event_type), bucket(4, user_id))` nests the categorical
@@ -993,11 +919,8 @@ object SparkEntry {
     * type with `DELETE WHERE event_type = 'error'` — fully covered by
     * the identity envelopes alone: one manifest commit, zero files read
     * or rewritten (spec-pinned in PartitionMultiFieldSpec). */
-  private def stagedMultiPartEvents(s: SparkSession, dir: String): String = {
-    val path =
-      s"target/graft-multipart-events/${new java.io.File(dir).getName}"
-    ensureStaged(path) {
-      rmTree(new java.io.File(path))
+  private def stagedMultiPartEvents(s: SparkSession, dir: String): String =
+    stagedDir("multipart-events", dir) { path =>
       ensureTxCatalog(s)
       s.sql(s"""CREATE TABLE txspj.`$path` (
         event_id BIGINT, ts TIMESTAMP, user_id BIGINT,
@@ -1009,10 +932,7 @@ object SparkEntry {
           col("event_type"), col("value"), col("props"))
         .writeTo(s"txspj.`$path`").append()
       s.sql(s"DELETE FROM txspj.`$path` WHERE event_type = 'error'")
-      ()
     }
-    path
-  }
 
   /** Vacuumed side-index fixture: the documents corpus lands its MinHash
     * band index as a TxTable ([[ops.TxTable.appendIndexOnce]] — the
@@ -1023,11 +943,8 @@ object SparkEntry {
     * The query audits the surviving index; every live document carries
     * exactly `bands`=16 rows, so the oracle reconstructs the shape from
     * the raw documents alone. */
-  private def stagedVacuumedIndex(s: SparkSession, dir: String): String = {
-    val path =
-      s"target/graft-index-vacuum/${new java.io.File(dir).getName}"
-    ensureStaged(path) {
-      rmTree(new java.io.File(path))
+  private def stagedVacuumedIndex(s: SparkSession, dir: String): String =
+    stagedDir("index-vacuum", dir) { path =>
       val docs = tbl(s, dir, "documents")
       val idx = ops.DedupOps.minhashBandIndex(docs)
         .select(col("doc_id"), col("band"), col("bkey"))
@@ -1035,10 +952,7 @@ object SparkEntry {
         appId = "ivx-stage", batchId = 1L)
       ops.DedupOps.vacuumIndex(s, path,
         docs.filter(col("doc_id") % 7 =!= 0).select(col("doc_id")))
-      ()
     }
-    path
-  }
 
   /** Row-tracking audit fixture: a rewrite-heavy history over orders.
     * Init lands two-thirds of the keys, `enableRowTracking` backfills
@@ -1049,12 +963,14 @@ object SparkEntry {
     * must MATERIALIZE through, or the audit's id-range count
     * collapses), and one upsert UPDATES every 7th surviving key
     * (keeping its id, bumping its commit version) while INSERTING a
-    * key-shifted '0-NEW' set (fresh ids past the original range). */
-  private def stagedLineageOrders(s: SparkSession, dir: String): String = {
-    val path =
-      s"target/graft-row-lineage/${new java.io.File(dir).getName}"
-    ensureStaged(path) {
-      rmTree(new java.io.File(path))
+    * key-shifted '0-NEW' set (fresh ids past the original range).
+    * Returns the fixture path and its row-id watermark as of the original
+    * load commits, both from the one compute-once staging. */
+  private val stagedLineage = new Staged[Long]
+
+  private def stagedLineageOrders(s: SparkSession,
+                                  dir: String): (String, Long) =
+    stagedFixture(stagedLineage, "row-lineage", dir) { path =>
       val orders = tbl(s, dir, "orders").select(
         col("o_orderkey").as("k"),
         col("o_orderpriority").as("grp"),
@@ -1069,9 +985,8 @@ object SparkEntry {
       // watermark here equals |orders|) — record it from the manifest
       // PROPERTY, a pure metadata read, so the audit query never needs a
       // count job over the raw fixture
-      stagedLineageWatermarks.put(path,
-        ops.TxTable.snapshot(s, path).props(ops.TxTable.RowWatermarkProp)
-          .toLong)
+      val watermark = ops.TxTable.snapshot(s, path)
+        .props(ops.TxTable.RowWatermarkProp).toLong
       ops.TxTable.deleteWhereMor(s, path, col("k") % 10 === 0)
       ops.TxTable.compact(s, path, maxFilesPerBucket = 1)
       val updates = orders
@@ -1082,10 +997,8 @@ object SparkEntry {
           lit("0-NEW").as("grp"), lit(1.0).as("val"))
       ops.TxTable.upsert(s, path, updates.unionByName(inserts),
         "k", "val", 8)
-      ()
+      watermark
     }
-    path
-  }
 
   /** Equality-delete CDC fixture: orders land whole, then two CDC-style
     * commits run the Iceberg-v2 MOR write shape — batch 1 UPSERTS every
@@ -1096,11 +1009,8 @@ object SparkEntry {
     * anti-join (Scala) / plan-time position fold (DSv2) — the read half
     * of the MOR contract the bench should price. A batch-1 image whose
     * key batch 2 also names dies (its file predates batch 2). */
-  private def stagedEqDeleteOrders(s: SparkSession, dir: String): String = {
-    val path =
-      s"target/graft-eq-delete/${new java.io.File(dir).getName}"
-    ensureStaged(path) {
-      rmTree(new java.io.File(path))
+  private def stagedEqDeleteOrders(s: SparkSession, dir: String): String =
+    stagedDir("eq-delete", dir) { path =>
       val orders = tbl(s, dir, "orders").select(
         col("o_orderkey").as("k"),
         col("o_orderpriority").as("grp"),
@@ -1112,10 +1022,7 @@ object SparkEntry {
         "k", 8, appId = "eqd-stage", batchId = 1L)
       ops.TxTable.deleteWhereEq(s, path,
         orders.filter(col("k") % 13 === 0).select(col("k")))
-      ()
     }
-    path
-  }
 
   /** Streaming CDC equality-delete fixture (ext_cdc_eq): a THREE
     * micro-batch insert/update/delete history replayed through the
@@ -1134,11 +1041,9 @@ object SparkEntry {
     * 1's deletes (their files postdate it), batch 1's deletes kill
     * batch 0's images (they predate it) — last-writer-wins per key,
     * exactly what the oracle replays as CASE/WHERE over raw orders. */
-  private def stagedCdcEqOrders(s: SparkSession, dir: String): String = {
-    val root = s"target/graft-cdc-eq/${new java.io.File(dir).getName}"
-    val path = s"$root/t"
-    ensureStaged(root) {
-      rmTree(new java.io.File(root))
+  private def stagedCdcEqOrders(s: SparkSession, dir: String): String =
+    stagedDir("cdc-eq", dir) { root =>
+      val path = s"$root/t"
       import s.implicits._
       val orders = tbl(s, dir, "orders").select(
         col("o_orderkey").as("k"),
@@ -1168,10 +1073,7 @@ object SparkEntry {
           .as[(Long, String, Double, String)].collect().toSeq)
         q.processAllAvailable()
       } finally q.stop()
-      ()
-    }
-    path
-  }
+    } + "/t"
 
   /** SHARDED-ANCHOR fixture for ext_sharded_read (staged once, with
     * `spark.graft.checkpoint.shardAt` lowered so the sandbox-scale log
@@ -1185,12 +1087,9 @@ object SparkEntry {
     * carried-remove filtering, same-rel re-add survival, DV reads
     * through the reused anchor (round-14 judge ask #3). Staging
     * REFUSES if the anchors did not actually shard. */
-  private def stagedShardedOrders(s: SparkSession, dir: String): String = {
-    val root =
-      s"target/graft-sharded-read/${new java.io.File(dir).getName}"
-    val path = s"$root/t"
-    ensureStaged(root) {
-      rmTree(new java.io.File(root))
+  private def stagedShardedOrders(s: SparkSession, dir: String): String =
+    stagedDir("sharded-read", dir) { root =>
+      val path = s"$root/t"
       val orders = tbl(s, dir, "orders").select(
         col("o_orderkey").as("k"),
         col("o_orderpriority").as("grp"),
@@ -1230,22 +1129,16 @@ object SparkEntry {
         b40.exists(l => l.startsWith("@rm\t") && l.split('\t').length == 3),
         "ext_sharded_read staging: the v40 anchor must REUSE v20 " +
           "shards and carry version-stamped @rm lines")
-      ()
-    }
-    path
-  }
+    } + "/t"
 
   /** 7-commit CDC SOURCE for ext_stream_epochs (staged once): six
     * disjoint upsert slices of orders (keys with k % 6 = j, each
     * stamped val + j·1000) followed by a retention-delete commit
     * (op = 'd' for every 30th key). The QUERY drains this log per
     * invocation — the drain is what the bench times. */
-  private def stagedEpochSource(s: SparkSession, dir: String): String = {
-    val root =
-      s"target/graft-stream-epochs-src/${new java.io.File(dir).getName}"
-    val path = s"$root/src"
-    ensureStaged(root) {
-      rmTree(new java.io.File(root))
+  private def stagedEpochSource(s: SparkSession, dir: String): String =
+    stagedDir("stream-epochs-src", dir) { root =>
+      val path = s"$root/src"
       val orders = tbl(s, dir, "orders").select(
         col("o_orderkey").as("k"),
         col("o_orderpriority").as("grp"),
@@ -1259,10 +1152,7 @@ object SparkEntry {
       ops.TxTable.appendOnce(s, path,
         orders.filter(col("k") % 30 === 0).withColumn("op", lit("d")),
         "k", 8, appId = "epoch-src", batchId = 6L)
-      ()
-    }
-    path
-  }
+    } + "/src"
 
   /** Open-registry OBSERVABILITY fixture for ext_registry_pressure
     * (staged once): two equality-delete registrations over an
@@ -1270,12 +1160,9 @@ object SparkEntry {
     * left UNFOLDED so both maintenance surfaces (the analyze_layout
     * bucket=-1 pressure row and the t#refs eqdelete listing) carry
     * state to report. */
-  private def stagedRegistryOrders(s: SparkSession, dir: String): String = {
-    val root =
-      s"target/graft-registry-refs/${new java.io.File(dir).getName}"
-    val path = s"$root/t"
-    ensureStaged(root) {
-      rmTree(new java.io.File(root))
+  private def stagedRegistryOrders(s: SparkSession, dir: String): String =
+    stagedDir("registry-refs", dir) { root =>
+      val path = s"$root/t"
       val orders = tbl(s, dir, "orders").select(
         col("o_orderkey").as("k"),
         col("o_orderpriority").as("grp"),
@@ -1286,10 +1173,7 @@ object SparkEntry {
         Seq(1L, 2L).toDF("k")) == 2L)
       require(ops.TxTable.deleteWhereEq(s, path,
         Seq(3L, 4L, 5L).toDF("k")) == 3L)
-      ()
-    }
-    path
-  }
+    } + "/t"
 
   /** GENERATED ALWAYS AS orders fixture: the table declares
     * `o_year INT GENERATED ALWAYS AS (year(o_orderdate))` at CREATE and
@@ -1299,11 +1183,8 @@ object SparkEntry {
     * tenth key's order date forward a year (updates RECOMPUTE the
     * generated value; spec matrix in GeneratedColumnSpec). Every stored
     * row carries the computed year; reads serve it as a normal column. */
-  private def stagedGeneratedOrders(s: SparkSession, dir: String): String = {
-    val path =
-      s"target/graft-generated-orders/${new java.io.File(dir).getName}"
-    ensureStaged(path) {
-      rmTree(new java.io.File(path))
+  private def stagedGeneratedOrders(s: SparkSession, dir: String): String =
+    stagedDir("generated-orders", dir) { path =>
       ensureTxCatalog(s)
       s.sql(s"""CREATE TABLE txspj.`$path` (
         o_orderkey BIGINT, o_custkey BIGINT, o_totalprice DOUBLE,
@@ -1330,10 +1211,7 @@ object SparkEntry {
       s.sql(s"""MERGE INTO txspj.`$path` tgt USING gen_orders_shift src
         ON tgt.o_orderkey = src.k
         WHEN MATCHED THEN UPDATE SET o_orderdate = src.nd""")
-      ()
     }
-    path
-  }
 
   /** Shallow-clone divergence fixture: `src` holds the full orders; a
     * zero-copy CLONE (manifest references, no bytes) then diverges on
@@ -1345,12 +1223,9 @@ object SparkEntry {
     * oracle replays only the CLONE-side history over the raw orders, so
     * any leak from the source's divergence (or a vacuum-collected shared
     * file) is a wrong answer, not just a failed spec. */
-  private def stagedClonedOrders(s: SparkSession, dir: String): String = {
-    val src = s"target/graft-clone-src/${new java.io.File(dir).getName}"
-    val dst = s"target/graft-clone-dst/${new java.io.File(dir).getName}"
-    ensureStaged(dst) {
-      rmTree(new java.io.File(src))
-      rmTree(new java.io.File(dst))
+  private def stagedClonedOrders(s: SparkSession, dir: String): String =
+    stagedDir("clone", dir) { root =>
+      val (src, dst) = (s"$root/src", s"$root/dst")
       ensureTxCatalog(s)
       val orders = tbl(s, dir, "orders")
       ops.TxTable.init(s, src, orders, "o_orderkey", 8)
@@ -1365,10 +1240,7 @@ object SparkEntry {
       s.sql(s"DELETE FROM txspj.`$src` WHERE o_orderkey % 2 = 0")
       ops.TxTable.compact(s, src, maxFilesPerBucket = 1)
       ops.TxTable.vacuum(s, src, keepVersions = 1)
-      ()
-    }
-    dst
-  }
+    } + "/dst"
 
   /** A REPLACE WHERE backfill staged over a key-range-clustered orders
     * TxTable: the middle third's rows are atomically replaced with a
@@ -1380,11 +1252,8 @@ object SparkEntry {
     * would rewrite just their remainders (both routes spec-pinned in
     * TxCatalogSpec). The idempotent-backfill shape every production
     * partition reload needs. */
-  private def stagedBackfillOrders(s: SparkSession, dir: String): String = {
-    val path =
-      s"target/graft-backfill-orders/${new java.io.File(dir).getName}"
-    ensureStaged(path) {
-      rmTree(new java.io.File(path))
+  private def stagedBackfillOrders(s: SparkSession, dir: String): String =
+    stagedDir("backfill-orders", dir) { path =>
       val orders = tbl(s, dir, "orders")
       val maxKey = orders.agg(max(col("o_orderkey"))).head().getLong(0)
       val (cut1, cut2) = (maxKey / 3, 2 * maxKey / 3)
@@ -1405,10 +1274,7 @@ object SparkEntry {
         // replaced rows without widening the schema)
         .writeTo(s"txspj.`$path`")
         .overwrite(col("o_orderkey") > cut1 && col("o_orderkey") <= cut2)
-      ()
     }
-    path
-  }
 
   /** Merge-on-read retention fixture for ext_mor_delete: a 3-commit
     * orders TxTable (bucketed by o_orderkey) against which the landing
@@ -1422,10 +1288,8 @@ object SparkEntry {
     * rewriting every touched file. Reads reclaim the bitmap-filter tax at
     * the next compaction, which folds vectors away (spec-pinned in
     * DeletionVectorSpec). */
-  private def stagedMorOrders(s: SparkSession, dir: String): String = {
-    val path = s"target/graft-mor-orders/${new java.io.File(dir).getName}"
-    ensureStaged(path) {
-      rmTree(new java.io.File(path))
+  private def stagedMorOrders(s: SparkSession, dir: String): String =
+    stagedDir("mor-orders", dir) { path =>
       val orders = tbl(s, dir, "orders")
       val maxKey = orders.agg(max(col("o_orderkey"))).head().getLong(0)
       val (cut1, cut2) = (maxKey / 3, 2 * maxKey / 3)
@@ -1442,10 +1306,7 @@ object SparkEntry {
       ensureTxCatalog(s)
       s.sql(s"DELETE FROM txspj.`$path` WHERE o_totalprice < 50000.0")
       s.sql(s"DELETE FROM txspj.`$path` WHERE o_totalprice > 400000.0")
-      ()
     }
-    path
-  }
 
   /** Streaming-source landing for ext_stream_table_source: drains the
     * 3-commit versioned-orders TxTable through the DSv2 MicroBatchStream
@@ -1454,11 +1315,9 @@ object SparkEntry {
     * its id. Landing-job work staged once per session — the query reads
     * the landed result, proving the subscription served exactly the
     * committed slices in commit order. */
-  private def stagedStreamDrain(s: SparkSession, dir: String): String = {
-    val root = s"target/graft-stream-source/${new java.io.File(dir).getName}"
-    val out = s"$root/landed"
-    ensureStaged(root) {
-      rmTree(new java.io.File(root))
+  private def stagedStreamDrain(s: SparkSession, dir: String): String =
+    stagedDir("stream-source", dir) { root =>
+      val out = s"$root/landed"
       ensureTxCatalog(s)
       val src = stagedVersionedOrders(s, dir)
       val q = s.readStream
@@ -1474,9 +1333,7 @@ object SparkEntry {
         }
         .start()
       q.awaitTermination()
-    }
-    out
-  }
+    } + "/landed"
 
   /** Streaming CHANGE-FEED drain fixture (ext_stream_changes): the
     * delete+restore history of [[stagedRestoredOrders]] drained through
@@ -1485,11 +1342,9 @@ object SparkEntry {
     * (inserts, MOR-delete deaths, and restore revivals all arrive as
     * typed rows). The drain is landing work; the query aggregates the
     * landed feed and the oracle replays each commit's change set. */
-  private def stagedChangesDrain(s: SparkSession, dir: String): String = {
-    val root = s"target/graft-changes-drain/${new java.io.File(dir).getName}"
-    val out = s"$root/landed"
-    ensureStaged(root) {
-      rmTree(new java.io.File(root))
+  private def stagedChangesDrain(s: SparkSession, dir: String): String =
+    stagedDir("changes-drain", dir) { root =>
+      val out = s"$root/landed"
       ensureTxCatalog(s)
       val src = stagedRestoredOrders(s, dir)
       val q = s.readStream
@@ -1504,9 +1359,7 @@ object SparkEntry {
         }
         .start()
       q.awaitTermination()
-    }
-    out
-  }
+    } + "/landed"
 
   /** SQL MERGE fixture (ext_sql_merge): a TxTable of the even-keyed
     * orders, then ONE `MERGE INTO` through the catalog applying the
@@ -1515,10 +1368,8 @@ object SparkEntry {
     * source keys hash into (spec-pinned in TxCatalogSpec); the apply is
     * landing-job work staged once per session, the query reads the merged
     * state. */
-  private def stagedMergedOrders(s: SparkSession, dir: String): String = {
-    val path = s"target/graft-merge/${new java.io.File(dir).getName}"
-    ensureStaged(path) {
-      rmTree(new java.io.File(path))
+  private def stagedMergedOrders(s: SparkSession, dir: String): String =
+    stagedDir("merge", dir) { path =>
       ensureTxCatalog(s)
       val orders = tbl(s, dir, "orders")
       ops.TxTable.init(s, path,
@@ -1533,10 +1384,7 @@ object SparkEntry {
            |  t.o_totalprice = t.o_totalprice + 1000.0
            |WHEN NOT MATCHED THEN INSERT *
            |""".stripMargin)
-      ()
     }
-    path
-  }
 
   /** SQL schema-evolution fixture (ext_schema_evolution): a TxTable of
     * the even-keyed orders (o_orderkey, o_orderpriority, o_totalprice),
@@ -1553,10 +1401,8 @@ object SparkEntry {
     * Old files are never rewritten for either evolution — their rows
     * project the new columns as NULL, which the query's NULL-seg group
     * proves value-exactly against the oracle replay. */
-  private def stagedEvolvedOrders(s: SparkSession, dir: String): String = {
-    val path = s"target/graft-evolve/${new java.io.File(dir).getName}"
-    ensureStaged(path) {
-      rmTree(new java.io.File(path))
+  private def stagedEvolvedOrders(s: SparkSession, dir: String): String =
+    stagedDir("evolve", dir) { path =>
       ensureTxCatalog(s)
       val orders = tbl(s, dir, "orders").select(col("o_orderkey"),
         col("o_orderpriority"), col("o_totalprice"))
@@ -1586,20 +1432,15 @@ object SparkEntry {
         case Some(v) => s.conf.set(amKey, v)
         case None => s.conf.unset(amKey)
       }
-      ()
     }
-    path
-  }
 
   /** Column-defaults fixture (ext_column_defaults): a TxTable of the
     * even orders, `ALTER ADD COLUMN o_tier STRING DEFAULT 'std'` (the
     * pre-DDL files never rewrite — readers fill the exists-default),
     * then one INSERT omitting the column (current-default fills) and one
     * with explicit values. */
-  private def stagedDefaultedOrders(s: SparkSession, dir: String): String = {
-    val path = s"target/graft-defaults/${new java.io.File(dir).getName}"
-    ensureStaged(path) {
-      rmTree(new java.io.File(path))
+  private def stagedDefaultedOrders(s: SparkSession, dir: String): String =
+    stagedDir("defaults", dir) { path =>
       ensureTxCatalog(s)
       val orders = tbl(s, dir, "orders").select(col("o_orderkey"),
         col("o_totalprice"))
@@ -1616,20 +1457,15 @@ object SparkEntry {
         .withColumn("o_tier", lit("vip"))
         .createOrReplaceTempView("graft_defaults_vip")
       s.sql(s"INSERT INTO txspj.`$path` SELECT * FROM graft_defaults_vip")
-      ()
     }
-    path
-  }
 
   /** Branch fixture (ext_branch_publish): a TxTable of the even orders,
     * a branch forked at the head, the %3 == 0 odd slice appended TO THE
     * BRANCH via `INSERT INTO t@branch.staging` (invisible on main), then
     * `CALL publish_branch` — one fast-forward main commit. The query
     * reads the published table; the oracle replays the union. */
-  private def stagedBranchOrders(s: SparkSession, dir: String): String = {
-    val path = s"target/graft-branch/${new java.io.File(dir).getName}"
-    ensureStaged(path) {
-      rmTree(new java.io.File(path))
+  private def stagedBranchOrders(s: SparkSession, dir: String): String =
+    stagedDir("branch", dir) { path =>
       ensureTxCatalog(s)
       val orders = tbl(s, dir, "orders").select(col("o_orderkey"),
         col("o_orderpriority"), col("o_totalprice"))
@@ -1647,10 +1483,7 @@ object SparkEntry {
       require(ops.TxTable.snapshot(s, path).version == 0L,
         "branch insert must not advance main")
       s.sql(s"CALL txspj.publish_branch('$path', 'staging')")
-      ()
     }
-    path
-  }
 
   /** Type-widening fixture (ext_type_widening): a TxTable of the even
     * orders with an INT cents column, `ALTER COLUMN … TYPE BIGINT`
@@ -1658,10 +1491,8 @@ object SparkEntry {
     * reader promotes them), then an append of the odd orders whose cents
     * exceed INT range. The query aggregates across the mixed-width files
     * through the catalog; the oracle replays the arithmetic. */
-  private def stagedWidenedOrders(s: SparkSession, dir: String): String = {
-    val path = s"target/graft-widen/${new java.io.File(dir).getName}"
-    ensureStaged(path) {
-      rmTree(new java.io.File(path))
+  private def stagedWidenedOrders(s: SparkSession, dir: String): String =
+    stagedDir("widen", dir) { path =>
       ensureTxCatalog(s)
       val orders = tbl(s, dir, "orders").select(
         col("o_orderkey").as("o_key"),
@@ -1676,10 +1507,7 @@ object SparkEntry {
           .withColumn("o_cents",
             col("o_cents").cast("long") + lit(10000000000L)),
         "o_key", 8, "widen-fixture", 1L)
-      ()
     }
-    path
-  }
 
   /** Delta-MERGE sibling of [[stagedMergedOrders]] (ext_sql_merge_mor):
     * the SAME MERGE statement applied with
@@ -1689,10 +1517,8 @@ object SparkEntry {
     * at 100 TB). The query must produce rows identical to the COW
     * sibling's — both share one oracle replay. Conf saved/restored so
     * staging cannot leak planner state into other queries. */
-  private def stagedDeltaMergedOrders(s: SparkSession, dir: String): String = {
-    val path = s"target/graft-merge-mor/${new java.io.File(dir).getName}"
-    ensureStaged(path) {
-      rmTree(new java.io.File(path))
+  private def stagedDeltaMergedOrders(s: SparkSession, dir: String): String =
+    stagedDir("merge-mor", dir) { path =>
       ensureTxCatalog(s)
       val orders = tbl(s, dir, "orders")
       ops.TxTable.init(s, path,
@@ -1714,19 +1540,14 @@ object SparkEntry {
         case Some(v) => s.conf.set(morKey, v)
         case None => s.conf.unset(morKey)
       }
-      ()
     }
-    path
-  }
 
   /** Incremental distinct-count sketch state (ext_hll_incremental): a
     * 3-commit events TxTable source with the HLL state table maintained
     * through init + two advances — landing-job work staged once per
     * session; the query reads the state. */
-  private def stagedHllState(s: SparkSession, dir: String): String = {
-    val root = s"target/graft-hll-state/${new java.io.File(dir).getName}"
-    ensureStaged(root) {
-      rmTree(new java.io.File(root))
+  private def stagedHllState(s: SparkSession, dir: String): String =
+    stagedDir("hll-state", dir) { root =>
       val ev = tbl(s, dir, "events").select(col("event_type"), col("user_id"))
       def slice(r: Int) = ev.filter(pmod(col("user_id"), lit(3)) === r)
       val src = s"$root/source"
@@ -1740,19 +1561,14 @@ object SparkEntry {
       ops.TxTable.appendOnce(s, src, slice(2), "event_type", 4, "hll-stage", 2L)
       ops.IncrementalOps.advanceDistinct(s, src, st,
         "event_type", "user_id", cur, 4)
-      ()
     }
-    root
-  }
 
   /** Co-bucketed TxTable pair for the storage-partitioned join query:
     * orders and (slim) lineitem committed with the same-count bucket
     * layout on their join keys — the layout identity the DSv2 catalog
     * reports back to the planner. */
   private def stagedSpjTables(s: SparkSession, dir: String): (String, String) = {
-    val root = s"target/graft-spj/${new java.io.File(dir).getName}"
-    ensureStaged(root) {
-      rmTree(new java.io.File(root))
+    val root = stagedDir("spj", dir) { root =>
       ops.TxTable.init(s, s"$root/orders",
         tbl(s, dir, "orders")
           .select(col("o_orderkey"), col("o_orderpriority")),
@@ -1762,10 +1578,22 @@ object SparkEntry {
           .select(col("l_orderkey"), col("l_extendedprice"),
             col("l_discount")),
         key = "l_orderkey", nBuckets = 8)
-      ()
     }
     (s"$root/orders", s"$root/lineitem")
   }
+
+  /** Exact 3-gram Jaccard near-dup pairs (threshold 0.3) over the
+    * 1000-doc slice — the ngram-Jaccard stage's OUTPUT. In a real pipeline
+    * clustering, splitting and election consume the staged pairs table;
+    * they do not re-run the PPJoin. */
+  private def stagedNgramPairs(s: SparkSession, dir: String): String =
+    stagedDir("ngram-pairs", dir) { path =>
+      ops.DedupOps.ngramJaccardPairs(
+          tbl(s, dir, "documents").filter(col("doc_id") < 1000),
+          n = 3, threshold = 0.3)
+        .select(col("doc_a"), col("doc_b"))
+        .write.parquet(path)
+    }
 
   /** The 14-column Gold enrichment over the testdata mapping (the
     * reference's chained four-join topology; gold_enriched query). */
@@ -1781,10 +1609,10 @@ object SparkEntry {
 
   // ----------------------------------------------------------------------
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
     coreQueries ++ extQueries
 
-  def oracleSql: Map[String, String] =
+  lazy val oracleSql: Map[String, String] =
     coreOracles ++ extOracles ++ derivedOracles
 
   /** Oracles composed FROM other oracles (kept out of the literal maps so
@@ -1806,7 +1634,7 @@ object SparkEntry {
       // verbatim; each threshold's pass count is a filtered aggregate
       // over the same 6 dp nll values
       "ext_lm_threshold_sweep" ->
-        s"""WITH scored AS (SELECT * FROM (${extOracles("ext_text_lm_score")}) t),
+        s"""WITH scored AS (SELECT * FROM (${ext("ext_text_lm_score")}) t),
            |thr(threshold) AS (VALUES (1.5), (1.75), (2.0), (2.25), (2.5),
            |                          (2.75), (3.0))
            |SELECT t.threshold,
@@ -1898,7 +1726,7 @@ object SparkEntry {
       // verbatim; the keep rule is the same md5 micro-bucket the Spark
       // side computes, at sample_frac's own 1e-6 quantization
       "ext_mixture_resample" ->
-        s"""WITH plan AS (SELECT * FROM (${extOracles("ext_mixture_weights")}) t)
+        s"""WITH plan AS (SELECT * FROM (${ext("ext_mixture_weights")}) t)
            |SELECT d.doc_id, d.lang, d.n_chars
            |FROM documents d JOIN plan p ON p.stratum = d.lang
            |WHERE CAST(('0x' || substr(md5('mix|' || CAST(d.doc_id AS VARCHAR)), 1, 15)) AS BIGINT) % 1000000
@@ -2245,11 +2073,10 @@ object SparkEntry {
     // recompute restricted to the same window.
     "gold_incremental" -> ((s, dir) => {
       val now = lit(NowEvents).cast("timestamp")
-      val path = incrSilverPath(dir)
       // landing-job work, staged once per (sf, session): the query being
       // timed is the partition-pruned incremental read + refresh, not a
       // rewrite of the whole silver staging table
-      ensureStaged(path) {
+      val path = stagedDir("incr-silver", dir) { path =>
         ops.LayoutOps.writeDatePartitioned(silverActivity(s, dir), path, "ts",
           org.apache.spark.sql.SaveMode.Overwrite)
       }
@@ -2733,11 +2560,10 @@ object SparkEntry {
     // independent of corpus size; whole-corpus minhash is the audit path.
     "ext_dedup_minhash_incr" -> ((s, dir) => {
       val docs = tbl(s, dir, "documents")
-      val idxPath = s"target/graft-minhash-index/${new java.io.File(dir).getName}"
-      ensureStaged(idxPath) {
+      val idxPath = stagedDir("minhash-index", dir) { idxPath =>
         ops.DedupOps.minhashBandIndex(
             docs.filter(pmod(col("doc_id"), lit(5)) =!= 0), portable = true)
-          .write.mode("overwrite").parquet(idxPath)
+          .write.parquet(idxPath)
       }
       ops.DedupOps.minhashNearDupsIncremental(
           docs.filter(pmod(col("doc_id"), lit(5)) === 0),
@@ -3340,8 +3166,7 @@ object SparkEntry {
     "ext_stream_epochs" -> ((s, dir) => {
       val src = stagedEpochSource(s, dir)
       ensureTxCatalog(s)
-      val root =
-        s"target/graft-stream-epochs-run/${new java.io.File(dir).getName}"
+      val root = stagePath("stream-epochs-run", dir)
       rmTree(new java.io.File(root))
       val tgt = s"$root/t"
       ops.TxTable.create(s, tgt, org.apache.spark.sql.types.StructType(Seq(
@@ -3380,12 +3205,11 @@ object SparkEntry {
     // exactly the updated + inserted rows. The oracle predicts all four
     // from the fixture's predicates over the raw orders.
     "ext_row_lineage" -> ((s, dir) => {
-      val path = stagedLineageOrders(s, dir)
       // the original id-allocation boundary comes from the staged table's
       // OWN manifest (graft.rowIdWatermark as of the original load commits,
       // recorded at staging) — honest table metadata, no count job over the
       // raw fixture anywhere in this query's lifetime
-      val n0 = stagedLineageWatermarks.get(path): Long
+      val (path, n0) = stagedLineageOrders(s, dir)
       val lin = ops.TxTable.readLineage(s, path)
       val vmax = lin.agg(max(col("_row_commit_version")).as("__vmax"))
       lin.crossJoin(broadcast(vmax))
@@ -3897,16 +3721,8 @@ object SparkEntry {
     // CTE transitive closure). keep = is_representative.
     "ext_dedup_components" -> ((s, dir) => {
       val docs = tbl(s, dir, "documents").filter(col("doc_id") < 1000)
-      // the near-dup pair list is the ngram-Jaccard stage's OUTPUT — in a
-      // real pipeline CC consumes the staged pairs table, it does not re-run
-      // the PPJoin; stage it once per (sf, session) and read it back
-      val pairsPath =
-        s"target/graft-stage/${new java.io.File(dir).getName}/ngram_pairs"
-      ensureStaged(pairsPath) {
-        ops.DedupOps.ngramJaccardPairs(docs, n = 3, threshold = 0.3)
-          .select(col("doc_a"), col("doc_b"))
-          .write.mode("overwrite").parquet(pairsPath)
-      }
+      // CC consumes the staged pair table; it does not re-run the PPJoin
+      val pairsPath = stagedNgramPairs(s, dir)
       val comp = ops.DedupOps.connectedComponents(s.read.parquet(pairsPath))
       docs.select(col("doc_id"))
         .join(comp, Seq("doc_id"), "left")
@@ -3922,13 +3738,7 @@ object SparkEntry {
     // and CC labels as ext_dedup_components; two tiny rollups on top.
     "ext_dedup_cluster_sizes" -> ((s, dir) => {
       val docs = tbl(s, dir, "documents").filter(col("doc_id") < 1000)
-      val pairsPath =
-        s"target/graft-stage/${new java.io.File(dir).getName}/ngram_pairs"
-      ensureStaged(pairsPath) {
-        ops.DedupOps.ngramJaccardPairs(docs, n = 3, threshold = 0.3)
-          .select(col("doc_a"), col("doc_b"))
-          .write.mode("overwrite").parquet(pairsPath)
-      }
+      val pairsPath = stagedNgramPairs(s, dir)
       val comp = ops.DedupOps.connectedComponents(s.read.parquet(pairsPath))
       docs.select(col("doc_id"))
         .join(comp, Seq("doc_id"), "left")
@@ -3945,13 +3755,7 @@ object SparkEntry {
     // deterministic md5 bucket on the component id (oracle-replayed).
     "ext_split_leakfree" -> ((s, dir) => {
       val docs = tbl(s, dir, "documents").filter(col("doc_id") < 1000)
-      val pairsPath =
-        s"target/graft-stage/${new java.io.File(dir).getName}/ngram_pairs"
-      ensureStaged(pairsPath) {
-        ops.DedupOps.ngramJaccardPairs(docs, n = 3, threshold = 0.3)
-          .select(col("doc_a"), col("doc_b"))
-          .write.mode("overwrite").parquet(pairsPath)
-      }
+      val pairsPath = stagedNgramPairs(s, dir)
       ops.DedupOps.componentSplit(docs, s.read.parquet(pairsPath),
           holdoutPct = 20, salt = "lf")
         .select(col("doc_id"), col("component"), col("split"))
@@ -3966,13 +3770,7 @@ object SparkEntry {
     // recursive CTE and the election with a window (oracle-checked).
     "ext_dedup_canonical" -> ((s, dir) => {
       val docs = tbl(s, dir, "documents").filter(col("doc_id") < 1000)
-      val pairsPath =
-        s"target/graft-stage/${new java.io.File(dir).getName}/ngram_pairs"
-      ensureStaged(pairsPath) {
-        ops.DedupOps.ngramJaccardPairs(docs, n = 3, threshold = 0.3)
-          .select(col("doc_a"), col("doc_b"))
-          .write.mode("overwrite").parquet(pairsPath)
-      }
+      val pairsPath = stagedNgramPairs(s, dir)
       ops.DedupOps.canonicalDocs(docs, s.read.parquet(pairsPath))
         .orderBy(col("doc_id"))
     }),
@@ -4013,10 +3811,9 @@ object SparkEntry {
     // gram text.
     "ext_dedup_excise_incr" -> ((s, dir) => {
       val docs = tbl(s, dir, "documents")
-      val idxPath = spanIndexPath(dir)
-      ensureStaged(idxPath) {
+      val idxPath = stagedDir("span-index", dir) { idxPath =>
         ops.DedupOps.spanGramIndex(docs.filter(col("doc_id") >= 250), k = 8)
-          .write.mode("overwrite").parquet(idxPath)
+          .write.parquet(idxPath)
       }
       ops.DedupOps.exciseAgainstIndex(docs.filter(col("doc_id") < 250),
           s.read.parquet(idxPath), k = 8)
@@ -4430,7 +4227,7 @@ object SparkEntry {
     // full recompute, which is exactly what the DuckDB oracle checks.
     // Re-runs hit the exactly-once watermark and fold nothing.
     "ext_incr_gold" -> ((s, dir) => {
-      val base = s"target/graft-stage/${new java.io.File(dir).getName}"
+      val base = stagePath("stage", dir)
       val srcPath = s"$base/incr_src"
       val statePath = s"$base/incr_state"
       ensureStaged(srcPath) {
@@ -4499,10 +4296,7 @@ object SparkEntry {
     "ext_ingest_funnel" -> ((s, dir) => {
       val docs = tbl(s, dir, "documents")
       val lm = stagedCharLM(s, dir)
-      val root = s"target/graft-ingest-funnel/${new java.io.File(dir).getName}"
-      ensureStaged(root) {
-        val p = new org.apache.hadoop.fs.Path(root)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+      val root = stagedDir("ingest-funnel", dir) { root =>
         (0 until 4).foreach { b =>
           graft.stream.Pipelines.prepIngestBatch(
             docs.filter(pmod(col("doc_id"), lit(4)) === b), b.toLong, lm,
@@ -4535,10 +4329,7 @@ object SparkEntry {
       val docs = tbl(s, dir, "documents")
       val lm = stagedCharLM(s, dir)
       val dref = stagedDriftRef(s, dir)
-      val root = s"target/graft-ingest-drift/${new java.io.File(dir).getName}"
-      ensureStaged(root) {
-        val p = new org.apache.hadoop.fs.Path(root)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+      val root = stagedDir("ingest-drift", dir) { root =>
         (0 until 4).foreach { b =>
           graft.stream.Pipelines.prepIngestBatch(
             docs.filter(pmod(col("doc_id"), lit(4)) === b), b.toLong, lm,

@@ -30,9 +30,7 @@ object Verify {
       }
       // drop caches a query persisted internally — keeps later queries'
       // memory clean (same hygiene as Bench)
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.valuesIterator
-        .foreach(_.unpersist(blocking = false))
+      Sessions.clearCaches(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
