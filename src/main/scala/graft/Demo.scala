@@ -84,7 +84,7 @@ object Demo {
     val rows = if (args.length > 1) args(1).toInt else 600
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
+    val spark = Sessions.tuned(SparkSession.builder())
       .master(s"local[$cpus]")
       .appName("graft-demo")
       .withExtensions(new graft.functions.GraftExtensions)

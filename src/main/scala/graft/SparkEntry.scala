@@ -379,10 +379,13 @@ object SparkEntry {
     RetrievalQueries.toDF("query_id", "query_text")
   }
 
-  /** Staging dir `target/graft-<kind>/<sf dir name>`, inside the build
-    * output tree; keyed by sf dir name so scale factors don't collide. */
-  private def stagePath(kind: String, dir: String): String =
-    s"target/graft-$kind/${new java.io.File(dir).getName}"
+  /** Staging dir `target/graft-<kind>/<sf dir name>-<hash>`, inside the
+    * build output tree. The hash of the absolute sf dir keeps two dirs of
+    * one name (`/a/sf0.01`, `/b/sf0.01`) from sharing a fixture. */
+  private def stagePath(kind: String, dir: String): String = {
+    val abs = new java.io.File(dir).getAbsoluteFile
+    f"target/graft-$kind/${abs.getName}-${abs.getPath.hashCode}%08x"
+  }
 
   /** Persistent BM25 inverted index (TxTable postings bucketed by term),
     * staged once per (sf, session) — index builds are landing-job work;

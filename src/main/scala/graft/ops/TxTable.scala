@@ -3064,12 +3064,16 @@ object TxTable {
         renameParts(base, 0, spec.fields.length)
       case None => renameBuckets(root)
     }
-    val it = fs.listFiles(root, true)
-    val stats = Seq.newBuilder[org.apache.hadoop.fs.FileStatus]
-    while (it.hasNext) {
-      val st = it.next()
-      if (st.getPath.getName.endsWith(".parquet")) stats += st
-    }
+    // plain listStatus, not listFiles: the LocatedFileStatus listFiles
+    // builds reads each file's permission, owner and group, which every
+    // local FileSystem here (graft.io's included) gets by forking `ls -ld`
+    def parquetFiles(dir: Path): Seq[org.apache.hadoop.fs.FileStatus] =
+      fs.listStatus(dir).toSeq.flatMap { st =>
+        if (st.isDirectory) parquetFiles(st.getPath)
+        else if (st.getPath.getName.endsWith(".parquet")) Seq(st)
+        else Nil
+      }
+    val stats = parquetFiles(root)
     val hconf = spark.sparkContext.hadoopConfiguration
     val qrootPath = fs.makeQualified(root).toUri.getPath
     // exact row count from the footer metadata (one small read per newly
@@ -3081,7 +3085,7 @@ object TxTable {
     // rides the same entry (`b:` tagged field) so read planning never
     // re-stats the filesystem — manifest statistics, the Iceberg idea.
     import scala.collection.parallel.CollectionConverters._
-    stats.result().par.map { st =>
+    stats.par.map { st =>
       val b = st.getPath.getParent.getName.stripPrefix("bucket-").toInt
       val rows = scala.util.Try {
         val r = org.apache.parquet.hadoop.ParquetFileReader.open(
@@ -4308,7 +4312,6 @@ object TxTable {
           "(all-null or unprofilable) — pass explicit bounds")
       def toD(a: Any): Double = a match {
         case n: java.lang.Number => n.doubleValue()
-        case d: java.math.BigDecimal => d.doubleValue()
         case other => throw new IllegalArgumentException(
           s"$table: non-numeric zone-map bound $other for '$c'")
       }

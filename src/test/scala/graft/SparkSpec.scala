@@ -2,10 +2,11 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local SparkSession for the whole test JVM (sbt forks one). */
+/** One shared local SparkSession for the whole test JVM (sbt forks one),
+  * built on the drivers' recipe [[Sessions.tuned]]. */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
+    val s = Sessions.tuned(SparkSession.builder())
       .master("local[4]")
       .appName("graft-tests")
       .withExtensions(new graft.functions.GraftExtensions)

@@ -12,7 +12,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The per-session staging memo's contract: compute once per key, a
   * concurrent first touch waits for the value, a failure is retried on the
   * next call (also through SparkEntry's `ensureStaged` fixture gate), and a
-  * compute may stage other keys and other memos. */
+  * compute may stage other keys and other memos. SparkEntry's fixture
+  * dirs are keyed by the absolute sf dir. */
 class StagedSpec extends AnyFunSuite {
 
   test("racing first touches of one key compute once and all get the value") {
@@ -71,6 +72,30 @@ class StagedSpec extends AnyFunSuite {
     SparkEntry.ensureStaged(path) { runs += 1 }
     SparkEntry.ensureStaged(path) { runs += 1 }
     assert(runs == 2)
+  }
+
+  test("two sf dirs of one name stage separate fixtures") {
+    // …/a/sf0.001 holds 200 orders, …/b/sf0.001 the even-keyed half
+    val spark = TestSpark.spark
+    import org.apache.spark.sql.functions._
+    val root = Files.createTempDirectory("graft_sfalias_")
+    val orders = spark.range(1, 201).select(col("id").as("o_orderkey"),
+      (col("id") * 500.0).as("o_totalprice"),
+      concat(lit("P"), col("id") % 3).as("o_orderpriority"))
+    val a = root.resolve("a/sf0.001").toString
+    val b = root.resolve("b/sf0.001").toString
+    orders.write.parquet(s"$a/orders.parquet")
+    orders.filter(col("o_orderkey") % 2 === 0).write.parquet(s"$b/orders.parquet")
+    // ext_rename_evolution reads a staged copy of `orders`; its v0 leg
+    // counts the orders priced in [1000, 50000]
+    def staged(dir: String): Long =
+      SparkEntry.queries("ext_rename_evolution")(spark, dir)
+        .filter("snapshot = 'v0'").agg(sum("n_orders")).head().getLong(0)
+    def direct(dir: String): Long = Tables.load(spark, dir, "orders")
+      .filter("o_totalprice BETWEEN 1000 AND 50000").count()
+    assert(staged(a) == direct(a))
+    assert(direct(b) < direct(a))
+    assert(staged(b) == direct(b), "b's query read the fixture staged from a")
   }
 
   test("a compute may stage other keys and other memos without deadlock") {
