@@ -1,5 +1,7 @@
 package graft.ops
 
+import java.util.concurrent.ConcurrentHashMap
+
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.{Column, DataFrame}
@@ -119,44 +121,56 @@ object BpeOps {
     java.util.Arrays.copyOfRange(syms, 0, len)
   }
 
-  /** PROCESS-WIDE word → tokens memo, one map per merge table (keyed by
-    * the merge array's identity). Word distributions are Zipfian, so the
-    * encode cost of a corpus slice is dominated by its distinct words —
-    * with a per-THREAD memo every one of `local[32]`'s task threads paid
-    * that vocabulary cost again (measured: the ext_bpe_tokens encode stage
-    * burned ~310 ms of executor time PER TASK, near-constant in the rows
-    * per task — 10 s of CPU across 32 tasks for 0.34 s of single-thread
-    * work). Sharing one ConcurrentHashMap makes each distinct word encode
-    * once per executor; `computeIfAbsent` both dedups concurrent encodes of
-    * the same hot word and publishes the result safely (the value array is
-    * written once and never mutated). Bounded; cleared wholesale on
-    * overflow, same policy as before. */
-  private object EncodeCache {
-    private val byTable =
-      new java.util.concurrent.ConcurrentHashMap[AnyRef,
-        java.util.concurrent.ConcurrentHashMap[String, Array[String]]]()
-    def forTable(key: AnyRef)
-        : java.util.concurrent.ConcurrentHashMap[String, Array[String]] = {
-      if (byTable.size > 8) byTable.clear() // stale merge tables (re-staged)
-      byTable.computeIfAbsent(key,
-        _ => new java.util.concurrent.ConcurrentHashMap[String, Array[String]]())
+  /** A merge table keyed by CONTENT: equal merge lists are one key however
+    * many copies exist — each task deserializes its own copy of the UDF
+    * closure, so a key by array identity gave every task a memo of its
+    * own. Each deserialized copy resolves its [[memo]] once, so the
+    * per-row cost is a field read. */
+  private[graft] final case class MergeKey(merges: Seq[(String, String)]) {
+    @transient lazy val memo: ConcurrentHashMap[String, Array[String]] =
+      EncodeCache.forTable(this)
+  }
+
+  /** PROCESS-WIDE word → tokens memo, one map per merge table
+    * ([[MergeKey]]). Word distributions are Zipfian, so the encode cost of
+    * a corpus slice is dominated by its distinct words — with a per-THREAD
+    * memo every one of `local[32]`'s task threads paid that vocabulary
+    * cost again (measured: the ext_bpe_tokens encode stage burned ~310 ms
+    * of executor time PER TASK, near-constant in the rows per task — 10 s
+    * of CPU across 32 tasks for 0.34 s of single-thread work). Sharing one
+    * ConcurrentHashMap makes each distinct word encode once per executor;
+    * `computeIfAbsent` both dedups concurrent encodes of the same hot word
+    * and publishes the result safely (the value array is written once and
+    * never mutated). At most 8 tables are held: inserting one more
+    * evicts the least recently used; a lookup never evicts. */
+  private[graft] object EncodeCache {
+    private val MaxTables = 8
+    private val byTable = new java.util.LinkedHashMap[MergeKey,
+        ConcurrentHashMap[String, Array[String]]](16, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[MergeKey,
+          ConcurrentHashMap[String, Array[String]]]): Boolean =
+        this.size > MaxTables
     }
+    def forTable(key: MergeKey): ConcurrentHashMap[String, Array[String]] =
+      byTable.synchronized(byTable.computeIfAbsent(key,
+        _ => new ConcurrentHashMap[String, Array[String]]()))
   }
 
   /** Row-local BPE encoding of a text column against a learned merge
     * list: per word, start from characters and replay the merges in
     * training order. Returns `array<string>` of sub-word tokens.
     *
-    * Each executor thread keeps a bounded word → tokens memo
-    * (natural-language word distributions are extremely repetitive — the
-    * standard tokenizer token-cache), so steady-state cost is one hash
-    * lookup per word. */
+    * Every task of an equal merge list shares one bounded word → tokens
+    * memo ([[EncodeCache]]; natural-language word distributions are
+    * extremely repetitive — the standard tokenizer token-cache), so
+    * steady-state cost is one hash lookup per word. */
   def bpeEncode(text: Column, merges: Seq[(String, String)]): Column = {
     val as = merges.map(_._1).toArray
     val bs = merges.map(_._2).toArray
     val abs = merges.map { case (a, b) => a + b }.toArray
+    val key = MergeKey(merges)
     val enc = udf { (t: String) =>
-      val memo = EncodeCache.forTable(as)
+      val memo = key.memo
       if (t == null) null
       else t.toLowerCase(java.util.Locale.ROOT).split("\\s+")
         .iterator.filter(_.nonEmpty)

@@ -492,34 +492,33 @@ object DedupOps {
         i => array_join(slice(col("toks"), i + 1, lit(k)), " "))))
       .select(col("doc_id"), col("pos"), col("col").as("g"))
 
-  /** One tokenize + gram-HASH pass over the corpus, persisted in the
-    * 1-row-per-doc form `(doc_id, toks, ghs)` — `ghs(i)` is
-    * `xxhash64(<k-token gram string at position i>)`, bit-identical to
-    * hashing [[gramPositions]]' `g` column. The duplicated-span operators
-    * consume the gram relation two or three times (first-occurrence
-    * aggregate, position probe, token rebuild); without this persist each
-    * consumer re-ran the expensive row-local split + per-position
-    * array_join + hash (measured: three ~32-task stages of 1.4–2.1 s
-    * executor time each on ext_dedup_excise at sf0.1). Persisting the
-    * per-doc ARRAY form keeps the cached footprint O(corpus tokens) longs
-    * — kBs per document, the same convention as [[ngramJaccardPairs]]'
-    * shingle base — never the exploded relation. Eagerly populated so
-    * concurrent downstream stages don't race to fill the cache; released
-    * by the runner's per-query cache clear. */
-  private def gramHashBase(docs: DataFrame, k: Int): DataFrame = {
-    val base = OpsUtil.spread(docs)
+  /** One tokenize + gram-HASH pass over the corpus in the 1-row-per-doc
+    * form `(doc_id, toks, ghs)` — `ghs(i)` is `xxhash64(<k-token gram
+    * string at position i>)`, bit-identical to hashing [[gramPositions]]'
+    * `g` column. The duplicated-span operators consume the gram relation
+    * two or three times (first-occurrence aggregate, position probe, token
+    * rebuild); run per consumer, the row-local split + per-position
+    * array_join + hash cost three ~32-task stages of 1.4–2.1 s executor
+    * time each on ext_dedup_excise at sf0.1. The pass ends in an exchange
+    * on `doc_id` instead of a persist: every consumer's plan holds the
+    * same exchange, which Spark runs once per query and reuses
+    * (`ReusedExchange`), and the token rebuild's doc_id join reads it
+    * without another shuffle. Nothing is cached, so nothing outlives the
+    * query — a persist here was owned by no one, and a stream calling the
+    * excise ops every micro-batch accumulated one per batch. The per-doc
+    * ARRAY form keeps the shuffled bytes O(corpus tokens), never the
+    * exploded relation. */
+  private def gramHashBase(docs: DataFrame, k: Int): DataFrame =
+    OpsUtil.spread(docs)
       .select(col("doc_id"), split(lower(col("text")), "\\s+").as("toks"))
       .withColumn("ghs", when(size(col("toks")) >= k,
         transform(sequence(lit(0), (size(col("toks")) - k).cast("int")),
           i => xxhash64(array_join(slice(col("toks"), i + 1, lit(k)), " "))))
         .otherwise(array().cast("array<long>")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    base.count()
-    base
-  }
+      .repartition(col("doc_id"))
 
   /** The exploded `(gh, doc_id, pos)` view of [[gramHashBase]] — a cheap
-    * projection of the persisted per-doc arrays (docs shorter than k
+    * projection of the per-doc arrays (docs shorter than k
     * grams have an empty array and vanish, same as gramPositions'
     * length filter). */
   private def gramHashPositions(base: DataFrame): DataFrame =
@@ -574,7 +573,7 @@ object DedupOps {
   def duplicatedSpans(docs: DataFrame, k: Int = 8): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
     // both consumers (occurrence count, position probe) read the one
-    // persisted gram-hash pass instead of re-tokenizing the corpus
+    // gram-hash pass instead of re-tokenizing the corpus
     val grams = gramHashPositions(gramHashBase(docs, k))
       .select(col("doc_id"), col("pos"), col("gh"))
     // __ghx (a derived function of gh) is load-bearing, not noise: grouping
@@ -658,7 +657,7 @@ object DedupOps {
   def exciseDuplicatedSpans(docs: DataFrame, k: Int = 8): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
     // all three consumers (first-occurrence aggregate, position probe,
-    // token rebuild) share the one persisted tokenize + gram-hash pass
+    // token rebuild) share the one tokenize + gram-hash pass
     val base = gramHashBase(docs, k)
     rebuildWithoutSpans(base.select(col("doc_id"), col("toks")),
       redundantPositions(gramHashPositions(base)), k)
@@ -708,7 +707,7 @@ object DedupOps {
   def exciseAgainstIndex(batch: DataFrame, index: DataFrame,
                          k: Int = 8): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
-    // shared persisted tokenize + gram-hash pass, as in
+    // shared tokenize + gram-hash pass, as in
     // [[exciseDuplicatedSpans]] (consumers: index probe, within-batch
     // first-occurrence aggregate + position probe, token rebuild)
     val base = gramHashBase(batch, k)

@@ -3102,6 +3102,32 @@ object TxTable {
     }.seq.sortBy(_.rel)
   }
 
+  /** Each bucket in one write task: an exchange on the bucket column puts
+    * each bucket's rows in ONE partition, so a staging lands at most one
+    * file per bucket (per hidden-partition segment) whatever the input's
+    * partitioning — without it a write inherits its input's parallelism
+    * (a streaming micro-batch behind a 4-partition state store landed
+    * 4 × nBuckets files per commit). The streaming sinks stage through it
+    * on every commit and the rewrites ([[compact]], [[purgeDeletes]], …)
+    * through it as their layout, so an append lands the layout compaction
+    * produces — Iceberg's hash write distribution.
+    *
+    * A sink passes its `nBuckets`: the exchange then has at most that many
+    * partitions (no more can hold rows). AQE does not coalesce this
+    * exchange inside a micro-batch, so at the session's 4 shuffle
+    * partitions every 2-bucket streambench commit also ran 2 empty write
+    * tasks; the cap cut the `stream` workload's micro-batch latency p90 by
+    * ~9% (4 alternating pairs, 4-core host). The rewrites leave the count
+    * to the session, so AQE coalesces a small maintenance rewrite into one
+    * task. */
+  private def clusterByBucket(df: DataFrame,
+                              nBuckets: Option[Int] = None): DataFrame =
+    nBuckets.fold(df.repartition(col(LayoutOps.BucketCol))) { n =>
+      df.repartition(
+        math.min(n, df.sparkSession.sessionState.conf.numShufflePartitions),
+        col(LayoutOps.BucketCol))
+    }
+
   /** Stage an already-bucket-tagged frame as new data files (no commit) —
     * the DSv2 overwrite-by-filter path rewrites partially-covered files'
     * remainders through the same writer the Scala paths use, so staged
@@ -3252,7 +3278,8 @@ object TxTable {
       LayoutOps.bucketId(col(key), nBuckets))
     val committed =
       if (isTxTable(spark, table)) {
-        val ok = appendOnce(spark, table, aligned, key, nBuckets, appId, batchId)
+        // appendOnce clusters by bucket itself
+        val ok = appendOnce(spark, table, rows, key, nBuckets, appId, batchId)
         if (autoCompactEvery > 0 &&
             batchId % autoCompactEvery == autoCompactEvery - 1)
           compact(spark, table, maxFilesPerBucket)
@@ -3277,16 +3304,17 @@ object TxTable {
     * and skipped, making parquet-append streaming exactly-once instead of
     * at-least-once. Returns true when the batch committed, false when it
     * was already in the log (replay). Lost commit races re-stage and
-    * retry like [[upsert]]. */
+    * retry like [[upsert]]. Each commit lands at most one file per
+    * bucket ([[clusterByBucket]]). */
   def appendOnce(spark: SparkSession, table: String, batch: DataFrame,
                  key: String, nBuckets: Int, appId: String, batchId: Long,
                  maxRetries: Int = 5): Boolean = {
     val fs = fsFor(spark, table)
     if (lastCommittedBatch(spark, table, appId).exists(_ >= batchId))
       return false
-    val taggedLogical = enforceConstraints(spark, table, batch)
-      .withColumn(LayoutOps.BucketCol,
-        LayoutOps.bucketId(col(key), nBuckets))
+    val taggedLogical = clusterByBucket(enforceConstraints(spark, table,
+      batch).withColumn(LayoutOps.BucketCol,
+        LayoutOps.bucketId(col(key), nBuckets)), Some(nBuckets))
     // staged bytes store PHYSICAL names (column mapping); capture the
     // map used, so a RENAME racing this append restages instead of
     // landing files whose field names drift from the committed map
@@ -3668,7 +3696,8 @@ object TxTable {
     * writes exactly the batch). The appended files carry the commit's
     * own addV, so the batch's delete can never kill the batch's own
     * rows. Exactly-once via the (appId, batchId) replay token, like
-    * [[appendOnce]]. `rows` may be empty (a delete-only batch);
+    * [[appendOnce]], and like it at most one row file per bucket.
+    * `rows` may be empty (a delete-only batch);
     * `deleteKeys`' columns name the equality key. Returns false on a
     * replayed batch. */
   def appendWithEqDelete(spark: SparkSession, table: String,
@@ -3676,31 +3705,21 @@ object TxTable {
                          key: String, nBuckets: Int,
                          appId: String, batchId: Long,
                          maxRetries: Int = 5): Boolean = {
-    def tmark(tag: String, t0: Long): Long = {
-      val t = System.nanoTime()
-      if (sys.env.contains("SPARK_GRAFT_TRACE"))
-        System.err.println(f"[trace] appendEq $tag ${(t - t0) / 1e9}%.3f s")
-      t
-    }
-    var __t = System.nanoTime()
     val fs = fsFor(spark, table)
     if (lastCommittedBatch(spark, table, appId).exists(_ >= batchId))
       return false
-    __t = tmark("lastCommitted", __t)
     val distinctKeys = deleteKeys.na.drop().dropDuplicates()
     var nDel = 0L
-    val taggedLogical = enforceConstraints(spark, table, rows)
-      .withColumn(LayoutOps.BucketCol,
-        LayoutOps.bucketId(col(key), nBuckets))
+    val taggedLogical = clusterByBucket(enforceConstraints(spark, table,
+      rows).withColumn(LayoutOps.BucketCol,
+        LayoutOps.bucketId(col(key), nBuckets)), Some(nBuckets))
     var snapHint = snapshot(spark, table)
     var stagedRenames = snapHint.renames
     def stage(renames: Map[String, String])
         : (Seq[FileEntry], Option[(String, Seq[String])]) = {
       val rn = Snapshot(-1L, Seq.empty, renames = renames)
-      var __ts = System.nanoTime()
       val entries = stageFiles(spark, table, toPhysical(taggedLogical, rn),
         snapHint = Some(snapHint))
-      __ts = tmark("stageRows", __ts)
       // ONE pass over the delete side: stage it and take the exact count
       // from the write's own footers. A zero count (the common
       // insert-only CDC micro-batch) unstages the empty sidecar and
@@ -3709,7 +3728,6 @@ object TxTable {
       val (r, n) = stageEqKeysCounted(spark, table,
         toPhysical(distinctKeys, rn))
       nDel = n
-      __ts = tmark("stageKeys", __ts)
       val del =
         if (n == 0L) {
           fs.delete(new Path(table, r.split('/').take(2).mkString("/")),
@@ -3721,11 +3739,9 @@ object TxTable {
       (entries, del)
     }
     var (newEntries, stagedDel) = stage(stagedRenames)
-    __t = tmark("stage", __t)
     var attempt = 0
     while (true) {
       val snap = snapshot(spark, table)
-      __t = tmark("loopSnapshot", __t)
       if (stagedDel.isDefined) requireEqDeletable(table, snap)
       if (snap.renames != stagedRenames) {
         (newEntries.map(_.rel.split('/')(1)) ++
@@ -3770,7 +3786,6 @@ object TxTable {
                 Snapshot(-1L, Seq.empty, renames = stagedRenames)).schema)),
             bucketing = Some((snap.physicalName(key), nBuckets)),
             props = Some(props))
-        __t = tmark("commit", __t)
         if (committed)
           return true
         attempt += 1
@@ -3930,7 +3945,7 @@ object TxTable {
   def foldEqDeletes(spark: SparkSession, table: String,
                     maxRetries: Int = 5): Int = {
     rewriteWith(spark, table, maxRetries,
-      _.repartition(col(LayoutOps.BucketCol)), 0L,
+      clusterByBucket(_), 0L,
       raceName = "eq-delete fold") { snap =>
       val dels = parseEqDeletes(snap.props)
       val affected = snap.entries.filter(e =>
@@ -4054,11 +4069,8 @@ object TxTable {
               maxFilesPerBucket: Int = 4, maxRetries: Int = 5,
               maxBuckets: Int = Int.MaxValue): Int = {
     require(maxBuckets >= 1, s"maxBuckets must be >= 1, got $maxBuckets")
-    // one exchange on the bucket key → one task per bucket → one file
-    // per bucket; without it the rewrite inherits read parallelism and
-    // can fragment again
     compactWith(spark, table, maxFilesPerBucket, maxRetries,
-      _.repartition(col(LayoutOps.BucketCol)), 0L, maxBuckets)
+      clusterByBucket(_), 0L, maxBuckets)
   }
 
   /** The partition-addressed maintenance verbs take a LONG partition
@@ -4101,7 +4113,7 @@ object TxTable {
     val f0 = head.fields.head
     refuseStringIdentityHead(snap0, f0, s"compact_partition($part)")
     rewriteWith(spark, table, maxRetries,
-      _.repartition(col(LayoutOps.BucketCol)), 0L,
+      clusterByBucket(_), 0L,
       raceName = s"partition-compaction($part)") { snap =>
       val hist = PartitionTransforms.history(snap.props)
       val headSid = hist.length - 1
@@ -4231,7 +4243,7 @@ object TxTable {
     // keep the bucket layout (same co-location guarantees as compact —
     // one task per touched bucket)
     rewriteWith(spark, table, maxRetries,
-      _.repartition(col(LayoutOps.BucketCol)), 0L, raceName = "purge") {
+      clusterByBucket(_), 0L, raceName = "purge") {
       snap =>
         val targets = snap.entries.filter(e => e.dv.exists(d =>
           e.rows.fold(true)(r =>
@@ -5251,7 +5263,7 @@ object TxTable {
       .count(_.rel.startsWith(".."))
     if (shared == 0) return 0
     rewriteWith(spark, target, maxRetries,
-      _.repartition(col(LayoutOps.BucketCol)), 0L,
+      clusterByBucket(_), 0L,
       raceName = "localize") { snap =>
       val targets = snap.entries.filter(_.rel.startsWith(".."))
       (targets, targets.size)

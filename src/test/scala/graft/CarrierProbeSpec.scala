@@ -33,10 +33,11 @@ class CarrierProbeSpec extends AnyFunSuite {
         (0 until 8).map(i => (i.toLong, s"n$i")).toDF("k", "note"),
         "k", 8)
       // 9 more appends x 8 buckets -> ~80 live files, past the
-      // distribution threshold
+      // distribution threshold (an append lands one file per bucket it
+      // touches: 64 keys touch all 8)
       (1 to 9).foreach { a =>
         TxTable.appendOnce(spark, t,
-          (0 until 8).map(i => ((a * 100 + i).toLong, s"n$a-$i"))
+          (0 until 64).map(i => ((a * 100 + i).toLong, s"n$a-$i"))
             .toDF("k", "note"), "k", 8, appId = "cp", batchId = a.toLong)
       }
       val files = TxTable.snapshot(spark, t).entries.size
@@ -54,7 +55,7 @@ class CarrierProbeSpec extends AnyFunSuite {
       TxTable.compact(spark, t, maxFilesPerBucket = 0)
       spark.sql(s"ALTER TABLE txcp.`$t` ADD COLUMN note STRING")
       assert(spark.table(s"txcp.`$t`").filter($"note".isNull).count()
-        == 80)
+        == 8 + 9 * 64)
       assert(TxTable.snapshot(spark, t).dropped.isEmpty)
     }
   }

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.ops.{DedupOps, MultimodalOps, SessionOps, SimilarityOps, TextOps}
+import graft.ops.{BpeOps, DedupOps, MultimodalOps, SessionOps, SimilarityOps, TextOps}
 
 /** Extension operators: recall/precision of the probabilistic dedup + ANN
   * methods against exact baselines on the real sf0.001 tables, plus the
@@ -563,6 +563,46 @@ class ExtOpsSpec extends AnyFunSuite {
       .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
     assert(legacy(1L)._3.isEmpty && legacy(2L)._3.isEmpty,
       s"legacy index should self-excise (documents the defense): $legacy")
+  }
+
+  test("span dedup ops leave no persisted RDD behind; the gram-hash pass runs once per query") {
+    // a landing stream calls exciseAgainstIndex every micro-batch: any
+    // persist the op cannot release accumulates for the stream's lifetime
+    val k = 8
+    val corpus = docs.filter($"doc_id" >= 250)
+    val batch = docs.filter($"doc_id" < 250)
+    val index = DedupOps.spanGramIndex(corpus, k)
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet
+    val baseline = persisted
+    val outs = Seq(DedupOps.exciseAgainstIndex(batch, index, k),
+      DedupOps.exciseDuplicatedSpans(batch, k),
+      DedupOps.duplicatedSpans(batch, k))
+    outs.foreach { df =>
+      assert(df.collect().nonEmpty)
+      assert(persisted == baseline,
+        s"persisted RDDs after the op: ${persisted -- baseline}")
+      // the tokenize + gram-hash exchange is shared by its consumers
+      val plan = df.queryExecution.executedPlan.toString
+      assert(plan.contains("ReusedExchange"), plan.take(4000))
+    }
+  }
+
+  test("BPE encode memo: equal merge tables share one memo across tasks") {
+    val merges = BpeOps.bpeTrain(docs, numMerges = 20)
+    def key = BpeOps.MergeKey(merges.toList)
+    // two separately built (equal-content) merge lists resolve one memo
+    assert(BpeOps.EncodeCache.forTable(key) eq
+      BpeOps.EncodeCache.forTable(BpeOps.MergeKey(merges.toVector)))
+    // the encode UDF's tasks each deserialize their own copy of the
+    // merge table; they still fill the one memo a driver-side key sees
+    val words = docs.repartition(4)
+      .select(BpeOps.bpeEncode($"text", merges).as("t")).collect()
+    assert(words.nonEmpty)
+    val memo = BpeOps.EncodeCache.forTable(key)
+    val vocab = docs.select(explode(split(lower($"text"), "\\s+")))
+      .as[String].collect().filter(_.nonEmpty).toSet
+    assert(vocab.nonEmpty && vocab.forall(memo.containsKey),
+      s"${vocab.count(!memo.containsKey(_))} of ${vocab.size} words missing")
   }
 
   test("exciseAgainstIndex: null owners in a mixed legacy index still count as foreign hits") {

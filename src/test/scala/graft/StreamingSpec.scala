@@ -86,6 +86,37 @@ class StreamingSpec extends AnyFunSuite {
     assert(graft.ops.TxTable.read(spark, table).count() == 4)
   }
 
+  test("appendTx behind the silver dedup lands at most one file per bucket per micro-batch") {
+    // the streambench leg shape: a 4-partition state store (the session's
+    // shuffle partitions) in front of a 2-bucket sink — without bucket
+    // clustering every state partition wrote a file into every bucket
+    implicit val ctx = spark.sqlContext
+    val tmp = Files.createTempDirectory("graft_txcluster_").toString
+    val table = s"$tmp/customer_tx"
+    val in = MemoryStream[CustomerProfile]
+    val batch = (1 to 200).map(i => CustomerProfile(f"C$i%03d", s"n$i",
+      s"u$i@x.com", "Female", 30, "2020-01-01",
+      ts("2024-01-01 00:00:00")))
+    graft.ops.TxTable.init(spark, table, batch.take(1).toDF()
+      .withColumn("signup_date", to_date($"signup_date")), "customer_id",
+      nBuckets = 2)
+    in.addData(batch.drop(1): _*)
+    val q = Pipelines.appendTx(Pipelines.silverCustomer(in.toDF()), table,
+        "customer_id", s"$tmp/ckpt", appId = "cust_stream", nBuckets = 2)
+      .trigger(Trigger.AvailableNow()).start()
+    q.awaitTermination()
+    // per commit (the watermark's no-data batch commits nothing new)
+    def files(v: Long) = graft.ops.TxTable.snapshot(spark, table, Some(v))
+      .entries.map(e => e.rel -> e.bucket).toMap
+    val head = graft.ops.TxTable.snapshot(spark, table).version
+    val added = (1L to head).map(v => (files(v) -- files(v - 1).keys)
+      .values.groupBy(identity).view.mapValues(_.size).toMap)
+    assert(added.contains(Map(0 -> 1, 1 -> 1)) &&
+      added.forall(_.values.forall(_ == 1)), s"files per bucket: $added")
+    assert(graft.ops.TxTable.read(spark, table).select("customer_id")
+      .as[String].collect().sorted.toSeq == batch.map(_.customer_id))
+  }
+
   test("appendTxGated: failing batches divert whole to quarantine, passing batches publish") {
     import graft.ops.ExpectOps
     implicit val ctx = spark.sqlContext

@@ -37,6 +37,34 @@ class TxTableSpec extends AnyFunSuite {
     }
   }
 
+  /** The files version `v` added to `table`, by bucket. */
+  private def addedPerBucket(table: String, v: Long): Map[Int, Int] = {
+    val before = TxTable.snapshot(spark, table, Some(v - 1)).entries
+      .map(_.rel).toSet
+    TxTable.snapshot(spark, table, Some(v)).entries
+      .filterNot(e => before(e.rel)).groupBy(_.bucket)
+      .view.mapValues(_.size).toMap
+  }
+
+  test("sink appends land at most one file per bucket whatever the batch's partitioning") {
+    val table = Files.createTempDirectory("graft_tx_").toString + "/t"
+    TxTable.init(spark, table, seed(1), "customer_id", nBuckets = 2)
+    val batch = seed(200).filter($"customer_id" =!= "C1").repartition(4)
+    assert(batch.rdd.getNumPartitions == 4)
+    assert(TxTable.appendOnce(spark, table, batch, "customer_id", 2,
+      "app", 0L))
+    assert(addedPerBucket(table, 1L) == Map(0 -> 1, 1 -> 1))
+    assert(state(table) == (1 to 200).map(i => s"C$i" -> s"u$i@v1").toMap)
+    // the CDC verb: same bound on its row files
+    val cdc = seed(200).filter($"customer_id".isin("C1", "C2", "C3", "C4"))
+      .withColumn("email", lit("cdc")).repartition(4)
+    assert(TxTable.appendWithEqDelete(spark, table, cdc,
+      cdc.select("customer_id"), "customer_id", 2, "cdc", 0L))
+    assert(addedPerBucket(table, 2L).values.forall(_ == 1))
+    assert(state(table) == (1 to 200).map(i => s"C$i" ->
+      (if (i <= 4) "cdc" else s"u$i@v1")).toMap)
+  }
+
   test("manifests record exact per-file row counts; pre-count manifests parse as unknown") {
     val table = Files.createTempDirectory("graft_tx_").toString + "/t"
     TxTable.init(spark, table, seed(8), "customer_id", nBuckets = 4)
