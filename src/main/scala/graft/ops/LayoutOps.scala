@@ -27,6 +27,21 @@ object LayoutOps {
   def bucketId(key: org.apache.spark.sql.Column, nBuckets: Int): org.apache.spark.sql.Column =
     pmod(xxhash64(key), lit(nBuckets.toLong)).cast("int")
 
+  /** [[bucketId]] for one Catalyst-internal value `v` of type `dt` (the
+    * value a row or a typed literal holds: UTF8String, epoch micros,
+    * Decimal, ...): what the writers' expression computes for that key,
+    * evaluated in plain code on the driver or inside a task. */
+  def bucketOf(v: Any, dt: org.apache.spark.sql.types.DataType,
+               nBuckets: Int): Int =
+    (((bloomHash(v, dt) % nBuckets) + nBuckets) % nBuckets).toInt
+
+  /** `xxhash64(v)` with `functions.xxhash64`'s seed 42 — the hash the
+    * bloom sidecars store and [[bucketOf]] reduces. Type-sensitive: an
+    * INT and a BIGINT of the same value hash differently. */
+  def bloomHash(v: Any, dt: org.apache.spark.sql.types.DataType): Long =
+    org.apache.spark.sql.catalyst.expressions.XxHash64Function
+      .hash(v, dt, 42L)
+
   /** 2-D Morton (Z-order) interleave of two 16-bit values: bit i of `a`
     * lands at position 2i, bit i of `b` at 2i+1, so rows close in BOTH
     * dimensions are close on the curve. Inputs must be in [0, 65535]

@@ -7,6 +7,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
+import graft.sources.TxFilePlanner
+
 /** Transactional parquet table via a manifest commit log — the commit
   * protocol the reference delegates to Delta (`Bronze1.py:148-173` writes
   * Delta tables; SURVEY §1.5 maps them to parquet because the env ships no
@@ -979,7 +981,16 @@ object TxTable {
   private def atomicPublish(fs: FileSystem, table: String, dst: Path,
                             bytes: Array[Byte]): Boolean = {
     fs.mkdirs(logDir(table))
-    val tmp = new Path(logDir(table), s".tmp-${java.util.UUID.randomUUID()}")
+    createExclusive(fs, logDir(table), dst, bytes)
+  }
+
+  /** Create `dst` holding `bytes` iff it does not exist yet, atomically
+    * (the [[atomicPublish]] protocol), staging through `tmpDir` on the
+    * same filesystem. `FileSystem.create(p, overwrite = false)` checks
+    * and then creates, so two racing callers can both succeed there. */
+  private[graft] def createExclusive(fs: FileSystem, tmpDir: Path, dst: Path,
+                                     bytes: Array[Byte]): Boolean = {
+    val tmp = new Path(tmpDir, s".tmp-${java.util.UUID.randomUUID()}")
     val out = fs.create(tmp, true)
     out.write(bytes)
     out.close()
@@ -1332,6 +1343,7 @@ object TxTable {
 
   private[graft] def invalidateSnapshots(table: String): Unit = {
     snapCache.remove(table)
+    graft.sources.TxEqFold.invalidate(table)
     val it = snapByVer.keySet().iterator()
     while (it.hasNext) if (it.next()._1 == table) it.remove()
   }
@@ -1911,22 +1923,23 @@ object TxTable {
     }
     // bucket hashing is TYPE-sensitive (xxhash64 of an Int literal differs
     // from the same value as a Long), so every caller-supplied key is cast
-    // to the table's declared key type BEFORE hashing — a Scala Int passed
-    // against a BIGINT key column would otherwise probe the wrong buckets
-    // and silently return no rows. Schema source: the v2 manifest, else the
-    // files' own footers (v1 tables).
+    // on the driver to the table's declared key type BEFORE the planner
+    // hashes it — a Scala Int passed against a BIGINT key column would
+    // otherwise probe the wrong buckets and silently return no rows.
+    // Schema source: the v2 manifest, else the files' own footers (v1
+    // tables).
     val keyType = snap.schema.getOrElse(read(spark, table, version).schema)
       .find(_.name == physKey).map(_.dataType)
       .getOrElse(throw new IllegalArgumentException(
         s"key column '$key' not in $table schema"))
-    // one tiny local job maps every key through the SAME bucket expression
-    // the writers used (no hand-rolled reimplementation to drift)
-    val wanted: Set[Int] = spark.range(1)
-      .select(explode(array(keys.map(k =>
-        LayoutOps.bucketId(lit(k).cast(keyType), nBuckets)): _*)).as("b"))
-      .distinct().collect().map(_.getInt(0)).toSet
+    import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
+    val tz = Option(spark.sessionState.conf.sessionLocalTimeZone)
+    val probe = keys.map(k => Literal(
+      Cast(Literal(k), keyType, tz).eval(), keyType))
     primeEntries(spark, snap)
-    val hit = snap.entries.filter(e => wanted(e.bucket))
+    val (hit, _) = TxFilePlanner.plan(spark, table,
+      snap.copy(bucketing = Some((physKey, nBuckets))),
+      TxFilePlanner.Probe(Nil, Seq(TxFilePlanner.Eq(physKey, probe))))
     if (hit.isEmpty)
       read(spark, table, version).filter(lit(false))
     else fromPhysical(liveRows(spark, table, snap, hit, snap.schema)
@@ -2807,14 +2820,11 @@ object TxTable {
     // PHYSICAL names (which is why a rename never invalidates a sidecar)
     val physBounds = bounds.map { case (c, lo, hi) =>
       (snap.physicalName(c), lo, hi) }
-    val perCol = physBounds.map { case (c, lo, hi) =>
-      (fileStats(spark, table, c),
-        Seq[graft.sources.TxPruneVerdicts.Bound](
-          (Some((lo, false)), Some((hi, false)))))
-    }
     primeEntries(spark, snap)
-    val kept = snap.entries.filter(e => perCol.forall { case (stats, b) =>
-      graft.sources.TxPruneVerdicts.zoneKeep(stats.get(e.rel), b) })
+    val (kept, _) = TxFilePlanner.plan(spark, table, snap,
+      TxFilePlanner.Probe(physBounds.map { case (c, lo, hi) =>
+        TxFilePlanner.Range(c, Some((lo, false)), Some((hi, false)))
+      }, Nil))
     val pred = physBounds.map { case (c, lo, hi) =>
       col(s"`$c`") >= lit(lo) && col(s"`$c`") <= lit(hi) }.reduce(_ && _)
     if (kept.isEmpty) read(spark, table, version).filter(lit(false))
@@ -3303,9 +3313,9 @@ object TxTable {
     * after a crash between sink write and checkpoint commit) is detected
     * and skipped, making parquet-append streaming exactly-once instead of
     * at-least-once. Returns true when the batch committed, false when it
-    * was already in the log (replay). Lost commit races re-stage and
-    * retry like [[upsert]]. Each commit lands at most one file per
-    * bucket ([[clusterByBucket]]). */
+    * was already in the log (replay) or staged no rows. Lost commit
+    * races re-stage and retry like [[upsert]]. Each commit lands at most
+    * one file per bucket ([[clusterByBucket]]). */
   def appendOnce(spark: SparkSession, table: String, batch: DataFrame,
                  key: String, nBuckets: Int, appId: String, batchId: Long,
                  maxRetries: Int = 5): Boolean = {
@@ -3327,6 +3337,9 @@ object TxTable {
     // (append conflicts auto-resolve — no re-merge, unlike upsert)
     var newEntries = stageFiles(spark, table, tagged,
       snapHint = Some(snapHint))
+    // an empty micro-batch (a watermark's no-data batch) has nothing to
+    // publish: no version, like a replay
+    if (newEntries.isEmpty) return false
     var attempt = 0
     while (true) {
       val snap = snapshot(spark, table)
@@ -3699,7 +3712,7 @@ object TxTable {
     * [[appendOnce]], and like it at most one row file per bucket.
     * `rows` may be empty (a delete-only batch);
     * `deleteKeys`' columns name the equality key. Returns false on a
-    * replayed batch. */
+    * replayed batch, and on one that stages no rows and no keys. */
   def appendWithEqDelete(spark: SparkSession, table: String,
                          rows: DataFrame, deleteKeys: DataFrame,
                          key: String, nBuckets: Int,
@@ -3739,6 +3752,8 @@ object TxTable {
       (entries, del)
     }
     var (newEntries, stagedDel) = stage(stagedRenames)
+    // no rows staged and no key registered: nothing to publish
+    if (newEntries.isEmpty && stagedDel.isEmpty) return false
     var attempt = 0
     while (true) {
       val snap = snapshot(spark, table)

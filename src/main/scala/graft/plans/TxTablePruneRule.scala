@@ -10,30 +10,24 @@ import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFileIndex, LogicalRelation}
 
-/** Catalyst optimizer rule: zone-map file skipping for SQL reads of
-  * [[graft.ops.TxTable]]s.
+import graft.sources.TxFilePlanner
+
+/** Catalyst optimizer rule: file skipping for SQL reads of
+  * [[graft.ops.TxTable]] views.
   *
-  * The Scala surface ([[graft.ops.TxTable.readWhere]] /
-  * [[graft.ops.TxTable.readWhereAll]] / [[graft.ops.TxTable.readKeys]])
-  * consults the per-file (min, max) sidecars and the manifest's bucket
-  * column before opening anything; a `spark.sql` session reading a
-  * registered TxTable view used to get none of that — the relation lists
-  * every committed file and pruning happens only at parquet row-group
-  * level. This rule closes the gap at the optimizer: a `Filter` with
-  * simple range/equality conjuncts over a parquet relation whose files
-  * live under a TxTable root (`<root>/files/...` with `<root>/_txlog`)
-  * is rewritten to scan ONLY the files whose profiled (lo, hi) ranges
-  * overlap every extracted bound — the same never-prune-blind semantics
-  * as `readWhereAll`: unprofiled columns and unknown files never prune,
-  * all-null files cannot satisfy a range predicate and drop, and the
-  * full filter still applies on top, so the rewrite changes I/O, never
-  * rows.
+  * A `spark.sql` session reading a registered TxTable view
+  * ([[graft.ops.TxTable.registerView]]) plans a parquet relation over
+  * every committed file. This rule translates a `Filter` with simple
+  * range/equality conjuncts over such a relation (files under
+  * `<root>/files/...` with `<root>/_txlog`) into a
+  * [[graft.sources.TxFilePlanner]] probe — the same planner, and so the
+  * same zone-map, partition-envelope, bloom and bucket verdicts, as the
+  * catalog scan and the Scala read verbs — and rescans only the kept
+  * files. Every unknown keeps the file, and the full filter still
+  * applies on top, so the rewrite changes I/O, never rows.
   *
-  * Scale shape: the sidecar is O(files) driver metadata read once per
-  * refresh ([[graft.ops.TxTable.fileStats]] caches by modification
-  * time); the rewrite itself touches only the plan. Convergence: when
-  * pruning removes nothing the node is returned unchanged, so the
-  * fixed-point optimizer batch terminates. */
+  * Convergence: when pruning removes nothing the node is returned
+  * unchanged, so the fixed-point optimizer batch terminates. */
 case class TxTablePruneRule(session: SparkSession) extends Rule[LogicalPlan]
     with PredicateHelper {
 
@@ -65,39 +59,48 @@ case class TxTablePruneRule(session: SparkSession) extends Rule[LogicalPlan]
       }
   }
 
-  /** The shared prune kernel: extract bounds/equalities from `cond`
-    * (attribute names mapped through `nameOf` into physical space),
-    * shrink the relation's file list via zone maps + blooms + bucket
-    * identity, and rebuild the Filter over the pruned relation. None =
-    * nothing pruned (caller keeps the original node — fixed-point
-    * safe). */
+  /** Extract the probe from `cond` (attribute names mapped through
+    * `nameOf` into physical space), plan it against the table's newest
+    * snapshot restricted to the relation's files, and rebuild the Filter
+    * over the kept files. None = nothing pruned (caller keeps the
+    * original node — fixed-point safe). */
   private def pruneFilter(f: Filter, cond: Expression,
                           rel: LogicalRelation,
                           nameOf: String => String): Option[Filter] = {
     val hfs = rel.relation.asInstanceOf[HadoopFsRelation]
-    tableRootOf(hfs) match {
-      case Some(root) =>
-        val bounds = extractBounds(cond).map { case (n, lo, hi) =>
-          (nameOf(n), lo, hi) }
-        val eqs = extractEqualities(cond).map { case (n, ls) =>
-          (nameOf(n), ls) }
-        if (bounds.isEmpty && eqs.isEmpty) None
-        else {
-          val current = hfs.location.inputFiles
-          val kept = bucketPruned(root,
-            bloomPruned(root, pruned(root, current, bounds), eqs), eqs)
-          if (kept.length == current.length) None
-          else {
-            val idx = new InMemoryFileIndex(session,
-              kept.map(new Path(_)).toSeq, Map.empty[String, String],
-              Some(hfs.dataSchema))
-            val newHfs = HadoopFsRelation(idx, hfs.partitionSchema,
-              hfs.dataSchema, hfs.bucketSpec, hfs.fileFormat,
-              hfs.options)(session)
-            Some(Filter(cond, rel.copy(relation = newHfs)))
-          }
+    tableRootOf(hfs).flatMap { root =>
+      val probe = TxFilePlanner.Probe(
+        extractBounds(cond).map(r => r.copy(column = nameOf(r.column))),
+        extractEqualities(cond).map(q => q.copy(column = nameOf(q.column))))
+      val snap =
+        if (probe.isEmpty) None
+        else Try(graft.ops.TxTable.cachedSnapshot(session, root)).toOption
+      snap.flatMap { sn =>
+        val current = hfs.location.inputFiles
+        def relOf(f: String): Option[String] = {
+          val cut = f.lastIndexOf("/files/")
+          if (cut < 0) None else Some(f.substring(cut + 1))
         }
-      case None => None
+        // a file the snapshot does not list (a view pinned to an older
+        // version) still prunes by its sidecar rows and path envelope;
+        // its bucket is unknown, which the bucket stage keeps
+        val byRel = sn.entries.map(e => e.rel -> e).toMap
+        val entries = current.toSeq.flatMap(relOf).map(r =>
+          byRel.getOrElse(r, graft.ops.TxTable.FileEntry(-1, r)))
+        val keptRels = TxFilePlanner.plan(session, root,
+          sn.copy(entries = entries), probe)._1.map(_.rel).toSet
+        val kept = current.filter(f => relOf(f).forall(keptRels))
+        if (kept.length == current.length) None
+        else {
+          val idx = new InMemoryFileIndex(session,
+            kept.map(new Path(_)).toSeq, Map.empty[String, String],
+            Some(hfs.dataSchema))
+          val newHfs = HadoopFsRelation(idx, hfs.partitionSchema,
+            hfs.dataSchema, hfs.bucketSpec, hfs.fileFormat,
+            hfs.options)(session)
+          Some(Filter(cond, rel.copy(relation = newHfs)))
+        }
+      }
     }
   }
 
@@ -125,156 +128,54 @@ case class TxTablePruneRule(session: SparkSession) extends Rule[LogicalPlan]
   }
 
   /** Simple single-column bounds from the filter's conjuncts, in EXTERNAL
-    * Scala types (the sidecars hold external values): inclusive bounds
-    * from >= / <= / =, and the strict forms used inclusively — pruning
-    * may only over-keep, never over-drop. Anything non-literal or
-    * non-attribute is ignored (it still filters rows, just not files). */
-  private def extractBounds(
-      cond: Expression): Seq[(String, Option[Any], Option[Any])] = {
+    * Scala types (the sidecars hold external values), with their
+    * strictness. Anything non-literal or non-attribute is ignored (it
+    * still filters rows, just not files). */
+  private def extractBounds(cond: Expression): Seq[TxFilePlanner.Range] = {
     def ext(l: Literal): Option[Any] =
       Option(l.value).map(CatalystTypeConverters.convertToScala(_, l.dataType))
+    def lo(a: AttributeReference, l: Literal, strict: Boolean) =
+      ext(l).map(v => TxFilePlanner.Range(a.name, Some((v, strict)), None))
+    def hi(a: AttributeReference, l: Literal, strict: Boolean) =
+      ext(l).map(v => TxFilePlanner.Range(a.name, None, Some((v, strict))))
+    type A = AttributeReference
     splitConjunctivePredicates(cond).flatMap {
-      case GreaterThanOrEqual(a: AttributeReference, l: Literal) =>
-        ext(l).map(v => (a.name, Some(v), None))
-      case GreaterThan(a: AttributeReference, l: Literal) =>
-        ext(l).map(v => (a.name, Some(v), None))
-      case LessThanOrEqual(a: AttributeReference, l: Literal) =>
-        ext(l).map(v => (a.name, None, Some(v)))
-      case LessThan(a: AttributeReference, l: Literal) =>
-        ext(l).map(v => (a.name, None, Some(v)))
-      case EqualTo(a: AttributeReference, l: Literal) =>
-        ext(l).map(v => (a.name, Some(v), Some(v)))
-      case GreaterThanOrEqual(l: Literal, a: AttributeReference) =>
-        ext(l).map(v => (a.name, None, Some(v)))
-      case GreaterThan(l: Literal, a: AttributeReference) =>
-        ext(l).map(v => (a.name, None, Some(v)))
-      case LessThanOrEqual(l: Literal, a: AttributeReference) =>
-        ext(l).map(v => (a.name, Some(v), None))
-      case LessThan(l: Literal, a: AttributeReference) =>
-        ext(l).map(v => (a.name, Some(v), None))
-      case EqualTo(l: Literal, a: AttributeReference) =>
-        ext(l).map(v => (a.name, Some(v), Some(v)))
+      case GreaterThanOrEqual(a: A, l: Literal) => lo(a, l, false)
+      case GreaterThan(a: A, l: Literal) => lo(a, l, true)
+      case LessThanOrEqual(a: A, l: Literal) => hi(a, l, false)
+      case LessThan(a: A, l: Literal) => hi(a, l, true)
+      case GreaterThanOrEqual(l: Literal, a: A) => hi(a, l, false)
+      case GreaterThan(l: Literal, a: A) => hi(a, l, true)
+      case LessThanOrEqual(l: Literal, a: A) => lo(a, l, false)
+      case LessThan(l: Literal, a: A) => lo(a, l, true)
+      case EqualTo(a: A, l: Literal) =>
+        ext(l).map(v => TxFilePlanner.Range(a.name, Some((v, false)),
+          Some((v, false))))
+      case EqualTo(l: Literal, a: A) =>
+        ext(l).map(v => TxFilePlanner.Range(a.name, Some((v, false)),
+          Some((v, false))))
       case _ => None
     }
   }
 
   /** Equality / IN literals per column, kept as CATALYST literals: the
-    * bucket hash must run on exactly the internal value the writer's
-    * `pmod(xxhash64(key), n)` saw (UTF8String for strings, micros for
-    * timestamps), and the analyzer has already cast the literal to the
+    * bucket and bloom hashes must run on exactly the internal value the
+    * writers hashed, and the analyzer has already cast the literal to the
     * column's type. */
-  private def extractEqualities(
-      cond: Expression): Map[String, Seq[Literal]] =
+  private def extractEqualities(cond: Expression): Seq[TxFilePlanner.Eq] =
     splitConjunctivePredicates(cond).flatMap {
       case EqualTo(a: AttributeReference, l: Literal) if l.value != null =>
-        Some(a.name -> Seq(l))
+        Some(TxFilePlanner.Eq(a.name, Seq(l)))
       case EqualTo(l: Literal, a: AttributeReference) if l.value != null =>
-        Some(a.name -> Seq(l))
+        Some(TxFilePlanner.Eq(a.name, Seq(l)))
       case In(a: AttributeReference, vs)
           if vs.nonEmpty && vs.forall {
             case l: Literal => l.value != null; case _ => false } =>
-        Some(a.name -> vs.map(_.asInstanceOf[Literal]))
+        Some(TxFilePlanner.Eq(a.name, vs.map(_.asInstanceOf[Literal])))
       case InSet(a: AttributeReference, hset) if !hset.contains(null) =>
-        Some(a.name -> hset.toSeq.map(Literal(_, a.dataType)))
+        Some(TxFilePlanner.Eq(a.name, hset.toSeq.map(Literal(_, a.dataType))))
       case _ => None
-    }.toMap
-
-  /** Manifest-level BUCKET pruning — the SQL analog of
-    * [[graft.ops.TxTable.readKeys]], enabled by the bucket identity the
-    * commit log records: an equality/IN predicate on the table's bucket
-    * key keeps only the files of the buckets the probed values hash
-    * into. The hash is the writer's own expression
-    * (`pmod(xxhash64(key), n)`) evaluated driver-side on the Catalyst
-    * literal, so it can never drift from the layout. Tables whose log
-    * predates identity recording (bucketing = None) never prune. */
-  private def bucketPruned(root: String, files: Array[String],
-                           eqs: Map[String, Seq[Literal]]): Array[String] = {
-    if (eqs.isEmpty) return files
-    val snap = Try(graft.ops.TxTable.cachedSnapshot(session, root))
-      .getOrElse(return files)
-    snap.bucketing match {
-      case Some((key, n)) if eqs.contains(key) =>
-        // seed 42 = functions.xxhash64's default — the writer's expression
-        val wanted: Set[Int] = eqs(key).flatMap { l =>
-          Try(Pmod(XxHash64(Seq(l), 42L), Literal(n.toLong))
-            .eval(null).asInstanceOf[Long].toInt).toOption
-        }.toSet
-        if (wanted.isEmpty) files
-        else {
-          val bucketOf: Map[String, Int] =
-            snap.entries.map(e => e.rel -> e.bucket).toMap
-          files.filter { f =>
-            val cut = f.lastIndexOf("/files/")
-            if (cut < 0) true
-            else bucketOf.get(f.substring(cut + 1)) match {
-              case Some(b) => wanted(b)
-              case None => true // unknown file (other snapshot): keep
-            }
-          }
-        }
-      case _ => files
     }
-  }
-
-  /** Bloom membership pruning — the SQL-view analog of the catalog
-    * scan's probe: equality/IN on a bloom-profiled column keeps only the
-    * files whose filter might contain one of the probed values. The hash
-    * is the writer's own xxhash64 evaluated on the CATALYST literal
-    * (exactly the value the executors hashed when building the filter);
-    * unknown files and unhashable values never prune, false positives
-    * only over-keep. */
-  private def bloomPruned(root: String, files: Array[String],
-                          eqs: Map[String, Seq[Literal]]): Array[String] = {
-    if (eqs.isEmpty) return files
-    var kept = files
-    eqs.foreach { case (c, lits) =>
-      val blooms = Try(graft.ops.TxTable.fileBlooms(session, root, c))
-        .getOrElse(Map.empty[String,
-          org.apache.spark.util.sketch.BloomFilter])
-      if (blooms.nonEmpty) {
-        val hs = lits.flatMap(l =>
-          Try(XxHash64(Seq(l), 42L).eval(null).asInstanceOf[Long]).toOption)
-        if (hs.nonEmpty && hs.size == lits.size) {
-          kept = kept.filter { f =>
-            val cut = f.lastIndexOf("/files/")
-            if (cut < 0) true
-            else blooms.get(f.substring(cut + 1))
-              .forall(b => hs.exists(b.mightContainLong))
-          }
-        }
-      }
-    }
-    kept
-  }
-
-  private def pruned(root: String, files: Array[String],
-                     bounds: Seq[(String, Option[Any], Option[Any])]): Array[String] = {
-    val perCol = bounds.groupBy(_._1).map { case (c, bs) =>
-      (graft.ops.TxTable.fileStats(session, root, c), bs)
-    }.filter(_._1.nonEmpty) // unprofiled columns never prune
-    if (perCol.isEmpty) files
-    else files.filter { f =>
-      val cut = f.lastIndexOf("/files/")
-      if (cut < 0) true
-      else {
-        val rel = f.substring(cut + 1)
-        perCol.forall { case (stats, bs) =>
-          stats.get(rel) match {
-            case Some((l, h)) if l != null && h != null =>
-              bs.forall { case (_, lo, hi) =>
-                Try {
-                  lo.forall(v => graft.ops.TxTable.cmpAny(h, v) >= 0) &&
-                    hi.forall(v => graft.ops.TxTable.cmpAny(l, v) <= 0)
-                }.getOrElse(true) // incomparable types: never prune blind
-              }
-            case Some((l, h)) if l == null && h == null =>
-              false // all-null file: a range predicate cannot select it
-            case _ => true // unknown file (post-refresh append): keep
-          }
-        }
-      }
-    }
-  }
 }
 
 object TxTablePruneRule {

@@ -98,8 +98,10 @@ private[graft] object TxPruneVerdicts extends Serializable {
   * deletion-vector machinery (bitmap payloads, row-based degraded
   * reads, position-exact synthesis). Memoized per (table, version) —
   * a snapshot's registry is immutable, and commitNext GCs entries as
-  * rewrites fold them, so the steady state pays nothing. */
-private[sources] object TxEqFold {
+  * rewrites fold them, so the steady state pays nothing. A re-create at
+  * the same path reuses version numbers, so [[TxTable.invalidateSnapshots]]
+  * clears the table's memo through [[invalidate]]. */
+private[graft] object TxEqFold {
   import org.roaringbitmap.RoaringBitmap
 
   import graft.ops.DeletionVectors
@@ -111,6 +113,12 @@ private[sources] object TxEqFold {
           e: java.util.Map.Entry[(String, Long),
             Map[String, (String, Array[Byte])]]): Boolean = size() > 64
     })
+
+  /** Forget every memoized fold of `path`. */
+  def invalidate(path: String): Unit = cache.synchronized {
+    cache.keySet().removeIf(_._1 == path)
+    ()
+  }
 
   /** Per-MANIFEST-rel (cache key, serialized bitmap) of the rows the
     * snapshot's registry kills — empty when the registry is. */
@@ -228,24 +236,167 @@ private[sources] object TxEqFold {
   }
 }
 
+/** THE file-pruning planner: every TxTable read surface (the DSv2 scan's
+  * static and runtime filters, the SQL-view optimizer rule, `readWhereAll`,
+  * `readKeys`) translates its predicate into a [[TxFilePlanner.Probe]] in
+  * PHYSICAL column names and asks this object which of a snapshot's files
+  * may hold a matching row. The probe's stages (zone maps, hidden-partition
+  * envelopes per generation, blooms, bucket identity) are built ONCE here;
+  * below `spark.graft.planning.distributeAt` files the driver walks them
+  * over the entry list, past it [[TxDistributedPrune]] evaluates the SAME
+  * stage object as one Spark job. Every unknown keeps the file. */
+private[graft] object TxFilePlanner {
+  import org.apache.spark.sql.catalyst.CatalystTypeConverters
+  import org.apache.spark.sql.catalyst.expressions.Literal
+  import org.apache.spark.util.sketch.BloomFilter
+
+  import graft.ops.LayoutOps
+
+  /** A range bound on one column: (value, strict?) per side, values in
+    * EXTERNAL Scala types (what the zone-map sidecars hold). `tag` names
+    * the caller's source predicate for [[plan]]'s used set. */
+  final case class Range(column: String, lo: Option[(Any, Boolean)],
+                         hi: Option[(Any, Boolean)], tag: Int = -1)
+
+  /** Equality / IN on one column, values as Catalyst literals of the
+    * column's type — exactly what the writers hashed (UTF8String for
+    * strings, micros for timestamps). */
+  final case class Eq(column: String, values: Seq[Literal], tag: Int = -1)
+
+  final case class Probe(ranges: Seq[Range], eqs: Seq[Eq]) {
+    def isEmpty: Boolean = ranges.isEmpty && eqs.isEmpty
+  }
+
+  /** Zone-map stage: all range bounds over one sidecar-profiled column. */
+  final case class ZoneStage(column: String, bs: Seq[TxPruneVerdicts.Bound])
+
+  /** Bloom stage: pre-hashed probe values for one bloom-profiled column. */
+  final case class BloomStage(column: String, hashes: Seq[Long])
+
+  /** Partition-envelope stage over the snapshot's spec history. */
+  final case class EnvStage(hist: IndexedSeq[PartitionTransforms.Spec],
+                            bs: Seq[(String, TxPruneVerdicts.Bound)],
+                            pe: Seq[(String, Seq[Any])])
+
+  /** The per-query stage context both evaluation paths run. */
+  final case class Stages(zones: Seq[ZoneStage], env: Option[EnvStage],
+                          blooms: Seq[BloomStage],
+                          buckets: Seq[Set[Int]]) {
+    def isEmpty: Boolean =
+      zones.isEmpty && env.isEmpty && blooms.isEmpty && buckets.isEmpty
+
+    /** The conjunction of every stage's verdict for one file; `zone(i)`
+      * / `bloom(i)` are the file's rows in the i-th zone / bloom
+      * sidecar (None = unknown to the sidecar), and a negative `bucket`
+      * is an unknown one. */
+    def keep(rel: String, bucket: Int, zone: Int => Option[(Any, Any)],
+             bloom: Int => Option[BloomFilter]): Boolean =
+      (bucket < 0 || buckets.forall(_.contains(bucket))) &&
+        zones.indices.forall(i =>
+          TxPruneVerdicts.zoneKeep(zone(i), zones(i).bs)) &&
+        env.forall(e =>
+          TxPruneVerdicts.envelopeKeep(rel, e.hist, e.bs, e.pe)) &&
+        blooms.indices.forall(i =>
+          bloom(i).forall(TxPruneVerdicts.bloomKeep(_, blooms(i).hashes)))
+  }
+
+  /** The entries of `snap` that may hold a row matching `probe`, and the
+    * tags of the probe items some stage used. Bucket identity comes from
+    * `snap.bucketing`. An empty stage set returns `snap.entries` as is. */
+  def plan(spark: SparkSession, path: String, snap: TxTable.Snapshot,
+           probe: Probe): (Seq[TxTable.FileEntry], Set[Int]) = {
+    val (st, used) = stages(spark, path, snap, probe)
+    val kept =
+      if (st.isEmpty) snap.entries
+      else if (snap.entries.size >= TxDistributedPrune.threshold(spark))
+        snap.entries match {
+          // shard-backed: the job reads entry lines from the checkpoint's
+          // shard files and only the survivors come back
+          case le: TxTable.LazyEntries =>
+            TxDistributedPrune.runSharded(spark, path, le, st)
+          case es =>
+            val keptRels = TxDistributedPrune.run(spark, path, es, st)
+            es.filter(e => keptRels(e.rel))
+        }
+      else {
+        val zoneMaps = st.zones.map(z => TxTable.fileStats(spark, path,
+          z.column))
+        val bloomMaps = st.blooms.map(b => TxTable.fileBlooms(spark, path,
+          b.column))
+        TxTable.primeEntries(spark, snap).entries.filter(e =>
+          st.keep(e.rel, e.bucket, i => zoneMaps(i).get(e.rel),
+            i => bloomMaps(i).get(e.rel)))
+      }
+    (kept, used)
+  }
+
+  /** Build the stages: a zone stage per column with a stats sidecar, one
+    * envelope stage over the partition source columns, a bloom stage per
+    * equality on a bloom-profiled column, a bucket stage per equality on
+    * the bucket key. Presence is one filesystem stat per sidecar; a value
+    * that cannot be hashed disables its stage (it could live anywhere). */
+  private def stages(spark: SparkSession, path: String,
+                     snap: TxTable.Snapshot,
+                     probe: Probe): (Stages, Set[Int]) = {
+    val used = Set.newBuilder[Int]
+    val zones = probe.ranges.groupBy(_.column).toSeq.sortBy(_._1).flatMap {
+      case (c, rs) =>
+        if (Try(TxTable.statsMtime(spark, path, c)).getOrElse(-1L) < 0)
+          None
+        else {
+          used ++= rs.map(_.tag)
+          Some(ZoneStage(c, rs.map(r => (r.lo, r.hi))))
+        }
+    }
+    val hist = PartitionTransforms.history(snap.props)
+    val partCols = hist.flatMap(_.fields.map(_.column)).toSet
+    val ebs = probe.ranges.filter(r => partCols(r.column))
+    val epe = probe.eqs.filter(q => partCols(q.column))
+    val env =
+      if (hist.isEmpty || (ebs.isEmpty && epe.isEmpty)) None
+      else {
+        used ++= ebs.map(_.tag) ++ epe.map(_.tag)
+        Some(EnvStage(hist, ebs.map(r => (r.column, (r.lo, r.hi))),
+          epe.map(q => (q.column, q.values.map(l =>
+            CatalystTypeConverters.convertToScala(l.value, l.dataType))))))
+      }
+    def hashAll[H](q: Eq)(h: Literal => H): Option[Seq[H]] = {
+      val hs = q.values.flatMap(l => Try(h(l)).toOption)
+      if (hs.nonEmpty && hs.size == q.values.size) {
+        used += q.tag
+        Some(hs)
+      } else None
+    }
+    val blooms = probe.eqs.flatMap { q =>
+      if (!Try(TxTable.bloomExists(spark, path, q.column)).getOrElse(false))
+        None
+      else hashAll(q)(l => LayoutOps.bloomHash(l.value, l.dataType))
+        .map(BloomStage(q.column, _))
+    }
+    val buckets = snap.bucketing.toSeq.flatMap { case (key, n) =>
+      probe.eqs.filter(_.column == key).flatMap(q =>
+        hashAll(q)(l => LayoutOps.bucketOf(l.value, l.dataType, n))
+          .map(_.toSet))
+    }
+    (Stages(zones, env, blooms, buckets), used.result())
+  }
+}
+
 /** Distributed scan planning (the public Iceberg idea): past a
-  * file-count threshold the per-file pruning verdicts evaluate as a
-  * SPARK JOB over the manifest's entry set instead of a driver-side
-  * O(files) walk — the driver ships only the tiny per-query context
-  * (bounds, probe hashes, spec history), executors read the zone-map /
-  * bloom sidecars directly (never collected into driver maps) and join
-  * them to the entries on `rel`, and only the KEPT rels return to the
-  * driver. At 10⁸ files the driver's planning work drops from "compare
-  * every file against every bound, after collecting every sidecar row"
-  * to "serialize the entry list + receive the survivors".
+  * file-count threshold [[TxFilePlanner]]'s stages evaluate as a SPARK
+  * JOB over the manifest's entry set instead of a driver-side O(files)
+  * walk — the driver ships only the tiny per-query stage context,
+  * executors read the zone-map / bloom sidecars directly (never collected
+  * into driver maps) and join them to the entries on `rel`, and only the
+  * KEPT rels return to the driver.
   *
   * Engaged when `snap.entries.size >= spark.graft.planning.distributeAt`
   * (default 100000 — sandbox-scale tables never pay the job-scheduling
-  * overhead; a 100 TB table's scans always amortize it). The verdicts
-  * themselves are [[TxPruneVerdicts]] — the same functions the driver
-  * walk calls — so the two paths cannot diverge on semantics, and the
-  * parity spec pins equality of the kept set file for file. */
+  * overhead; a 100 TB table's scans always amortize it). The job calls
+  * [[TxFilePlanner.Stages.keep]], the same verdict the driver walk calls,
+  * so the two paths keep the same files. */
 private[graft] object TxDistributedPrune {
+  import TxFilePlanner.Stages
 
   val DistributeAtConf = "spark.graft.planning.distributeAt"
   val DefaultDistributeAt = 100000
@@ -257,43 +408,22 @@ private[graft] object TxDistributedPrune {
     Try(spark.conf.get(DistributeAtConf).toInt)
       .getOrElse(DefaultDistributeAt)
 
-  /** Zone-map stage context: all range bounds over one sidecar-profiled
-    * column. */
-  final case class ZoneStage(column: String,
-                             bs: Seq[TxPruneVerdicts.Bound])
-
-  /** Bloom stage context: pre-hashed probe values for one
-    * bloom-profiled column. */
-  final case class BloomStage(column: String, hashes: Seq[Long])
-
-  /** Partition-envelope stage context (empty hist ⇒ stage inactive). */
-  final case class EnvStage(hist: IndexedSeq[PartitionTransforms.Spec],
-                            bs: Seq[(String, TxPruneVerdicts.Bound)],
-                            pe: Seq[(String, Seq[Any])])
-
-  /** Evaluate all stages as one Spark job; returns the kept rels. */
+  /** Evaluate `st` as one Spark job; returns the kept rels. */
   def run(spark: SparkSession, path: String,
-          entries: Seq[TxTable.FileEntry],
-          zones: Seq[ZoneStage], env: Option[EnvStage],
-          blooms: Seq[BloomStage],
-          bucketSets: Seq[Set[Int]]): Set[String] = {
+          entries: Seq[TxTable.FileEntry], st: Stages): Set[String] = {
     import spark.implicits._
     val df = entries.map(e => (e.rel, e.bucket)).toDF("__rel", "__bucket")
-    evaluate(spark, path, df, zones, env, blooms, bucketSets)
+    evaluate(spark, path, df, st)
       .select(col("__rel")).as[String].collect().toSet
   }
 
-  /** [[run]] for a SHARD-BACKED snapshot (round-14 ask #2): the entry
-    * lines parse EXECUTOR-side straight from the checkpoint's shard
-    * files — the driver ships only shard paths + the O(interval) net
-    * delta changes, and receives back the SURVIVORS as full entries.
-    * At 10⁸ files the driver's planning memory drops from "every
-    * FileEntry" to "the kept set". */
+  /** [[run]] for a SHARD-BACKED snapshot: the entry lines parse
+    * EXECUTOR-side straight from the checkpoint's shard files — the
+    * driver ships only shard paths + the O(interval) net delta changes,
+    * and receives back the SURVIVORS as full entries. */
   def runSharded(spark: SparkSession, path: String,
                  le: TxTable.LazyEntries,
-                 zones: Seq[ZoneStage], env: Option[EnvStage],
-                 blooms: Seq[BloomStage],
-                 bucketSets: Seq[Set[Int]]): Seq[TxTable.FileEntry] = {
+                 st: Stages): Seq[TxTable.FileEntry] = {
     import spark.implicits._
     val sh = le.shards
     // removes are versioned (see ShardedEntries): a rel is dead in a
@@ -318,29 +448,26 @@ private[graft] object TxDistributedPrune {
     val addDf = spark.createDataset(
       sh.adds.map(e => (e.rel, e.bucket, TxTable.renderEntryLine(e))))
     val entryDf = shardDf.union(addDf).toDF("__rel", "__bucket", "__line")
-    evaluate(spark, path, entryDf, zones, env, blooms, bucketSets)
+    evaluate(spark, path, entryDf, st)
       .select(col("__line")).as[String].collect()
       .map(TxTable.parseEntryLine(_)).toSeq
       .sortBy(e => (e.bucket, e.rel))
   }
 
-  /** The shared verdict pipeline behind [[run]] and [[runSharded]]:
-    * sidecar joins + one mapPartitions filter over whatever entry frame
-    * the caller built. Extra input columns (the sharded path's `__line`)
-    * pass through untouched. */
+  /** The job behind [[run]] and [[runSharded]]: one left join per
+    * sidecar-profiled column, then one mapPartitions filter running
+    * [[TxFilePlanner.Stages.keep]] over whatever entry frame the caller
+    * built. Extra input columns (the sharded path's `__line`) pass
+    * through untouched. */
   private def evaluate(spark: SparkSession, path: String,
-                       entryDf: DataFrame,
-                       zones: Seq[ZoneStage], env: Option[EnvStage],
-                       blooms: Seq[BloomStage],
-                       bucketSets: Seq[Set[Int]]): DataFrame = {
+                       entryDf: DataFrame, st: Stages): DataFrame = {
     runs.incrementAndGet()
     var df = entryDf
-    // one left join per sidecar-profiled column: the sidecar parquet is
-    // read DISTRIBUTED (rel, lo, hi / rel, bloom) — duplicates from
-    // racing refresh appends carry identical values by construction
-    // (immutable files, deterministic footers), so an arbitrary
-    // dropDuplicates pick matches the driver path's preference dedup
-    zones.zipWithIndex.foreach { case (z, i) =>
+    // the sidecar parquet is read DISTRIBUTED (rel, lo, hi / rel, bloom);
+    // duplicates from racing refresh appends carry identical values by
+    // construction (immutable files, deterministic footers), so an
+    // arbitrary dropDuplicates pick matches the driver path's dedup
+    st.zones.zipWithIndex.foreach { case (z, i) =>
       val sp = TxTable.statsPath(path, z.column).toString
       val s = spark.read.parquet(sp)
         .select(col("rel").as(s"__zr$i"), col("lo").as(s"__lo$i"),
@@ -350,7 +477,7 @@ private[graft] object TxDistributedPrune {
       df = df.join(s, df("__rel") === s(s"__zr$i"), "left")
         .drop(s"__zr$i")
     }
-    blooms.zipWithIndex.foreach { case (b, i) =>
+    st.blooms.zipWithIndex.foreach { case (b, i) =>
       val sp = TxTable.bloomPath(path, b.column).toString
       val s = spark.read.parquet(sp)
         .select(col("rel").as(s"__br$i"), col("bloom").as(s"__bm$i"))
@@ -361,30 +488,19 @@ private[graft] object TxDistributedPrune {
     val schema = df.schema
     val relIdx = schema.fieldIndex("__rel")
     val bucketIdx = schema.fieldIndex("__bucket")
-    val zIdx = zones.indices.map(i => (schema.fieldIndex(s"__lo$i"),
+    val zIdx = st.zones.indices.map(i => (schema.fieldIndex(s"__lo$i"),
       schema.fieldIndex(s"__hi$i"), schema.fieldIndex(s"__zs$i")))
-    val bmIdx = blooms.indices.map(i => schema.fieldIndex(s"__bm$i"))
-    val zonesB = zones.map(_.bs)
-    val envB = env
-    val bloomHashes = blooms.map(_.hashes)
-    val bucketsB = bucketSets
+    val bmIdx = st.blooms.indices.map(i => schema.fieldIndex(s"__bm$i"))
     df.mapPartitions { it =>
       it.filter { r =>
-        val bucket = r.getInt(bucketIdx)
-        val rel = r.getString(relIdx)
-        bucketsB.forall(_.contains(bucket)) &&
-          zonesB.zip(zIdx).forall { case (bs, (li, hi, si)) =>
-            val stat =
-              if (r.isNullAt(si)) None else Some((r.get(li), r.get(hi)))
-            TxPruneVerdicts.zoneKeep(stat, bs)
-          } &&
-          envB.forall(e =>
-            TxPruneVerdicts.envelopeKeep(rel, e.hist, e.bs, e.pe)) &&
-          bloomHashes.zip(bmIdx).forall { case (hs, bi) =>
-            r.isNullAt(bi) || TxPruneVerdicts.bloomKeep(
-              org.apache.spark.util.sketch.BloomFilter.readFrom(
-                r.getAs[Array[Byte]](bi)), hs)
-          }
+        st.keep(r.getString(relIdx), r.getInt(bucketIdx),
+          i => {
+            val (li, hi, si) = zIdx(i)
+            if (r.isNullAt(si)) None else Some((r.get(li), r.get(hi)))
+          },
+          i => if (r.isNullAt(bmIdx(i))) None
+            else Some(org.apache.spark.util.sketch.BloomFilter.readFrom(
+              r.getAs[Array[Byte]](bmIdx(i)))))
       }
     }(org.apache.spark.sql.Encoders.row(schema))
       .toDF()

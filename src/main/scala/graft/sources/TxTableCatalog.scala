@@ -6,7 +6,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.{NoSuchFunctionException, NoSuchTableException}
-import org.apache.spark.sql.catalyst.expressions.{Literal, XxHash64}
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.catalog.functions.{BoundFunction, ScalarFunction, UnboundFunction}
 import org.apache.spark.sql.connector.expressions.{Expressions, Transform}
@@ -457,12 +457,9 @@ class TxTableCatalog extends TableCatalog with FunctionCatalog
       val loc = Option(properties.get(TableCatalog.PROP_LOCATION))
         .getOrElse((warehouse.get +: segs).mkString("/"))
       fs.mkdirs(bp.getParent)
-      val claimed = scala.util.Try {
-        val out = fs.create(bp, false) // overwrite=false: the CAS
-        out.write(loc.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        out.close()
-        true
-      }.getOrElse(false)
+      val claimed = scala.util.Try(TxTable.createExclusive(fs, bp.getParent,
+        bp, loc.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
+        .getOrElse(false)
       if (!claimed)
         throw new org.apache.spark.sql.catalyst.analysis
           .TableAlreadyExistsException(ident)
@@ -1747,7 +1744,7 @@ final class TxScanBuilder(path: String, snap: TxTable.Snapshot,
     // to Spark stay LOGICAL — they re-evaluate on the scan's output rows
     allFilters = filters.map(TxFilterNames.rename(_, snap.physicalName))
     val (k, used) = TxCatalogPruning.prune(SparkSession.active, path, snap,
-      bucketing, dataSchema, allFilters)
+      dataSchema, allFilters)
     kept = k
     prunedBy = used
     filters
@@ -1763,7 +1760,7 @@ final class TxScanBuilder(path: String, snap: TxTable.Snapshot,
     case Some((schema, row)) =>
       new TxLocalAggScan(path, snap.version, schema, row)
     case None =>
-      new TxScan(path, snap.copy(entries = kept), bucketing, dataSchema,
+      new TxScan(path, snap, kept, bucketing, dataSchema,
         required, pinnedVersion, options, allFilters)
   }
 }
@@ -2348,7 +2345,6 @@ private[sources] object TxColumnStats {
 private[sources] object TxGeneratedDerivation {
   import scala.util.Try
 
-  import org.apache.spark.sql.sources.Filter
   import org.apache.spark.sql.types.{DateType, IntegerType, LongType}
 
   /** Supported shapes of this snapshot: (fn, source PHYSICAL name,
@@ -2405,13 +2401,11 @@ private[sources] object TxGeneratedDerivation {
   }
 
   /** Derived pruning bounds over the generated columns, one per source-
-    * column bound whose shape supports derivation. Derived tuples carry
-    * the ORIGINAL filter (for used-marking) and are pruning-only. */
+    * column bound whose shape supports derivation. Derived bounds carry
+    * the ORIGINAL bound's tag (for used-marking) and are pruning-only. */
   def deriveBounds(spark: SparkSession, snap: TxTable.Snapshot,
-                   direct: Seq[(String, Option[(Any, Boolean)],
-                     Option[(Any, Boolean)], Filter)])
-      : Seq[(String, Option[(Any, Boolean)],
-          Option[(Any, Boolean)], Filter)] = {
+                   direct: Seq[TxFilePlanner.Range])
+      : Seq[TxFilePlanner.Range] = {
     val sh = Try(shapes(spark, snap)).getOrElse(Seq.empty)
     if (sh.isEmpty) return Seq.empty
     def genValue(fn: String,
@@ -2433,7 +2427,7 @@ private[sources] object TxGeneratedDerivation {
           case _ => None
         }
       }
-    direct.flatMap { case (c, lo, hi, f) =>
+    direct.flatMap { case TxFilePlanner.Range(c, lo, hi, tag) =>
       sh.filter(_._2 == c).flatMap { case (fn, _, gname, dt) =>
         // derived bounds are never strict: f(v) is the widened unit
         // containing v, and rows equal to the boundary unit must stay
@@ -2442,7 +2436,7 @@ private[sources] object TxGeneratedDerivation {
         val ghi = hi.flatMap { case (v, _) =>
           genValue(fn, dt, v, widen = +1).map(gv => (gv, false)) }
         if (glo.isEmpty && ghi.isEmpty) Seq.empty
-        else Seq((gname, glo, ghi, f))
+        else Seq(TxFilePlanner.Range(gname, glo, ghi, tag))
       }
     }
   }
@@ -2451,215 +2445,54 @@ private[sources] object TxGeneratedDerivation {
 private[sources] object TxCatalogPruning {
   import scala.util.Try
 
-  import org.apache.spark.sql.catalyst.expressions.{Literal, Pmod, XxHash64}
   import org.apache.spark.sql.sources._
 
+  import TxFilePlanner.{Eq, Probe, Range}
+
+  /** Translate pushed filters (PHYSICAL names) into the planner's probe;
+    * returns the kept entries and the filters that pruned. Strictness
+    * matters when a bound ALIGNS with a file envelope edge — the common
+    * case for hidden partitions (`ts < 'day boundary'` must prune that
+    * day), and equally sound for zone maps (min == v under `col < v`
+    * holds no matching row). */
   def prune(spark: SparkSession, path: String, snap: TxTable.Snapshot,
-            bucketing: (String, Int), schema: StructType,
-            filters: Array[Filter])
+            schema: StructType, filters: Array[Filter])
       : (Seq[TxTable.FileEntry], Array[Filter]) = {
-    // (column, lower bound + strict?, upper bound + strict?, source
-    // filter). Strictness matters when a bound ALIGNS with a file
-    // envelope edge — the common case for hidden partitions (`ts <
-    // 'day boundary'` must prune that day), and equally sound for zone
-    // maps (min == v under `col < v` holds no matching row).
-    val directBounds: Seq[(String, Option[(Any, Boolean)],
-        Option[(Any, Boolean)], Filter)] =
-      filters.toSeq.flatMap {
-        case f @ GreaterThanOrEqual(c, v) =>
-          Seq((c, Some((v, false)), None, f: Filter))
-        case f @ GreaterThan(c, v) =>
-          Seq((c, Some((v, true)), None, f: Filter))
-        case f @ LessThanOrEqual(c, v) =>
-          Seq((c, None, Some((v, false)), f: Filter))
-        case f @ LessThan(c, v) =>
-          Seq((c, None, Some((v, true)), f: Filter))
-        case f @ EqualTo(c, v) if v != null =>
-          Seq((c, Some((v, false)), Some((v, false)), f: Filter))
-        case _ => Seq.empty
-      }
+    val direct: Seq[Range] = filters.toSeq.zipWithIndex.flatMap {
+      case (GreaterThanOrEqual(c, v), i) =>
+        Seq(Range(c, Some((v, false)), None, i))
+      case (GreaterThan(c, v), i) => Seq(Range(c, Some((v, true)), None, i))
+      case (LessThanOrEqual(c, v), i) =>
+        Seq(Range(c, None, Some((v, false)), i))
+      case (LessThan(c, v), i) => Seq(Range(c, None, Some((v, true)), i))
+      case (EqualTo(c, v), i) if v != null =>
+        Seq(Range(c, Some((v, false)), Some((v, false)), i))
+      case _ => Seq.empty
+    }
     // generated-column predicate DERIVATION (the Delta trick): a bound
     // on the RAW source column implies a bound on a GENERATED column
     // through a monotone generation expression — `o_orderdate >= X`
     // implies `o_year >= year(X) − margin` — so filters written only on
     // the source column still prune by the generated column's zone maps
-    // and hidden-partition envelopes below. Derived bounds ride the
-    // ORIGINAL filter for used-marking and never reach the row filter
-    // (pruning-only, always sound to over-keep).
-    val bounds = directBounds ++
-      TxGeneratedDerivation.deriveBounds(spark, snap, directBounds)
-    val eqs: Seq[(String, Seq[Any], Filter)] = filters.toSeq.flatMap {
-      case f @ EqualTo(c, v) if v != null => Seq((c, Seq(v), f: Filter))
-      case f @ In(c, vs) if vs.nonEmpty && !vs.contains(null) =>
-        Seq((c, vs.toSeq, f: Filter))
+    // and hidden-partition envelopes. Derived bounds carry the ORIGINAL
+    // filter's tag and never reach the row filter (pruning-only).
+    val ranges = direct ++ TxGeneratedDerivation.deriveBounds(spark, snap,
+      direct)
+    // equality/IN values become literals of the column's catalyst type:
+    // the value the writers' hash saw
+    val eqs: Seq[Eq] = filters.toSeq.zipWithIndex.flatMap {
+      case (EqualTo(c, v), i) if v != null => Seq((c, Seq(v), i))
+      case (In(c, vs), i) if vs.nonEmpty && !vs.contains(null) =>
+        Seq((c, vs.toSeq, i))
       case _ => Seq.empty
+    }.flatMap { case (c, vs, i) =>
+      schema.fields.find(_.name == c).flatMap { f =>
+        Try(vs.map(Literal.create(_, f.dataType))).toOption
+      }.map(Eq(c, _, i))
     }
-
-    var kept = snap.entries
-    val used = Seq.newBuilder[Filter]
-
-    // distributed scan planning (the Iceberg idea): past the file-count
-    // threshold the per-file verdicts run as ONE Spark job over the
-    // manifest entries — sidecars are read executor-side and joined on
-    // rel, never collected into driver maps, and only the kept rels
-    // return. The job and the driver walk below share a single verdict
-    // implementation ([[TxPruneVerdicts]]), so the kept set is identical
-    // by construction; TxDistributedPlanningSpec pins it file for file.
-    if (snap.entries.size >= TxDistributedPrune.threshold(spark)) {
-      val zoneStages = bounds.groupBy(_._1).toSeq.sortBy(_._1).flatMap {
-        case (c, bs) =>
-          // presence probe only (one fs stat) — no driver-side map build
-          if (Try(TxTable.statsMtime(spark, path, c)).getOrElse(-1L) < 0)
-            None
-          else {
-            bs.foreach(b => used += b._4)
-            Some(TxDistributedPrune.ZoneStage(c,
-              bs.map(b => (b._2, b._3))))
-          }
-      }
-      val hist = graft.ops.PartitionTransforms.history(snap.props)
-      val partCols: Set[String] =
-        hist.flatMap(_.fields.map(_.column)).toSet
-      val ebs = bounds.filter(b => partCols(b._1))
-      val epe = eqs.filter(x => partCols(x._1))
-      val env =
-        if (hist.nonEmpty && (ebs.nonEmpty || epe.nonEmpty)) {
-          ebs.foreach(b => used += b._4)
-          epe.foreach(x => used += x._3)
-          Some(TxDistributedPrune.EnvStage(hist,
-            ebs.map(b => (b._1, (b._2, b._3))),
-            epe.map(x => (x._1, x._2))))
-        } else None
-      val bloomStages = eqs.flatMap { case (c, vs, f) =>
-        if (!Try(TxTable.bloomExists(spark, path, c)).getOrElse(false))
-          None
-        else schema.fields.find(_.name == c).map(_.dataType)
-          .flatMap { t =>
-            val hashed: Seq[Option[Long]] = vs.map(v =>
-              Try(XxHash64(Seq(Literal.create(v, t)), 42L)
-                .eval(null).asInstanceOf[Long]).toOption)
-            if (hashed.nonEmpty && hashed.forall(_.isDefined)) {
-              used += f
-              Some(TxDistributedPrune.BloomStage(c, hashed.flatten))
-            } else None
-          }
-      }
-      val (dKey, dN) = bucketing
-      val bucketSets = eqs.filter(_._1 == dKey).flatMap {
-        case (_, vs, f) =>
-          schema.fields.find(_.name == dKey).map(_.dataType)
-            .flatMap { t =>
-              val hashed: Seq[Option[Int]] = vs.map { v =>
-                Try(Pmod(XxHash64(Seq(Literal.create(v, t)), 42L),
-                  Literal(dN.toLong)).eval(null)
-                  .asInstanceOf[Long].toInt).toOption
-              }
-              if (hashed.nonEmpty && hashed.forall(_.isDefined)) {
-                used += f
-                Some(hashed.flatten.toSet)
-              } else None
-            }
-      }
-      if (zoneStages.nonEmpty || env.nonEmpty || bloomStages.nonEmpty ||
-          bucketSets.nonEmpty) {
-        kept = snap.entries match {
-          // shard-backed snapshot: the job reads entry lines straight
-          // from the checkpoint's shard files executor-side and only
-          // the SURVIVORS come back — the driver never materializes
-          // the full entry list (round-14 ask #2)
-          case le: TxTable.LazyEntries =>
-            TxDistributedPrune.runSharded(spark, path, le,
-              zoneStages, env, bloomStages, bucketSets)
-          case es =>
-            val keptRels = TxDistributedPrune.run(spark, path, es,
-              zoneStages, env, bloomStages, bucketSets)
-            es.filter(e => keptRels(e.rel))
-        }
-      }
-      return (kept, used.result().distinct.toArray)
-    }
-
-    // zone-map sidecars: every bound over a profiled column must overlap
-    val perCol = bounds.groupBy(_._1).toSeq.map { case (c, bs) =>
-      (TxTable.fileStats(spark, path, c), bs)
-    }.filter(_._1.nonEmpty)
-    if (perCol.nonEmpty) {
-      perCol.foreach { case (_, bs) => bs.foreach(b => used += b._4) }
-      kept = kept.filter { e =>
-        perCol.forall { case (stats, bs) =>
-          TxPruneVerdicts.zoneKeep(stats.get(e.rel),
-            bs.map(b => (b._2, b._3)))
-        }
-      }
-    }
-
-    // hidden-partition envelopes: a file staged under partition segments
-    // holds ONLY rows whose transform values match, so each segment is an
-    // exact (lo, hi) envelope for ITS source column — conjunctive
-    // partition pruning with zero sidecar I/O, independent of ANALYZE.
-    // Every file resolves under the spec that PLACED it (history +
-    // `spec-<sid>/` stamp), so mixed generations after an ALTER evolution
-    // each prune under their own envelopes. Pre-partitioning files,
-    // part-null segments, and unknown sids have no envelope and are
-    // always kept (over-keep, never wrong).
-    {
-      val hist = graft.ops.PartitionTransforms.history(snap.props)
-      val partCols: Set[String] =
-        hist.flatMap(_.fields.map(_.column)).toSet
-      val bs = bounds.filter(b => partCols(b._1))
-      val pe = eqs.filter(x => partCols(x._1))
-      if (hist.nonEmpty && (bs.nonEmpty || pe.nonEmpty)) {
-        bs.foreach(b => used += b._4)
-        pe.foreach(x => used += x._3)
-        val ebs = bs.map(b => (b._1, (b._2, b._3)))
-        val epe = pe.map(x => (x._1, x._2))
-        kept = kept.filter(e =>
-          TxPruneVerdicts.envelopeKeep(e.rel, hist, ebs, epe))
-      }
-    }
-
-    // bloom sidecars: equality/IN on a bloom-profiled column keeps only
-    // files whose filter might contain one of the probed values — the
-    // membership structure for point lookups on NON-key, unclustered
-    // columns. Unknown files and unhashable values never prune; a false
-    // positive only over-keeps.
-    eqs.foreach { case (c, vs, f) =>
-      val blooms = TxTable.fileBlooms(spark, path, c)
-      if (blooms.nonEmpty) {
-        schema.fields.find(_.name == c).map(_.dataType).foreach { t =>
-          val hashed: Seq[Option[Long]] = vs.map(v =>
-            Try(XxHash64(Seq(Literal.create(v, t)), 42L)
-              .eval(null).asInstanceOf[Long]).toOption)
-          if (hashed.nonEmpty && hashed.forall(_.isDefined)) {
-            val hs = hashed.flatten
-            used += f
-            kept = kept.filter(e => blooms.get(e.rel)
-              .forall(b => TxPruneVerdicts.bloomKeep(b, hs)))
-          }
-        }
-      }
-    }
-
-    // manifest bucket identity: equality/IN on the bucket key keeps only
-    // the probed buckets' files — the writer's own hash, evaluated on the
-    // value converted through the column's catalyst type
-    val (key, n) = bucketing
-    eqs.filter(_._1 == key).foreach { case (_, vs, f) =>
-      val dt = schema.fields.find(_.name == key).map(_.dataType)
-      dt.foreach { t =>
-        val hashed: Seq[Option[Int]] = vs.map { v =>
-          Try(Pmod(XxHash64(Seq(Literal.create(v, t)), 42L),
-            Literal(n.toLong)).eval(null).asInstanceOf[Long].toInt).toOption
-        }
-        // any value we failed to hash could live in any bucket → no prune
-        if (hashed.nonEmpty && hashed.forall(_.isDefined)) {
-          val wanted = hashed.flatten.toSet
-          used += f
-          kept = kept.filter(e => wanted(e.bucket))
-        }
-      }
-    }
-    (kept, used.result().distinct.toArray)
+    val (kept, used) = TxFilePlanner.plan(spark, path, snap,
+      Probe(ranges, eqs))
+    (kept, filters.zipWithIndex.collect { case (f, i) if used(i) => f })
   }
 }
 
@@ -2667,8 +2500,11 @@ private[sources] object TxCatalogPruning {
   * manifest's files — no listing, no footer merging), read through the
   * stock vectorized parquet reader, partitioning reported as
   * `bucket(n, key)` so joins/aggregations on the bucket key plan without
-  * an exchange. */
+  * an exchange. `snap` is the whole version (the equality-delete fold is
+  * memoized per version, so it must see every file); `kept` is the
+  * statically pruned subset this scan serves. */
 final class TxScan(path: String, snap: TxTable.Snapshot,
+                   kept: Seq[TxTable.FileEntry],
                    bucketing: (String, Int), dataSchema: StructType,
                    required: StructType,
                    pinnedVersion: Option[Long] = None,
@@ -2682,15 +2518,13 @@ final class TxScan(path: String, snap: TxTable.Snapshot,
 
   /** Files this scan serves: the statically pruned snapshot, further
     * shrunk by runtime (dynamic-pruning) filters before execution. */
-  @volatile private var entries: Seq[TxTable.FileEntry] = snap.entries
+  @volatile private var entries: Seq[TxTable.FileEntry] = kept
 
   /** `required` is PHYSICAL (what readers ask the files for); Spark's
     * plan attributes are LOGICAL — positionally identical, names only. */
   private val logicalRequired: StructType =
     StructType(required.fields.map(f => f.copy(name = snap.logicalName(f.name))))
   private val logicalKey: String = snap.logicalName(bucketing._1)
-  private val logicalDataSchema: StructType =
-    StructType(dataSchema.fields.map(f => f.copy(name = snap.logicalName(f.name))))
 
   override def readSchema(): StructType = logicalRequired
   override def toBatch: Batch = this
@@ -2740,7 +2574,8 @@ final class TxScan(path: String, snap: TxTable.Snapshot,
         org.apache.spark.sql.connector.read.colstats.ColumnStatistics] =
       if (!spark.sessionState.conf.cboEnabled)
         java.util.Collections.emptyMap()
-      else TxColumnStats.forEntries(spark, path, snap, entries)
+      else TxColumnStats.forEntries(spark, path,
+        snap.copy(entries = entries), entries)
     // unfolded equality deletes make liveRows an overcount — report
     // rows unknown rather than a wrong exact number (CBO estimates
     // degrade gracefully; a wrong broadcast decision would not)
@@ -2772,11 +2607,8 @@ final class TxScan(path: String, snap: TxTable.Snapshot,
   override def filter(
       predicates: Array[org.apache.spark.sql.connector.expressions.filter
         .Predicate]): Unit = {
-    // runtime predicates reference plan attributes — LOGICAL names; the
-    // prune kernel only needs the matching name + key type, both served
-    // by the logical twins (file pruning itself is name-free)
-    entries = TxRuntimePrune(predicates, entries,
-      (logicalKey, bucketing._2), logicalDataSchema)
+    entries = TxRuntimePrune(path, snap.copy(entries = entries), predicates,
+      logicalKey, dataSchema(bucketing._1).dataType)
   }
 
   /** The commit log as a streaming source (offsets = commit versions; the
@@ -3052,23 +2884,21 @@ private[sources] object TxFileSchema {
       .StructField(graft.ops.LayoutOps.BucketCol, IntegerType))
 }
 
-/** Shared runtime-filter kernel: IN/= predicates on the bucket key (the
-  * v2 Predicate shape dynamic pruning delivers, values already catalyst-
-  * internal) hash through the writers' own layout kernel and keep only
-  * their buckets' files. Unrecognized predicates prune nothing. */
+/** Runtime-filter translator: IN/= predicates on the bucket key (the v2
+  * Predicate shape dynamic pruning delivers, values already catalyst-
+  * internal, attribute named by its LOGICAL name) become the planner's
+  * equality probe on the PHYSICAL key over `snap`'s entries.
+  * Unrecognized predicates prune nothing. */
 private[sources] object TxRuntimePrune {
   import org.apache.spark.sql.connector.expressions.{Expression => V2Expr, Literal => V2Literal, NamedReference}
   import org.apache.spark.sql.connector.expressions.filter.Predicate
 
-  def apply(predicates: Array[Predicate],
-            entries: Seq[TxTable.FileEntry],
-            bucketing: (String, Int),
-            dataSchema: StructType): Seq[TxTable.FileEntry] = {
-    val (key, n) = bucketing
-    val keyType = dataSchema.fields.find(_.name == key).map(_.dataType)
+  def apply(path: String, snap: TxTable.Snapshot,
+            predicates: Array[Predicate], logicalKey: String,
+            keyType: DataType): Seq[TxTable.FileEntry] = {
     def keyRef(e: V2Expr): Boolean = e match {
       case r: NamedReference =>
-        r.fieldNames.length == 1 && r.fieldNames()(0) == key
+        r.fieldNames.length == 1 && r.fieldNames()(0) == logicalKey
       case _ => false
     }
     def valuesOf(p: Predicate): Option[Seq[Any]] = p.name() match {
@@ -3085,18 +2915,12 @@ private[sources] object TxRuntimePrune {
         }
       case _ => None
     }
-    var kept = entries
-    keyType.foreach { t =>
-      predicates.toSeq.flatMap(p => valuesOf(p)).foreach { vs =>
-        // literal values arrive as catalyst internals — the same domain
-        // the write path hashes, so placement cannot drift
-        val wanted = vs.map(v =>
-          (((org.apache.spark.sql.catalyst.expressions.XxHash64Function
-            .hash(v, t, 42L) % n) + n) % n).toInt).toSet
-        kept = kept.filter(e => wanted(e.bucket))
-      }
-    }
-    kept
+    val key = snap.bucketing.fold(logicalKey)(_._1)
+    val eqs = predicates.toSeq.flatMap(valuesOf).map(vs =>
+      TxFilePlanner.Eq(key, vs.map(Literal(_, keyType))))
+    if (eqs.isEmpty) snap.entries
+    else TxFilePlanner.plan(SparkSession.active, path, snap,
+      TxFilePlanner.Probe(Nil, eqs))._1
   }
 }
 
@@ -3262,8 +3086,7 @@ final class TxRowLevelScanBuilder(op: TxAffectedFiles, path: String,
       filters: Array[org.apache.spark.sql.sources.Filter])
       : Array[org.apache.spark.sql.sources.Filter] = {
     val (k, _) = TxCatalogPruning.prune(SparkSession.active, path, snap,
-      bucketing, dataSchema,
-      filters.map(TxFilterNames.rename(_, snap.physicalName)))
+      dataSchema, filters.map(TxFilterNames.rename(_, snap.physicalName)))
     kept = k
     op.scannedFiles = k
     filters
@@ -3273,8 +3096,7 @@ final class TxRowLevelScanBuilder(op: TxAffectedFiles, path: String,
     Array.empty
 
   override def build(): Scan =
-    new TxRowLevelScan(op, path, kept, bucketing, dataSchema, required,
-      snap.renames, Some(snap))
+    new TxRowLevelScan(op, path, kept, bucketing, dataSchema, required, snap)
 }
 
 /** The affected-groups scan: serves the kept files and, via
@@ -3287,8 +3109,7 @@ final class TxRowLevelScan(op: TxAffectedFiles, path: String,
                            initialEntries: Seq[TxTable.FileEntry],
                            bucketing: (String, Int),
                            dataSchema: StructType, required: StructType,
-                           renames: Map[String, String] = Map.empty,
-                           snap: Option[TxTable.Snapshot] = None)
+                           snap: TxTable.Snapshot)
     extends Scan with Batch
     with org.apache.spark.sql.connector.read.SupportsRuntimeV2Filtering {
   import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
@@ -3297,13 +3118,9 @@ final class TxRowLevelScan(op: TxAffectedFiles, path: String,
   @volatile private var entries: Seq[TxTable.FileEntry] = initialEntries
 
   // column-mapping twins: plan-facing names logical, file-facing physical
-  private def logicalOf(p: String): String =
-    renames.collectFirst { case (l, ph) if ph == p => l }.getOrElse(p)
-  private val logicalRequired: StructType =
-    StructType(required.fields.map(f => f.copy(name = logicalOf(f.name))))
-  private val logicalKey: String = logicalOf(bucketing._1)
-  private val logicalDataSchema: StructType =
-    StructType(dataSchema.fields.map(f => f.copy(name = logicalOf(f.name))))
+  private val logicalRequired: StructType = StructType(required.fields.map(
+    f => f.copy(name = snap.logicalName(f.name))))
+  private val logicalKey: String = snap.logicalName(bucketing._1)
 
   override def readSchema(): StructType = logicalRequired
   override def toBatch: Batch = this
@@ -3314,14 +3131,13 @@ final class TxRowLevelScan(op: TxAffectedFiles, path: String,
     Array(Expressions.column(logicalKey))
 
   override def filter(predicates: Array[Predicate]): Unit = {
-    entries = TxRuntimePrune(predicates, entries,
-      (logicalKey, bucketing._2), logicalDataSchema)
+    entries = TxRuntimePrune(path, snap.copy(entries = entries), predicates,
+      logicalKey, dataSchema(bucketing._1).dataType)
     op.scannedFiles = entries
   }
 
   private def eqBitmaps: Map[String, (String, Array[Byte])] =
-    snap.fold(Map.empty[String, (String, Array[Byte])])(sn =>
-      TxEqFold.bitmapsFor(SparkSession.active, path, sn))
+    TxEqFold.bitmapsFor(SparkSession.active, path, snap)
 
   override def planInputPartitions(): Array[InputPartition] =
     TxScanPlanning.partitionsFor(path, entries, eqBitmaps)
@@ -4772,15 +4588,8 @@ final class TxDataWriter(
   private val out = new org.apache.spark.sql.catalyst.expressions
     .GenericInternalRow(writeSchema.length)
 
-  private def bucketOf(row: InternalRow): Int = {
-    // the writers' pmod(xxhash64(key, 42), n) via the same interpreted
-    // kernel the XxHash64 expression folds per child — no per-row
-    // expression allocation on the write hot path
-    val v = row.get(keyIdx, keyType)
-    val h = org.apache.spark.sql.catalyst.expressions.XxHash64Function
-      .hash(v, keyType, 42L)
-    (((h % nBuckets) + nBuckets) % nBuckets).toInt
-  }
+  private def bucketOf(row: InternalRow): Int =
+    graft.ops.LayoutOps.bucketOf(row.get(keyIdx, keyType), keyType, nBuckets)
 
   /** Metadata-carrying write (copied/updated rows of a COW rewrite): the
     * metadata row holds the bucket the row CAME from; placement is always
@@ -4848,13 +4657,9 @@ final class GraftBoundBucket(keyType: DataType)
   override def canonicalName(): String = s"graft.bucket"
   override def isResultNullable: Boolean = false
 
-  override def produceResult(input: InternalRow): Integer = {
-    val n = input.getInt(0)
-    val v = input.get(1, keyType)
-    val h = org.apache.spark.sql.catalyst.expressions.XxHash64Function
-      .hash(v, keyType, 42L)
-    (((h % n) + n) % n).toInt
-  }
+  override def produceResult(input: InternalRow): Integer =
+    graft.ops.LayoutOps.bucketOf(input.get(1, keyType), keyType,
+      input.getInt(0))
 }
 
 // --- SQL maintenance procedures (CALL txspj.<proc>(...)) ------------------

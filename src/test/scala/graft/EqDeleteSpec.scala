@@ -499,4 +499,49 @@ class EqDeleteSpec extends AnyFunSuite {
     assert(rows(TxTable.changesSince(spark, t, v0)._1) ==
       expect($"k" >= 100L))
   }
+
+  test("a table re-created at the same path never serves the dropped table's plan-time eq-delete fold") {
+    registered {
+      val t = fresh(40)
+      TxTable.deleteWhereEq(spark, t, Seq(3L).toDF("k"))
+      def sqlKeys = spark.table(s"txeq.`$t`").select($"k").as[Long]
+        .collect().toSet
+      assert(sqlKeys == (0L until 40L).toSet - 3L)
+      // drop + re-create reuses version numbers: v1 is again an
+      // equality delete, over different files and a different key
+      assert(TxTable.drop(spark, t))
+      TxTable.init(spark, t, spark.range(40).select(col("id").as("k"),
+        (col("id") * 10).as("v")), "k", 4)
+      TxTable.deleteWhereEq(spark, t, Seq(5L).toDF("k"))
+      assert(TxTable.snapshot(spark, t).version == 1L)
+      assert(sqlKeys == (0L until 40L).toSet - 5L,
+        "the new table's deleted key must stay dead")
+    }
+  }
+
+  test("a pruned DSv2 read does not narrow the eq-delete fold a later read at the same version uses") {
+    registered {
+      val t = fresh(40)
+      TxTable.deleteWhereEq(spark, t, Seq(3L, 7L, 11L, 20L).toDF("k"))
+      // bucket pruning keeps only k=3's bucket for the first fold
+      assert(spark.table(s"txeq.`$t`").filter($"k" === 3L).count() == 0)
+      val keys = spark.table(s"txeq.`$t`").select($"k").as[Long]
+        .collect().toSet
+      assert(keys == (0L until 40L).toSet -- Set(3L, 7L, 11L, 20L))
+    }
+  }
+
+  test("appendWithEqDelete: a batch with no rows and no keys commits no version") {
+    val t = fresh(10)
+    val v0 = TxTable.snapshot(spark, t).version
+    val empty = Seq.empty[(Long, Long)].toDF("k", "v")
+    assert(!TxTable.appendWithEqDelete(spark, t, empty, empty.select($"k"),
+      "k", 4, appId = "cdc-empty", batchId = 0L))
+    assert(TxTable.snapshot(spark, t).version == v0)
+    // a delete-only batch still commits
+    assert(TxTable.appendWithEqDelete(spark, t, empty,
+      Seq(2L).toDF("k"), "k", 4, appId = "cdc-empty", batchId = 1L))
+    assert(TxTable.snapshot(spark, t).version == v0 + 1)
+    assert(TxTable.read(spark, t).count() == 9L)
+  }
 }

@@ -105,7 +105,7 @@ class StreamingSpec extends AnyFunSuite {
         "customer_id", s"$tmp/ckpt", appId = "cust_stream", nBuckets = 2)
       .trigger(Trigger.AvailableNow()).start()
     q.awaitTermination()
-    // per commit (the watermark's no-data batch commits nothing new)
+    // per commit
     def files(v: Long) = graft.ops.TxTable.snapshot(spark, table, Some(v))
       .entries.map(e => e.rel -> e.bucket).toMap
     val head = graft.ops.TxTable.snapshot(spark, table).version
@@ -115,6 +115,14 @@ class StreamingSpec extends AnyFunSuite {
       added.forall(_.values.forall(_ == 1)), s"files per bucket: $added")
     assert(graft.ops.TxTable.read(spark, table).select("customer_id")
       .as[String].collect().sorted.toSeq == batch.map(_.customer_id))
+    // one batch of data, one new version: the watermark's no-data batch
+    // stages nothing and commits nothing
+    assert(head == 1L, s"versions after init: $head")
+    // a replayed batch id still commits nothing
+    assert(!graft.ops.TxTable.appendOnce(spark, table, batch.take(1).toDF()
+      .withColumn("signup_date", to_date($"signup_date")), "customer_id",
+      2, "cust_stream", 0L))
+    assert(graft.ops.TxTable.snapshot(spark, table).version == head)
   }
 
   test("appendTxGated: failing batches divert whole to quarantine, passing batches publish") {
