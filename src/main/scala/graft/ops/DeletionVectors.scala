@@ -374,43 +374,6 @@ object DeletionVectors {
           col("__frcv")).as(TxTable.RcvCol)): _*)
   }
 
-  /** The inverse read: rows of `entries` whose physical position IS set
-    * in the given bitmap — the change-feed's exact row-level DELETE
-    * emission (a deletion-vector diff between two versions marks exactly
-    * the rows that died in between). Bitmap cache keys are
-    * content-addressed (the diff bitmaps are ad hoc, not sidecar-backed). */
-  private[graft] def readMarked(spark: SparkSession, table: String,
-                                marked: Seq[(TxTable.FileEntry, Array[Byte])],
-                                schema: Option[StructType],
-                                lineage: Boolean = false): DataFrame = {
-    require(marked.nonEmpty, "readMarked needs at least one file")
-    require(!lineage || schema.isDefined,
-      "lineage-carrying marked reads need an explicit schema")
-    val keyed = marked.map { case (e, bytes) =>
-      relKey(e.rel) ->
-        ((s"diff#${java.util.UUID.nameUUIDFromBytes(bytes)}", bytes))
-    }.toMap
-    // row tracking: the marked rows carry their identity, resolved
-    // exactly like a lineage read (see withLineage)
-    val raw = entriesFrame(spark, table, marked.map(_._1),
-      if (lineage) schema.map(lineageSchema) else schema)
-    val cols = schema.fold(raw.columns.toSeq)(_.fieldNames.toSeq)
-    // the same native DvMarked predicate as the live filter, un-negated
-    // (one broadcast, relKey-keyed, codegen'd — see DvMarked)
-    val probe = new DvProbe(spark.sparkContext.broadcast(keyed))
-    val filtered = (if (lineage) withPositions(raw) else raw)
-      .withColumn("__dv_rel", input_file_name())
-      .withColumn("__dv_pos", col("_metadata.row_index"))
-      .filter(org.apache.spark.sql.GraftColumnBridge.column(DvMarked(
-        org.apache.spark.sql.GraftColumnBridge.expression(col("__dv_rel")),
-        org.apache.spark.sql.GraftColumnBridge.expression(col("__dv_pos")),
-        probe)))
-    if (!lineage) filtered.select(cols.map(col): _*)
-    else withLineage(spark, table, filtered, marked.map(_._1), cols)
-      .withColumnRenamed(TxTable.RidCol, TxTable.RowIdCol)
-      .withColumnRenamed(TxTable.RcvCol, TxTable.RowCommitCol)
-  }
-
   /** Stage the per-commit UPDATE-CLASSIFICATION sidecar (row-level CDF):
     * rows of `(kind, rel, bm)` where kind 'ud' marks the DELETED
     * positions of `rel` that belong to updates (pre-images) and kind

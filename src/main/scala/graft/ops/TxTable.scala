@@ -878,12 +878,12 @@ object TxTable {
   private[graft] def commitIsRewrite(fs: FileSystem, table: String,
                                      v: Long): Boolean = {
     val p = versionPath(table, v)
-    if (!fs.exists(p)) false
-    else {
-      val bytes = readBytes(fs, p)
-      val header = headerFields(bytes)
-      isDelta(bytes) && header.length >= 12 && header(11) == "rewrite"
-    }
+    fs.exists(p) && isRewrite(readBytes(fs, p))
+  }
+
+  private def isRewrite(bytes: Array[Byte]): Boolean = {
+    val header = headerFields(bytes)
+    isDelta(bytes) && header.length >= 12 && header(11) == "rewrite"
   }
 
   private def isDelta(bytes: Array[Byte]): Boolean =
@@ -1441,6 +1441,36 @@ object TxTable {
       parseRenames(bytes).getOrElse(snap.renames))
   }
 
+  /** One commit as a change-feed walk sees it: the snapshot it resolves
+    * to, whether it is a flagged data-preserving rewrite, and its
+    * update-classification sidecar rel. */
+  private[graft] final case class Commit(snap: Snapshot, rewrite: Boolean,
+                                         cdfRel: Option[String])
+
+  /** The commits after `start` up to `to`, resolved FORWARD: each
+    * version folds its own manifest onto the previous snapshot — one
+    * manifest read per version, never a per-version walk back to the
+    * anchor. `start = None` begins before the first commit. */
+  private[graft] def commitsAfter(spark: SparkSession, table: String,
+                                  start: Option[Snapshot],
+                                  to: Long): Iterator[Commit] = {
+    val fs = fsFor(spark, table)
+    var prev = start
+    (start.fold(0L)(_.version + 1) to to).iterator.map { v =>
+      val p = versionPath(table, v)
+      require(fs.exists(p),
+        s"version $v does not exist under $table — it predates the " +
+          "vacuumed log retention")
+      val bytes = readBytes(fs, p)
+      val delta = isDelta(bytes)
+      val snap =
+        if (!delta) anchorSnapshot(fs, table, v, bytes)
+        else prev.fold(snapshot(spark, table, Some(v)))(foldDelta(_, bytes))
+      prev = Some(snap)
+      Commit(snap, isRewrite(bytes), if (delta) parseCdf(bytes) else None)
+    }
+  }
+
   private def listVersions(fs: FileSystem, table: String): Seq[Long] = {
     val dir = logDir(table)
     if (!fs.exists(dir)) Seq.empty
@@ -1553,269 +1583,29 @@ object TxTable {
         .withColumnRenamed(RcvCol, RowCommitCol), snap)
   }
 
-  /** Change feed between two committed versions — the Delta CDF read shape
-    * (`table_changes`), derived from the manifest file-diff plus the
-    * deletion-vector diff: rows in files ADDED at version v surface as
-    * (`_change_type`='insert', `_commit_version`=v); rows LIVE in files
-    * removed at v as 'delete' (rows a vector had already killed don't
-    * re-die); and a merge-on-read delete — same rel, grown vector —
-    * surfaces EXACTLY the newly-marked positions as 'delete' rows (the
-    * bitmap diff is a per-row change log the rel-level file diff cannot
-    * see). No per-row change tracking exists for rewrites, so an
-    * upsert/compaction commit still reports whole rewritten files as
-    * delete+insert — exact for append-only + MOR-delete history,
-    * conservative otherwise (documented file-granular CDF). I/O is only
-    * the CHANGED files of each step (for a MOR delete: only the touched
-    * files, filtered to the diff positions), never a full-table scan, and
-    * the per-step manifest walk is O(checkpoint interval) — incremental
-    * consumers pay for the delta they read, which is what makes
-    * downstream incremental maintenance viable at 100 TB. */
+  /** Change feed between two committed versions — the Delta CDF read
+    * shape (`table_changes`): the changes of commits (fromVersion,
+    * toVersion], read through the same DSv2 scan as the `#changes` feed
+    * ([[graft.sources.TxChangesTable]]), so both surfaces share one
+    * planner. Two inputs are this verb's own: the frame takes
+    * `toVersion`'s schema and LOGICAL names (a later rename does not
+    * reach it), and it carries `_row_id`/`_row_commit_version` only when
+    * row tracking was already on at `fromVersion` (identity for the
+    * whole range). */
   def changesBetween(spark: SparkSession, table: String,
                      fromVersion: Long, toVersion: Long): DataFrame = {
     require(fromVersion <= toVersion,
       s"fromVersion $fromVersion must be <= toVersion $toVersion")
-    val latest = snapshot(spark, table, Some(toVersion))
-    // the internal layout column is hidden from change frames for the same
-    // reason TxSparkTable hides it from the SQL schema: it is storage
-    // metadata (recomputed by every writer), not table data a CDF consumer
-    // should see — parquet projection simply never reads it
-    val schema = StructType(latest.schema.getOrElse(
-      throw new IllegalStateException(
-        s"$table@v$toVersion carries no schema (pre-v2 manifest) — " +
-          "changesBetween needs the recorded schema to type change frames"))
-      .filterNot(_.name == LayoutOps.BucketCol))
-    def stamp(df: DataFrame, tpe: String, v: Long): DataFrame =
-      df.withColumn("_change_type", lit(tpe))
-        .withColumn("_commit_version", lit(v))
-    val fs = fsFor(spark, table)
-    val fromSnap = snapshot(spark, table, Some(fromVersion))
-    // row tracking: when the whole range is tracked (enable-at-or-before
-    // fromVersion), every change row carries its durable identity —
-    // _row_id joins a delete to the insert that replaced it across
-    // commits, the link file-granular CDF alone cannot give a consumer
-    val tracked = fromSnap.props.get(RowTrackingProp).contains("true")
-    // the live rows of `es` at the version `snap` resolves (its DVs and
-    // its unfolded equality deletes) — the read kernel, like every read
-    def readE(snap: Snapshot, es: Seq[FileEntry]): DataFrame =
-      liveRows(spark, table, snap, es, Some(schema), tracked)
-        .withColumnRenamed(RidCol, RowIdCol)
-        .withColumnRenamed(RcvCol, RowCommitCol)
-    def readM(marked: Seq[(FileEntry, Array[Byte])]): DataFrame =
-      DeletionVectors.readMarked(spark, table, marked, Some(schema),
-        lineage = tracked)
-    var prev: Map[String, FileEntry] =
-      fromSnap.entries.map(e => e.rel -> e).toMap
-    val frames = Seq.newBuilder[DataFrame]
-    // untracked FRESH inserts accumulate ACROSS versions and read as
-    // ONE batched frame after the walk (per-file commit stamp joined
-    // from the manifest) — a 600-append replay builds a handful of
-    // Spark plans instead of 600. Tracked replays keep per-version
-    // frames: their lineage join already dominates.
-    val pendingInserts = Seq.newBuilder[(FileEntry, Long)]
-    // versions resolve FORWARD by folding each commit's own manifest
-    // onto the previous snapshot — one manifest read per version,
-    // never a per-version O(interval) walk back to the anchor
-    var curSnap = fromSnap
-    (fromVersion + 1 to toVersion).foreach { v =>
-      val prevSnap = curSnap
-      val vPath = versionPath(table, v)
-      require(fs.exists(vPath),
-        s"version $v does not exist under $table — it predates the " +
-          "vacuumed log retention")
-      val vBytes = readBytes(fs, vPath)
-      curSnap =
-        if (isDelta(vBytes)) foldDelta(curSnap, vBytes)
-        else anchorSnapshot(fs, table, v, vBytes)
-      val cur = curSnap.entries.map(e => e.rel -> e).toMap
-      // EQUALITY DELETES registered at v: the dead rows are exactly the
-      // live rows of files with addV < v whose keys match the sidecar —
-      // the AFFECTED files read live at v-1 (their DVs plus every
-      // EARLIER eq-delete: a row that died before v must not re-die),
-      // then one semi-join per new sidecar. Write path paid nothing;
-      // the feed pays the read, which is the MOR contract.
-      val newDels = parseEqDeletes(curSnap.props).filter(_.version == v)
-      if (newDels.nonEmpty) {
-        val affected = curSnap.entries.filter(e =>
-          e.addV.forall(_ < v))
-        if (affected.nonEmpty) {
-          newDels.foreach { d =>
-            val base0 = readE(prevSnap, affected)
-            val keysDf = spark.read.parquet(s"$table/${d.rel}")
-            val cond = d.cols.map(c => base0(c) === keysDf(c))
-              .reduce(_ && _)
-            frames += stamp(
-              base0.join(broadcast(keysDf), cond, "left_semi"),
-              "delete", v)
-          }
-        }
-      }
-      // a dataChange=false commit (compaction/Z-order/purge/rebucket)
-      // reorganized files without changing live rows — EXACTLY nothing
-      // to emit; advance the baseline so the next commit diffs against
-      // the post-rewrite file set
-      if (commitIsRewrite(fs, table, v)) { prev = cur }
-      else {
-      // UPDATE classification (the Delta update_preimage/update_postimage
-      // change types): a delta row-level commit stages bitmaps marking
-      // which of its deleted positions / inserted positions belong to
-      // UPDATES. Absent sidecar (every other commit kind) or a file
-      // missing the metadata the split needs (recorded row count, clean
-      // add) degrades to the plain delete/insert types — conservative,
-      // never wrong rows.
-      val (ud, ui) = commitCdfRel(fs, table, v) match {
-        case Some(rel) => DeletionVectors.loadCdfMaps(spark, table, rel)
-        case None => (Map.empty[String, Array[Byte]],
-          Map.empty[String, Array[Byte]])
-      }
-      def bmDeser(b: Array[Byte]) = DeletionVectors.deserialize(b)
-      def complement(bm: org.roaringbitmap.RoaringBitmap, rows: Long) =
-        org.roaringbitmap.RoaringBitmap.flip(bm, 0L, rows)
-      val added = (cur.keySet -- prev.keySet).toSeq.sorted.map(cur)
-      val removed = (prev.keySet -- cur.keySet).toSeq.sorted.map(prev)
-      // same rel, CHANGED deletion vector (bitmap diff, batched: one
-      // sidecar read per side per version): newly-marked positions are
-      // exactly the rows that died at v; un-marked positions — possible
-      // only under a [[restore]] that reset/shrank the vector — are
-      // exactly the rows that REVIVED at v and surface as 'insert'
-      val changedRels = cur.keysIterator.filter(rel =>
-        prev.contains(rel) && cur(rel).dv != prev(rel).dv)
-        .toSeq.sorted
-      val (updAdded, plainAdded) = added.partition(e =>
-        ui.contains(e.rel) && e.dv.isEmpty && e.rows.isDefined)
-      // a file FRESHLY added at v (addV = v) is addressable by no
-      // delete registered at or before v, so only its DVs apply — the
-      // batch below reads those; re-adds (restore) and tracked inserts
-      // read live at v
-      val (fresh, atV) = plainAdded.partition(e =>
-        !tracked && e.addV.contains(v))
-      pendingInserts ++= fresh.map(e => (e, v))
-      if (atV.nonEmpty) frames += stamp(readE(curSnap, atV), "insert", v)
-      // BATCHED classification reads: one frame per change type per
-      // version, never per file — a MERGE touching every bucket stays
-      // O(change types) Spark plans, not O(files)
-      if (updAdded.nonEmpty) {
-        frames += stamp(readM(updAdded.map(e => (e, ui(e.rel)))),
-          "update_postimage", v)
-        val rests = updAdded.flatMap { e =>
-          val rest = complement(bmDeser(ui(e.rel)), e.rows.get)
-          if (rest.isEmpty) None
-          else Some((e, DeletionVectors.serialize(rest)))
-        }
-        if (rests.nonEmpty)
-          frames += stamp(readM(rests), "insert", v)
-      }
-      val (updRemoved, plainRemoved) = removed.partition(e =>
-        ud.contains(e.rel) && e.rows.isDefined)
-      if (plainRemoved.nonEmpty)
-        frames += stamp(readE(prevSnap, plainRemoved), "delete", v)
-      if (updRemoved.nonEmpty) {
-        // fully-dropped files (all live rows died): updated positions
-        // are pre-images, the remaining then-live rows plain deletes
-        val prevDvs = DeletionVectors.loadBitmaps(spark, table, updRemoved)
-        def prevOf(e: FileEntry) = prevDvs.get(e.rel)
-          .map(b => bmDeser(b._2))
-          .getOrElse(new org.roaringbitmap.RoaringBitmap())
-        val pres = updRemoved.flatMap { e =>
-          val pre = org.roaringbitmap.RoaringBitmap.andNot(
-            bmDeser(ud(e.rel)), prevOf(e))
-          if (pre.isEmpty) None
-          else Some((e, DeletionVectors.serialize(pre)))
-        }
-        if (pres.nonEmpty)
-          frames += stamp(readM(pres), "update_preimage", v)
-        val dels = updRemoved.flatMap { e =>
-          val dead = org.roaringbitmap.RoaringBitmap.or(
-            prevOf(e), bmDeser(ud(e.rel)))
-          val del = complement(dead, e.rows.get)
-          if (del.isEmpty) None
-          else Some((e, DeletionVectors.serialize(del)))
-        }
-        if (dels.nonEmpty)
-          frames += stamp(readM(dels), "delete", v)
-      }
-      if (changedRels.nonEmpty) {
-        val curBms = DeletionVectors.loadBitmaps(spark, table,
-          changedRels.map(cur).filter(_.dv.isDefined))
-        val prevBms = DeletionVectors.loadBitmaps(spark, table,
-          changedRels.map(prev).filter(_.dv.isDefined))
-        def bmOf(bms: Map[String, (String, Array[Byte])], rel: String) =
-          bms.get(rel).map(b => DeletionVectors.deserialize(b._2))
-            .getOrElse(new org.roaringbitmap.RoaringBitmap())
-        val diffs = changedRels.map { rel =>
-          val cb = bmOf(curBms, rel)
-          val pb = bmOf(prevBms, rel)
-          (rel, org.roaringbitmap.RoaringBitmap.andNot(cb, pb),
-            org.roaringbitmap.RoaringBitmap.andNot(pb, cb))
-        }
-        // newly-dead positions split by the update bitmap: an updated
-        // row's death is its PRE-IMAGE, everything else a plain delete
-        val (preImg, dead) = diffs.collect {
-          case (rel, d, _) if !d.isEmpty => ud.get(rel) match {
-            case Some(u) =>
-              val ub = bmDeser(u)
-              (org.roaringbitmap.RoaringBitmap.and(d, ub),
-                org.roaringbitmap.RoaringBitmap.andNot(d, ub), rel)
-            case None =>
-              (new org.roaringbitmap.RoaringBitmap(), d, rel)
-          }
-        }.map { case (p, d, rel) =>
-          ((rel, p), (rel, d))
-        }.unzip
-        val preRows = preImg.collect { case (rel, p) if !p.isEmpty =>
-          (cur(rel), DeletionVectors.serialize(p)) }
-        val deadRows = dead.collect { case (rel, d) if !d.isEmpty =>
-          (cur(rel), DeletionVectors.serialize(d)) }
-        val revived = diffs.collect { case (rel, _, r) if !r.isEmpty =>
-          (cur(rel), DeletionVectors.serialize(r)) }
-        if (preRows.nonEmpty)
-          frames += stamp(readM(preRows), "update_preimage", v)
-        if (deadRows.nonEmpty)
-          frames += stamp(readM(deadRows), "delete", v)
-        if (revived.nonEmpty)
-          frames += stamp(readM(revived), "insert", v)
-      }
-      prev = cur
-      }
-    }
-    // flush the cross-version insert batch: ONE read of every freshly
-    // added file (a rel is freshly added once, so the stamp is never
-    // ambiguous), each row stamped with ITS file's commit version via a
-    // broadcast (relKey -> version) join. The read carries an EMPTY
-    // registry: no delete registered at or before a fresh add's version
-    // addresses it, and later ones surface as their own delete rows.
-    val pend = pendingInserts.result()
-    if (pend.nonEmpty) {
-      val vDf = spark.createDataFrame(pend.map { case (e, v) =>
-        (DeletionVectors.relKey(e.rel), v)
-      }).toDF("__cv_rk", "__cv_v")
-      frames += readE(latest.copy(props = latest.props - EqDeletesProp),
-          pend.map(_._1))
-        .withColumn("__cv_rk0", regexp_extract(input_file_name(),
-          DeletionVectors.RelPattern, 0))
-        .join(broadcast(vDf), col("__cv_rk0") === col("__cv_rk"), "left")
-        .withColumn("_change_type", lit("insert"))
-        .withColumn("_commit_version", col("__cv_v"))
-        .drop("__cv_rk0", "__cv_rk", "__cv_v")
-    }
-    // change frames surface under toVersion's LOGICAL names (the CDF
-    // consumer's view; `_change_type`/`_commit_version` are never mapped)
-    fromPhysical(
-      frames.result().reduceOption(_.unionByName(_)).getOrElse {
-        val lineageFields =
-          if (!tracked) Seq.empty
-          else Seq(
-            org.apache.spark.sql.types.StructField(RowIdCol,
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField(RowCommitCol,
-              org.apache.spark.sql.types.LongType))
-        val sc = StructType((schema.fields ++ lineageFields)
-          :+ org.apache.spark.sql.types.StructField("_change_type",
-            org.apache.spark.sql.types.StringType)
-          :+ org.apache.spark.sql.types.StructField("_commit_version",
-            org.apache.spark.sql.types.LongType))
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sc)
-      }, latest)
+    val tracked = snapshot(spark, table, Some(fromVersion)).props
+      .get(RowTrackingProp).contains("true")
+    val feed = new graft.sources.TxChangesTable(table,
+      snapshot(spark, table, Some(toVersion)), tracked)
+    val options = new org.apache.spark.sql.util.CaseInsensitiveStringMap(
+      java.util.Map.of("startingVersion", (fromVersion + 1).toString,
+        "endingVersion", toVersion.toString))
+    org.apache.spark.sql.GraftColumnBridge.ofRows(spark,
+      org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+        .create(feed, None, None, options))
   }
 
   /** DESCRIBE HISTORY analog: one row per RETAINED log version, oldest
@@ -3832,11 +3622,10 @@ object TxTable {
     * unfolded equality deletes (identity when the registry is empty).
     * `lineage` materializes [[RidCol]]/[[RcvCol]] for every live row.
     * Every read verb (`read`, `readLineage`, `readKeys`, `readWhereAll`,
-    * `readStaged`, `changesSince`, the change feed's file legs) wraps it
-    * in [[fromPhysical]]; every rewrite that restages live rows (upsert's
-    * merge window, rebucket, compaction/purge/fold, REPLACE WHERE
-    * remainders) stages it as is — so no surface can disagree on which
-    * rows are dead. */
+    * `readStaged`, `changesSince`) wraps it in [[fromPhysical]]; every
+    * rewrite that restages live rows (upsert's merge window, rebucket,
+    * compaction/purge/fold, REPLACE WHERE remainders) stages it as is —
+    * so no surface can disagree on which rows are dead. */
   private[graft] def liveRows(spark: SparkSession, table: String,
                               snap: Snapshot, entries: Seq[FileEntry],
                               physSchema: Option[StructType],
@@ -3851,14 +3640,10 @@ object TxTable {
     * sidecars — a row dies iff its keys match a delete registered AFTER
     * its file was added. Identity (same plan) when the registry is
     * empty, which is the steady state commitNext's fold-GC drives
-    * toward. Reads call it through [[liveRows]]; `delsOverride` lets
-    * [[eqDeletePositions]] apply "every delete registered BEFORE version
-    * v" when replaying history. */
-  private[graft] def applyEqDeletes(spark: SparkSession, table: String,
-                                    snap: Snapshot, df: DataFrame,
-                                    delsOverride: Option[Seq[EqDelete]] =
-                                      None): DataFrame = {
-    val dels = delsOverride.getOrElse(parseEqDeletes(snap.props))
+    * toward. Reads call it through [[liveRows]]. */
+  private def applyEqDeletes(spark: SparkSession, table: String,
+                             snap: Snapshot, df: DataFrame): DataFrame = {
+    val dels = parseEqDeletes(snap.props)
     if (dels.isEmpty) return df
     snap.entries.find(_.addV.isEmpty).foreach { e =>
       throw new IllegalStateException(
@@ -3896,58 +3681,6 @@ object TxTable {
           cond, "left_anti")
       }
     out.drop("__eqrk", "__eqrk2", "__eqaddv")
-  }
-
-  /** Physical positions of the rows ONE equality delete killed, per
-    * affected file — the change feed's exact row-level emission (and
-    * nothing else's: scans use the registry-wide fold). Scoped like the
-    * replay semantics: only files with addV < the delete's version, only
-    * rows live under their DVs AT that version, only rows no EARLIER
-    * unfolded delete had already killed — a row dies exactly once. */
-  private[graft] def eqDeletePositions(spark: SparkSession, table: String,
-                                       snapAtV: Snapshot, d: EqDelete,
-                                       earlier: Seq[EqDelete])
-      : Map[String, Array[Byte]] = {
-    val affected = snapAtV.entries.filter(_.addV.forall(_ < d.version))
-    if (affected.isEmpty) return Map.empty
-    val physSchema = snapAtV.schema.getOrElse(
-      throw new IllegalStateException(
-        s"$table: equality deletes need a recorded schema"))
-    val needCols = (d.cols ++ earlier.flatMap(_.cols)).distinct.toSet
-    val readSchema = StructType(
-      physSchema.fields.filter(f => needCols.contains(f.name)))
-    var df = DeletionVectors.entriesFrame(spark, table, affected,
-        Some(readSchema))
-      .withColumn("__rk",
-        regexp_extract(input_file_name(), DeletionVectors.RelPattern, 0))
-      .withColumn("__pos", col("_metadata.row_index"))
-    val dvd = affected.filter(_.dv.isDefined)
-    if (dvd.nonEmpty)
-      df = df.withColumn("__dv_rel", input_file_name())
-        .withColumn("__dv_pos", col("_metadata.row_index"))
-        .filter(DeletionVectors.liveFilter(spark,
-          DeletionVectors.loadBitmaps(spark, table, dvd)))
-    df = applyEqDeletes(spark, table, snapAtV, df, Some(earlier))
-    val keysDf = spark.read.parquet(s"$table/${d.rel}")
-    val cond = d.cols.map(c => df(c) === keysDf(c)).reduce(_ && _)
-    val pairs = df.join(
-        eqMaybeBroadcast(spark, keysDf, math.max(d.nKeys, 0L)),
-        cond, "left_semi")
-      .select(col("__rk"), col("__pos")).distinct().collect()
-      .map(r => (r.getString(0), r.getLong(1)))
-    val relByKey = affected.map(e =>
-      DeletionVectors.relKey(e.rel) -> e.rel).toMap
-    pairs.groupBy(_._1).flatMap { case (rk, ps) =>
-      relByKey.get(rk).map { rel =>
-        val bm = new org.roaringbitmap.RoaringBitmap()
-        ps.foreach { case (_, p) =>
-          require(p <= DeletionVectors.MaxPos,
-            s"$table: position $p exceeds the bitmap domain")
-          bm.add(p.toInt)
-        }
-        rel -> DeletionVectors.serialize(bm)
-      }
-    }
   }
 
   /** Fold every unfolded equality delete into data: rewrite exactly the

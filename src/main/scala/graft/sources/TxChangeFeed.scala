@@ -34,39 +34,43 @@ import graft.ops.{DeletionVectors, TxTable}
   *     admission ride along, and `Trigger.AvailableNow` pins the head
   *     at prepare time.
   *
-  * The schema is the table's data schema plus `_change_type` STRING and
-  * `_commit_version` LONG. Change derivation is the manifest file-diff
-  * plus the deletion-vector BITMAP diff per commit:
+  * The schema is `snap`'s data schema under its LOGICAL names plus
+  * `_change_type` STRING and `_commit_version` LONG (and, when `tracked`,
+  * the row-lineage columns). The catalog passes the head snapshot and its
+  * tracking flag; [[TxTable.changesBetween]] passes its `toVersion`
+  * snapshot and its `fromVersion` flag. Each commit is classified by one
+  * per-file dead-row set, DV ∪ equality-delete fold
+  * ([[TxChangeFeedPlanning.plan]]):
   *
-  *   - files added at v → their live rows as 'insert'@v;
-  *   - files removed at v → their then-live rows as 'delete'@v;
-  *   - same rel, changed vector → EXACTLY the newly-marked positions as
-  *     'delete'@v, and (a [[TxTable.restore]] that shrank the vector)
-  *     exactly the revived positions as 'insert'@v.
+  *   - files added at v → their rows outside dead(v) as 'insert'@v;
+  *   - files removed at v → their rows outside dead(v-1) as 'delete'@v;
+  *   - a file on both sides → dead(v) − dead(v-1) as 'delete'@v (an MOR
+  *     or equality delete), dead(v-1) − dead(v) as 'insert'@v (a
+  *     [[TxTable.restore]] that shrank the vector or the registry).
   *
   * Unlike the append-only streaming source — which throws on rewrite
   * commits because it promises exactly-once appends — the change feed
   * REPRESENTS every commit: rewrites surface file-granularly
   * (delete+insert of the rewritten files, the documented conservative
   * shape), deletes and restores surface row-exactly. I/O per commit is
-  * only that commit's changed files (DV'd ones filtered to the diff
+  * only that commit's changed files (bitmap'd ones filtered to the diff
   * positions), never a table re-scan — the contract that keeps a 100 TB
   * table's downstream consumers paying O(delta). */
-final class TxChangesTable(path: String) extends Table with SupportsRead {
-  private val snap = TxTable.snapshot(SparkSession.active, path)
+final class TxChangesTable(path: String, snap: TxTable.Snapshot,
+                           private[sources] val tracked: Boolean)
+    extends Table with SupportsRead {
   private[sources] val dataSchema: StructType = StructType(
     snap.schema.getOrElse(throw new IllegalStateException(
-      s"$path carries no recorded schema (pre-v2 manifest) — the change " +
-        "feed needs the recorded schema to type change frames"))
+      s"$path@v${snap.version} carries no recorded schema (pre-v2 " +
+        "manifest) — the change feed needs the recorded schema to type " +
+        "change frames"))
       .filterNot(_.name == graft.ops.LayoutOps.BucketCol))
   // consumers see LOGICAL names (column mapping); the file readers keep
-  // the PHYSICAL dataSchema — positionally identical
-  // row tracking: a tracked table's change rows carry their durable
-  // identity (nullable: files predating the enable have no anchor) —
-  // the link that lets a streaming consumer classify a delete and the
-  // insert that replaced it as one update across commits
-  private[sources] val tracked: Boolean =
-    snap.props.get(TxTable.RowTrackingProp).contains("true")
+  // the PHYSICAL dataSchema — positionally identical. Row tracking: a
+  // tracked feed's rows carry their durable identity (nullable: files
+  // predating the enable have no anchor) — the link that lets a
+  // streaming consumer classify a delete and the insert that replaced
+  // it as one update across commits
   private val lineageFields =
     if (!tracked) Seq.empty
     else Seq(StructField(TxTable.RowIdCol, LongType),
@@ -95,7 +99,7 @@ final class TxChangesTable(path: String) extends Table with SupportsRead {
 private[sources] final class TxChangesScan(path: String,
     dataSchema: StructType, outSchema: StructType,
     options: CaseInsensitiveStringMap,
-    tracked: Boolean = false) extends Scan {
+    tracked: Boolean) extends Scan {
   private def spark = SparkSession.active
   override def readSchema(): StructType = outSchema
   override def description(): String = s"GraftTxChanges $path"
@@ -140,7 +144,7 @@ private[sources] final class TxChangesScan(path: String,
   * offset/admission shape as the append source, but every commit kind is
   * representable so no skip/ignore escape hatches are needed. */
 final class TxChangesMicroBatchStream(path: String, dataSchema: StructType,
-    options: CaseInsensitiveStringMap, tracked: Boolean = false)
+    options: CaseInsensitiveStringMap, tracked: Boolean)
     extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream
     with org.apache.spark.sql.connector.read.streaming
       .SupportsTriggerAvailableNow {
@@ -217,190 +221,173 @@ private[sources] object TxChangeFeedPlanning {
 
   /** One unit of change: the stock [[FilePartition]] the parquet reader
     * accepts, stamped with its change type and commit version. Bitmap
-    * semantics: `include=true` emits ONLY the bitmap positions (a DV
-    * diff), `include=false` emits every position NOT in the bitmap (live
-    * rows of a DV'd file); an absent bitmap serves the whole file.
+    * semantics: `include=true` emits ONLY the bitmap positions (a
+    * dead-set diff), `include=false` emits every position NOT in the
+    * bitmap (the rows outside a file's dead set); an absent bitmap serves
+    * the whole file. The bitmap travels with its executor cache key.
     * Bitmap'd partitions hold exactly one file — positions count per
     * file. */
   final case class TxChangePartition(inner: FilePartition,
       changeType: String, version: Long, include: Boolean,
-      bitmap: Option[Array[Byte]], cacheKey: String,
+      bitmap: Option[(String, Array[Byte])],
       lineage: Option[(Long, Long)] = None) extends InputPartition
 
+  /** One change leg before indexing: type, commit, bitmap semantics (as
+    * in [[TxChangePartition]]) and the files it reads. */
+  private final case class Leg(tpe: String, v: Long, include: Boolean,
+      bitmap: Option[(String, Array[Byte])], files: Seq[TxTable.FileEntry])
+
   /** Partitions for the row-level changes of commits (from, to];
-    * `from = -1` starts at the initial snapshot. The walk is per-version
-    * manifest metadata (O(checkpoint interval) reads each) plus one
-    * batched DV-sidecar load per side per version — bounded by the
-    * commits' own change volume. */
+    * `from = -1` starts at the initial snapshot. THE change-feed walk:
+    * versions resolve forward ([[TxTable.commitsAfter]], one manifest
+    * read each), and every commit is classified by one per-file dead-row
+    * set, dead(snap, rel) = DV(rel) ∪ the snapshot's equality-delete fold
+    * of rel ([[TxEqFold.bitmapsFor]], always over the whole snapshot).
+    * The fold runs only for a side whose registry addresses a touched
+    * file, so a registry-free history pays one batched DV-sidecar load
+    * per side per version and nothing else. */
   def plan(spark: SparkSession, path: String, from: Long, to: Long,
-           tracked: Boolean = false)
+           tracked: Boolean)
       : Array[InputPartition] = {
     require(from <= to, s"change range ($from, $to] is empty or inverted")
     val fs = new Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def pf(rel: String) = {
-      val p = new Path(s"$path/$rel")
-      val st = fs.getFileStatus(p)
-      GraftParquetShim.partitionedFile(p.toString, st.getLen,
-        st.getModificationTime)
-    }
-    val parts = Seq.newBuilder[(String, Long, Boolean,
-      Option[Array[Byte]], String, Array[String])] // (+ rels) pre-index
+    def byRel(snap: Option[TxTable.Snapshot]) =
+      snap.fold(Map.empty[String, TxTable.FileEntry])(
+        _.entries.map(e => e.rel -> e).toMap)
+    val legs = Seq.newBuilder[Leg]
     // row-tracking anchors per rel (a file's base never changes once
     // assigned, so one map serves every version of the range)
     val anchors = scala.collection.mutable.Map.empty[String, (Long, Long)]
     def note(m: Map[String, TxTable.FileEntry]): Unit =
       if (tracked) m.valuesIterator.foreach(e =>
         e.base.foreach(b => anchors.update(e.rel, b)))
-    var prev: Map[String, TxTable.FileEntry] =
-      if (from < 0) Map.empty
-      else TxTable.snapshot(spark, path, Some(from)).entries
-        .map(e => e.rel -> e).toMap
+    var prevSnap =
+      if (from < 0) None else Some(TxTable.snapshot(spark, path, Some(from)))
+    var prev = byRel(prevSnap)
     note(prev)
-    var prevDels: Seq[TxTable.EqDelete] =
-      if (from < 0) Seq.empty
-      else TxTable.parseEqDeletes(
-        TxTable.snapshot(spark, path, Some(from)).props)
-    (from + 1 to to).foreach { v =>
-      val curSnap = TxTable.snapshot(spark, path, Some(v))
-      val cur = curSnap.entries.map(e => e.rel -> e).toMap
+    TxTable.commitsAfter(spark, path, prevSnap, to).foreach { c =>
+      val cur = byRel(Some(c.snap))
       note(cur)
-      // EQUALITY deletes registered at v: fold the key sidecar to the
-      // exact physical positions it killed (live-at-v rows of files
-      // predating v, minus rows earlier deletes already killed) and
-      // emit them through the standard inclusion-bitmap partitions —
-      // the write path paid nothing, the feed pays the read (the MOR
-      // contract)
-      val curDels = TxTable.parseEqDeletes(curSnap.props)
-      curDels.filter(_.version == v).foreach { d =>
-        TxTable.eqDeletePositions(spark, path, curSnap, d, prevDels)
-          .toSeq.sortBy(_._1).foreach { case (rel, bytes) =>
-            parts += (("delete", v, true, Some(bytes),
-              s"cdf-eqdel:$rel@$v", Array(rel)))
-          }
-      }
-      prevDels = curDels
       // dataChange=false commits (compaction/Z-order/purge/rebucket)
       // changed no live row — emit nothing, just advance the baseline
-      if (TxTable.commitIsRewrite(fs, path, v)) { prev = cur }
-      else {
-      // UPDATE classification (pre/post images): a delta row-level
-      // commit's sidecar marks which deleted/inserted positions were the
-      // two halves of updates; absent sidecar or missing metadata
-      // degrades to plain delete/insert, never wrong rows
-      val (ud, ui) = TxTable.commitCdfRel(fs, path, v) match {
-        case Some(rel) => DeletionVectors.loadCdfMaps(spark, path, rel)
-        case None => (Map.empty[String, Array[Byte]],
-          Map.empty[String, Array[Byte]])
-      }
-      val added = (cur.keySet -- prev.keySet).toSeq.sorted.map(cur)
-      val removed = (prev.keySet -- cur.keySet).toSeq.sorted.map(prev)
-      val changed = cur.keySet.intersect(prev.keySet).toSeq.sorted
-        .filter(rel => cur(rel).dv != prev(rel).dv)
-      val curBms = DeletionVectors.loadBitmaps(spark, path,
-        (added ++ changed.map(cur)).filter(_.dv.isDefined))
-      val prevBms = DeletionVectors.loadBitmaps(spark, path,
-        (removed ++ changed.map(prev)).filter(_.dv.isDefined))
-      // whole live files: DV-less ones ride together (one partition per
-      // commit+type), DV'd ones one-per-file with an exclusion bitmap
-      def emit(entries: Seq[TxTable.FileEntry], tpe: String,
-               bms: Map[String, (String, Array[Byte])]): Unit = {
-        val (dvd, clean) = entries.partition(_.dv.isDefined)
-        if (clean.nonEmpty)
-          parts += ((tpe, v, false, None, "",
-            clean.map(_.rel).sorted.toArray))
-        dvd.foreach { e =>
-          val (key, bytes) = bms(e.rel)
-          parts += ((tpe, v, false, Some(bytes), key, Array(e.rel)))
-        }
-      }
-      val (updAdded, plainAdded) = added.partition(e =>
-        ui.contains(e.rel) && e.dv.isEmpty && e.rows.isDefined)
-      emit(plainAdded, "insert", curBms)
-      updAdded.foreach { e =>
-        // inserted positions in the update bitmap are post-images; the
-        // exclusion partition serves the statement's plain inserts
-        val bm = DeletionVectors.deserialize(ui(e.rel))
-        parts += (("update_postimage", v, true, Some(ui(e.rel)),
-          s"cdf-upost:${e.rel}@$v", Array(e.rel)))
-        if (!e.rows.contains(bm.getLongCardinality))
-          parts += (("insert", v, false, Some(ui(e.rel)),
-            s"cdf-uins:${e.rel}@$v", Array(e.rel)))
-      }
-      val (updRemoved, plainRemoved) = removed.partition(e =>
-        ud.contains(e.rel) && e.rows.isDefined)
-      emit(plainRemoved, "delete", prevBms)
-      updRemoved.foreach { e =>
-        // a fully-dropped file: updated then-live positions are
-        // pre-images; the rest of its then-live rows plain deletes
-        val udBm = DeletionVectors.deserialize(ud(e.rel))
-        val prevDv = e.dv.fold(new RoaringBitmap())(_ =>
-          DeletionVectors.deserialize(prevBms(e.rel)._2))
-        val pre = RoaringBitmap.andNot(udBm, prevDv)
-        if (!pre.isEmpty)
-          parts += (("update_preimage", v, true,
-            Some(DeletionVectors.serialize(pre)),
-            s"cdf-upre:${e.rel}@$v", Array(e.rel)))
-        val dead = RoaringBitmap.or(prevDv, udBm)
-        if (!e.rows.contains(dead.getLongCardinality))
-          parts += (("delete", v, false,
-            Some(DeletionVectors.serialize(dead)),
-            s"cdf-udel:${e.rel}@$v", Array(e.rel)))
-      }
-      // same rel, changed vector: newly-marked positions died at v,
-      // un-marked positions (a restore shrank the vector) revived at v
-      changed.foreach { rel =>
-        def bmOf(e: TxTable.FileEntry,
-                 bms: Map[String, (String, Array[Byte])]): RoaringBitmap =
-          e.dv.fold(new RoaringBitmap())(_ =>
-            DeletionVectors.deserialize(bms(rel)._2))
-        val cb = bmOf(cur(rel), curBms)
-        val pb = bmOf(prev(rel), prevBms)
-        val newlyDead0 = RoaringBitmap.andNot(cb, pb)
-        // updated rows' deaths are pre-images, the rest plain deletes
-        val udBm = ud.get(rel).map(DeletionVectors.deserialize)
-          .getOrElse(new RoaringBitmap())
-        val preImg = RoaringBitmap.and(newlyDead0, udBm)
-        val newlyDead = RoaringBitmap.andNot(newlyDead0, udBm)
-        val revived = RoaringBitmap.andNot(pb, cb)
-        if (!preImg.isEmpty)
-          parts += (("update_preimage", v, true,
-            Some(DeletionVectors.serialize(preImg)),
-            s"cdf-upre:$rel@$v", Array(rel)))
-        if (!newlyDead.isEmpty)
-          parts += (("delete", v, true,
-            Some(DeletionVectors.serialize(newlyDead)),
-            s"cdf-dead:$rel@$v", Array(rel)))
-        if (!revived.isEmpty)
-          parts += (("insert", v, true,
-            Some(DeletionVectors.serialize(revived)),
-            s"cdf-revived:$rel@$v", Array(rel)))
-      }
+      if (!c.rewrite)
+        legs ++= commitLegs(spark, path, prevSnap, prev, c, cur)
+      prevSnap = Some(c.snap)
       prev = cur
-      }
     }
     // row tracking: identity is per FILE (anchor + physical position),
-    // so a tracked feed splits batched multi-file partitions per file
-    // and attaches each file's anchor
-    val raw0 = parts.result()
+    // so a tracked feed splits batched multi-file legs per file and
+    // attaches each file's anchor
+    val all = legs.result()
     val expanded =
-      if (!tracked) raw0
-      else raw0.flatMap { case t @ (tpe, v, include, bitmap, key, rels) =>
-        if (rels.length <= 1) Seq(t)
-        else rels.toSeq.map(r =>
-          (tpe, v, include, bitmap, key, Array(r)))
-      }
-    expanded.zipWithIndex.map {
-      case ((tpe, v, include, bitmap, key, rels), i) =>
-        TxChangePartition(FilePartition(i, rels.map(pf)), tpe, v,
-          include, bitmap, key,
-          if (tracked && rels.length == 1) anchors.get(rels.head)
-          else None): InputPartition
+      if (!tracked) all
+      else all.flatMap(l => l.files.map(f => l.copy(files = Seq(f))))
+    expanded.zipWithIndex.map { case (l, i) =>
+      TxChangePartition(FilePartition(i, l.files.map(e =>
+          GraftParquetShim.partitionedFile(new Path(s"$path/${e.rel}")
+            .toString, TxFileSizes.of(fs, path, e), 0L)).toArray),
+        l.tpe, l.v, l.include, l.bitmap,
+        if (tracked) anchors.get(l.files.head.rel) else None)
+        : InputPartition
     }.toArray
   }
 
+  /** The legs of one data-changing commit `c` against the previous
+    * state (`prevSnap`, whose entries by rel are `prev`). */
+  private def commitLegs(spark: SparkSession, path: String,
+      prevSnap: Option[TxTable.Snapshot],
+      prev: Map[String, TxTable.FileEntry], c: TxTable.Commit,
+      cur: Map[String, TxTable.FileEntry]): Seq[Leg] = {
+    val v = c.snap.version
+    val out = Seq.newBuilder[Leg]
+    def keyed(bm: RoaringBitmap): Option[(String, Array[Byte])] = {
+      val bytes = DeletionVectors.serialize(bm)
+      Some((s"cdf#${java.util.UUID.nameUUIDFromBytes(bytes)}", bytes))
+    }
+    def bmOf(b: Option[(String, Array[Byte])]): RoaringBitmap =
+      b.fold(new RoaringBitmap())(x => DeletionVectors.deserialize(x._2))
+    // UPDATE classification (pre/post images): a delta row-level
+    // commit's sidecar marks which deleted/inserted positions were the
+    // two halves of updates; absent sidecar degrades to plain
+    // delete/insert, never wrong rows
+    val (ud, ui) = c.cdfRel.fold((Map.empty[String, Array[Byte]],
+      Map.empty[String, Array[Byte]]))(
+      DeletionVectors.loadCdfMaps(spark, path, _))
+    val dels = TxTable.parseEqDeletes(c.snap.props)
+    val prevDels = prevSnap.fold(Seq.empty[TxTable.EqDelete])(s =>
+      TxTable.parseEqDeletes(s.props))
+    // registry entries added or retired at v reach the files they address
+    val regDiff = dels.diff(prevDels) ++ prevDels.diff(dels)
+    val added = (cur.keySet -- prev.keySet).toSeq.sorted.map(cur)
+    val removed = (prev.keySet -- cur.keySet).toSeq.sorted.map(prev)
+    val both = cur.keySet.intersect(prev.keySet).toSeq.sorted.filter(rel =>
+      cur(rel).dv != prev(rel).dv ||
+        regDiff.exists(d => cur(rel).addV.forall(_ < d.version)))
+    val curDead = deadSets(spark, path, c.snap, added ++ both.map(cur))
+    val prevDead = prevSnap.fold(Map.empty[String, (String, Array[Byte])])(
+      deadSets(spark, path, _, removed ++ both.map(prev)))
+    // whole files: rows outside the side's dead set. Clean files ride
+    // together (one leg per commit+type), dirty ones one-per-file with an
+    // exclusion bitmap; a file the update sidecar names splits into its
+    // update halves (inclusion) and the rest (exclusion)
+    def whole(es: Seq[TxTable.FileEntry], tpe: String,
+              dead: Map[String, (String, Array[Byte])],
+              upd: Map[String, Array[Byte]], updTpe: String): Unit = {
+      val (split, plain) = es.partition(e => upd.contains(e.rel))
+      val (dirty, clean) = plain.partition(e => dead.contains(e.rel))
+      if (clean.nonEmpty) out += Leg(tpe, v, false, None, clean)
+      dirty.foreach(e => out += Leg(tpe, v, false, dead.get(e.rel), Seq(e)))
+      split.foreach { e =>
+        val d = bmOf(dead.get(e.rel))
+        val u = DeletionVectors.deserialize(upd(e.rel))
+        val halves = RoaringBitmap.andNot(u, d)
+        if (!halves.isEmpty)
+          out += Leg(updTpe, v, true, keyed(halves), Seq(e))
+        val gone = RoaringBitmap.or(d, u)
+        if (!e.rows.contains(gone.getLongCardinality))
+          out += Leg(tpe, v, false, keyed(gone), Seq(e))
+      }
+    }
+    whole(added, "insert", curDead, ui, "update_postimage")
+    whole(removed, "delete", prevDead, ud, "update_preimage")
+    // same rel on both sides: rows that died at v (updated ones are
+    // pre-images) and rows that revived at v
+    both.foreach { rel =>
+      val cb = bmOf(curDead.get(rel))
+      val pb = bmOf(prevDead.get(rel))
+      val died = RoaringBitmap.andNot(cb, pb)
+      val u = ud.get(rel).fold(new RoaringBitmap())(
+        DeletionVectors.deserialize)
+      Seq("update_preimage" -> RoaringBitmap.and(died, u),
+        "delete" -> RoaringBitmap.andNot(died, u),
+        "insert" -> RoaringBitmap.andNot(pb, cb)).foreach {
+        case (tpe, bm) =>
+          if (!bm.isEmpty) out += Leg(tpe, v, true, keyed(bm), Seq(cur(rel)))
+      }
+    }
+    out.result()
+  }
+
+  /** dead(snap, rel) for `es` of `snap`, as (cache key, bitmap) — only
+    * the files with a dead row. The equality-delete fold runs only when
+    * a registry entry addresses one of `es` (the file predates it). */
+  private def deadSets(spark: SparkSession, path: String,
+                       snap: TxTable.Snapshot, es: Seq[TxTable.FileEntry])
+      : Map[String, (String, Array[Byte])] = {
+    val dvs = DeletionVectors.loadBitmaps(spark, path,
+      es.filter(_.dv.isDefined))
+    val dels = TxTable.parseEqDeletes(snap.props)
+    val eq =
+      if (!es.exists(e => dels.exists(d => e.addV.forall(_ < d.version))))
+        Map.empty[String, (String, Array[Byte])]
+      else TxEqFold.bitmapsFor(spark, path, snap)
+    es.flatMap(e => TxEqFold.merge(dvs.get(e.rel), eq.get(e.rel))
+      .map(e.rel -> _)).toMap
+  }
+
   def readerFactory(dataSchema: StructType,
-                    tracked: Boolean = false): PartitionReaderFactory = {
+                    tracked: Boolean): PartitionReaderFactory = {
     // tracked feeds additionally read the hidden materialized lineage
     // columns (null-filled on files that never moved rows)
     val fileSchema =
@@ -421,7 +408,7 @@ private[sources] object TxChangeFeedPlanning {
   * reads, not the hot analytical path. */
 private[sources] final class TxChangeReaderFactory(
     raw: PartitionReaderFactory, dataTypes: Array[DataType],
-    tracked: Boolean = false)
+    tracked: Boolean)
     extends PartitionReaderFactory {
   import org.apache.spark.sql.connector.read.PartitionReader
 
@@ -433,7 +420,8 @@ private[sources] final class TxChangeReaderFactory(
     if (cp.bitmap.isDefined)
       require(cp.inner.files.length == 1,
         "a bitmap'd change partition must hold exactly one file")
-    val bm = cp.bitmap.map(DeletionVectors.cachedBitmap(cp.cacheKey, _))
+    val bm = cp.bitmap.map { case (key, bytes) =>
+      DeletionVectors.cachedBitmap(key, bytes) }
     val tpe = UTF8String.fromString(cp.changeType)
     val delegate = raw.createReader(cp.inner)
     val n = dataTypes.length

@@ -88,11 +88,10 @@ private[sources] final class TxLineageScan(path: String,
             "publish first); on a published head this means the enable " +
             "invariant is broken (run enable_row_tracking / compact " +
             "once)"))
-        val p = new Path(s"$path/${e.rel}")
-        val st = fs.getFileStatus(p)
         TxLineagePartition(
           FilePartition(i, Array(GraftParquetShim.partitionedFile(
-            p.toString, st.getLen, st.getModificationTime))),
+            new Path(s"$path/${e.rel}").toString,
+            TxFileSizes.of(fs, path, e), 0L))),
           b, v0,
           TxEqFold.merge(dvBms.get(e.rel), eqBms.get(e.rel)))
           : InputPartition

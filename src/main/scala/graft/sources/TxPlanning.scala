@@ -195,13 +195,16 @@ private[graft] object TxEqFold {
         val limit = (math.min(maxPos, Int.MaxValue - 2L) + 1).toInt
         val limited = markedDf.limit(limit).collect()
         if (limited.length >= limit) throw new IllegalStateException(
-          s"$path: the unfolded equality-delete registry addresses " +
-            s"more than $maxPos row positions — past the " +
-            s"${TxTable.EqMaxFoldPositionsConf} bound the plan-time " +
-            "position fold would exhaust driver memory. Run " +
-            "foldEqDeletes()/CALL fold_eq_deletes (or auto_maintain) " +
-            "first, or read through the Scala path (TxTable.read), " +
-            "which anti-joins without collecting")
+          s"$path@v${snap.version}: the unfolded equality-delete " +
+            s"registry addresses more than $maxPos row positions — past " +
+            s"the ${TxTable.EqMaxFoldPositionsConf} bound the plan-time " +
+            "position fold would exhaust planner memory. A read of the " +
+            "current version: run foldEqDeletes()/CALL fold_eq_deletes " +
+            "(or auto_maintain) first, or read through the Scala path " +
+            "(TxTable.read), which anti-joins without collecting. A " +
+            "change-feed or time-travel read of past versions: folding " +
+            s"the head does not reach them; raise " +
+            s"${TxTable.EqMaxFoldPositionsConf} for the read")
         val marked = limited.map(r => (r.getString(0), r.getLong(1)))
         val relByKey = affected.map(e =>
           DeletionVectors.relKey(e.rel) -> e.rel).toMap

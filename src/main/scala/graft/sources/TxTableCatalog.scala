@@ -319,7 +319,9 @@ class TxTableCatalog extends TableCatalog with FunctionCatalog
     raw match {
       case ch(p) if !TxTable.isTxTable(spark, raw) &&
           TxTable.isTxTable(spark, p) =>
-        return new TxChangesTable(p)
+        val head = TxTable.snapshot(spark, p)
+        return new TxChangesTable(p, head,
+          head.props.get(TxTable.RowTrackingProp).contains("true"))
       case _ => ()
     }
     // the reserved `#lineage` suffix serves ROW LINEAGE (data columns +

@@ -15,8 +15,8 @@ object GraftColumnBridge {
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
   /** DataFrame over a hand-built LogicalPlan (the classic Dataset.ofRows,
-    * hidden behind `private[sql]` in Spark 4) — used by specs that apply
-    * optimizer rules manually. */
+    * hidden behind `private[sql]` in Spark 4) — a DSv2 relation over a
+    * table no catalog names, or a spec applying optimizer rules manually. */
   def ofRows(spark: SparkSession,
              plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)

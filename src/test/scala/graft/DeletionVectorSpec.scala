@@ -242,7 +242,7 @@ class DeletionVectorSpec extends AnyFunSuite {
       s"dv_marked must run inside WholeStageCodegen:\n$plan")
     // and the answers are the DV-filtered rows
     assert(df.count() == 190L)
-    // the change-feed's marked-row read (readMarked) is UDF-free too
+    // the change feed's bitmap'd reads (the #changes scan) are UDF-free too
     val feed = TxTable.changesBetween(spark, table, 0L,
       TxTable.snapshot(spark, table).version)
     val feedUdfs = feed.queryExecution.analyzed.collect { case p =>

@@ -282,9 +282,19 @@ class EqBudgetSpec extends AnyFunSuite {
           Option(e.getCause).map(_.getMessage).getOrElse("")
         assert(msg.contains(TxTable.EqMaxFoldPositionsConf) &&
           msg.contains("fold_eq_deletes"), msg)
+        // the change feed's eq-delete positions ride the same bounded
+        // fold; for a past range the refusal points at the conf
+        val feedErr = intercept[Exception] {
+          TxTable.changesBetween(spark, t, 0L, 1L).count()
+        }
+        val feedMsg = Option(feedErr.getMessage).getOrElse("") +
+          Option(feedErr.getCause).map(_.getMessage).getOrElse("")
+        assert(feedMsg.contains(s"raise ${TxTable.EqMaxFoldPositionsConf}"),
+          feedMsg)
         // the Scala path anti-joins without collecting: still serves
         assert(TxTable.read(spark, t).count() == 30)
       }
+      assert(TxTable.changesBetween(spark, t, 0L, 1L).count() == 10)
       // under the bound the catalog read agrees exactly
       assert(spark.table(s"txeqf.`$t`").count() == 30)
     } finally spark.conf.unset("spark.sql.catalog.txeqf")

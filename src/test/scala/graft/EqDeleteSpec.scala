@@ -544,4 +544,40 @@ class EqDeleteSpec extends AnyFunSuite {
     assert(TxTable.snapshot(spark, t).version == v0 + 1)
     assert(TxTable.read(spark, t).count() == 9L)
   }
+
+  test("both change surfaces diff one dead-row set on whole-file legs: an upsert never re-kills an eq-deleted key, a restore never revives one") {
+    registered {
+      def events(t: String, from: Long, to: Long) = {
+        def of(df: org.apache.spark.sql.DataFrame) = df
+          .select($"k", $"_change_type", $"_commit_version")
+          .as[(Long, String, Long)].collect().toSeq.sorted
+        val feed = of(spark.read.option("startingVersion", from + 1)
+          .option("endingVersion", to).table(s"txeq.`$t#changes`"))
+        val batch = of(TxTable.changesBetween(spark, t, from, to))
+        assert(feed == batch, s"surfaces disagree:\n$feed\n$batch")
+        feed
+      }
+      // (a) the upsert removes key 3's file: its then-live rows die at
+      // v2, and key 3 was already dead since v1
+      val a = fresh(10)
+      TxTable.deleteWhereEq(spark, a, Seq(3L).toDF("k"))            // v1
+      TxTable.upsert(spark, a, Seq(0L, 2L, 4L, 6L, 8L)
+        .map(k => (k, k * 100)).toDF("k", "v"), "k", "v", 4)        // v2
+      val ea = events(a, 0L, 2L)
+      assert(ea.filter(e => e._1 == 3L && e._2 == "delete") ==
+        Seq((3L, "delete", 1L)), ea.mkString(", "))
+      // (b) the restore re-adds the v0 files together with v1's
+      // registry: key 3 stays dead, as the table read at v3 says
+      val b = fresh(10)
+      TxTable.deleteWhereEq(spark, b, Seq(3L).toDF("k"))            // v1
+      TxTable.foldEqDeletes(spark, b)                               // v2
+      TxTable.restore(spark, b, 1L)                                 // v3
+      val live = TxTable.read(spark, b, Some(3L)).select($"k")
+        .as[Long].collect().toSet
+      assert(live == (0L until 10L).toSet - 3L)
+      val eb = events(b, 2L, 3L)
+      assert(eb.filter(_._2 == "insert").map(_._1).toSet == live,
+        eb.mkString(", "))
+    }
+  }
 }

@@ -214,6 +214,27 @@ class RowTrackingSpec extends AnyFunSuite {
     }
   }
 
+  test("changesBetween keeps toVersion's logical names and fromVersion's tracking flag; the #changes feed shows the head's") {
+    registered {
+      val t = fresh(5)
+      TxTable.appendOnce(spark, t, Seq((50L, 500L)).toDF("k", "v"),
+        "k", 4, appId = "rt-contract", batchId = 1L)                 // v1
+      TxTable.renameColumn(spark, t, "v", "w")                       // v2
+      TxTable.enableRowTracking(spark, t)                            // v3
+      val batch = TxTable.changesBetween(spark, t, 0L, 1L)
+      assert(batch.columns.toSeq ==
+        Seq("k", "v", "_change_type", "_commit_version"))
+      assert(batch.select($"k", $"v").as[(Long, Long)].collect().toSeq ==
+        Seq((50L, 500L)))
+      val feed = spark.read.option("startingVersion", 1)
+        .option("endingVersion", 1).table(s"txrt.`$t#changes`")
+      assert(feed.columns.toSeq == Seq("k", "w", "_row_id",
+        "_row_commit_version", "_change_type", "_commit_version"))
+      assert(feed.select($"k", $"w").as[(Long, Long)].collect().toSeq ==
+        Seq((50L, 500L)))
+    }
+  }
+
   test("#lineage (SQL twin): row-identical to readLineage across DV + eq-delete + rewrite history; refuses untracked tables") {
     registered {
       val t = fresh(30)
