@@ -1,4 +1,5 @@
 package graft
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import scala.collection.mutable
@@ -7,7 +8,9 @@ import scala.collection.mutable
   * before touching anything): runs the named query once untimed (codegen
   * warm), then N timed passes, printing every Spark job's description and
   * wall time plus the gaps (driver-side work: planning, log walks, commit
-  * protocol) — the local-mode stand-in for the Spark UI's job table.
+  * protocol) — the local-mode stand-in for the Spark UI's job table —
+  * and how many classes each timed pass compiled (after the warm pass,
+  * compiles mean per-run generated code or an outgrown codegen cache).
   *
   * Usage: runMain graft.Profile <sfDir> <query> [nRuns]
   */
@@ -113,6 +116,7 @@ object Profile {
       jobs.synchronized { jobs.clear(); byId.clear() }
       stages.synchronized { stages.clear() }
       frameCounts.clear()
+      val (compiles0, compileMs0) = codegenCompiles()
       sampling = true
       val t0 = System.nanoTime()
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
@@ -143,6 +147,14 @@ object Profile {
       val sc = graft.ops.TxTable.snapshotCalls.getAndSet(0L)
       val sn = graft.ops.TxTable.snapshotNanos.getAndSet(0L) / 1e9
       if (sc > 0) println(f"[profile] snapshot() calls $sc%d, time $sn%.3f s")
+      val (compiles1, compileMs1) = codegenCompiles()
+      val nc = compiles1 - compiles0
+      val meanMs =
+        if (nc == 0) "-"
+        else if (compileMs1.isNaN)
+          s"unknown (the histogram samples past $CompileSamplesKept)"
+        else f"${(compileMs1 - compileMs0) / nc}%.1f ms"
+      println(s"[profile] codegen compiles $nc, mean $meanMs")
       if (sampleStacks) {
         import scala.jdk.CollectionConverters._
         val top = frameCounts.asScala.toSeq.sortBy(-_._2.intValue).take(20)
@@ -152,5 +164,19 @@ object Profile {
       }
     }
     spark.stop()
+  }
+
+  /** Samples the default (exponentially decaying) reservoir of a
+    * Dropwizard histogram keeps before it starts to sample. */
+  private val CompileSamplesKept = 1028
+
+  /** Janino compiles of generated code in this JVM so far and their summed
+    * ms, from Spark's `CodegenMetrics` histogram: the sum is exact while
+    * the histogram holds every sample, NaN after. */
+  private def codegenCompiles(): (Long, Double) = {
+    val h = CodegenMetrics.METRIC_COMPILATION_TIME
+    val n = h.getCount
+    (n, if (n <= CompileSamplesKept) h.getSnapshot.getValues.sum.toDouble
+        else Double.NaN)
   }
 }

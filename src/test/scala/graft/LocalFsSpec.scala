@@ -211,6 +211,11 @@ class LocalFsSpec extends AnyFunSuite {
     }
     try {
       round(1) // first touch of the table and the checkpoint
+      // Spark's ArtifactManager Cleaner runs `rm -rf` on the artifact dir
+      // of every session the GC collects: let earlier suites' dropped
+      // sessions go before the window, not during it
+      System.gc()
+      Thread.sleep(1000)
       spawnFree(check = true)(round(2))
     } finally q.stop()
     assert(ops.TxTable.read(spark, table).count() == 9)
